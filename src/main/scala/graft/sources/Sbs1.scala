@@ -3,6 +3,8 @@ package graft.sources
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.sql.GraftSqlBridge.{toColumn, toExpression}
+import graft.functions.expressions.LiteralByReference
 
 /** SBS-1 / BaseStation message parsing — the reference's core data model
   * (reference-reconstruction/dump1090-stream-parser.py: DDL P:55-81, split
@@ -76,7 +78,6 @@ object Sbs1 {
     * (malformed → NULL), matching the reference's drop-don't-crash posture.
     */
   def sbs1Columns(raw: Column): Seq[Column] = {
-    import org.apache.spark.sql.GraftSqlBridge.{toColumn, toExpression}
     import org.apache.spark.sql.catalyst.expressions.{Cast, EvalMode}
     def tryCast(c: Column, t: DataType): Column =
       toColumn(Cast(toExpression(c), t, None, EvalMode.TRY))
@@ -127,12 +128,20 @@ object Sbs1 {
   /** Batch/stream parse of a lines DataFrame (column `value`, as produced
     * by text/socket sources). Keeps only valid lines; appends parsed_time
     * (processing time) like the reference's 23rd column.
+    *
+    * In a stream, parsed_time is the micro-batch timestamp: one value per
+    * batch, the same again when the batch replays. The engine turns it
+    * into a literal per batch; [[LiteralByReference]] keeps that literal
+    * out of the generated source, so the codegen'd parse stage compiles
+    * once per query instead of once per batch.
     */
   def parse(lines: DataFrame, withParsedTime: Boolean = true): DataFrame = {
     val base = lines
       .filter(isValid(col("value")))
       .select(sbs1Columns(col("value")): _*)
-    if (withParsedTime) base.withColumn("parsed_time", current_timestamp())
+    if (withParsedTime)
+      base.withColumn("parsed_time",
+        toColumn(LiteralByReference(toExpression(current_timestamp()))))
     else base
   }
 

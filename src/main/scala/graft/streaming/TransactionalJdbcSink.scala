@@ -2,9 +2,8 @@ package graft.streaming
 
 import java.sql.{Connection, DriverManager, SQLException, Types}
 
-import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, hash, lit, pmod}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
@@ -14,12 +13,12 @@ import org.apache.spark.sql.types._
   * product is a queryable embedded SQL database (Derby; `:memory:` maps to
   * Derby's in-memory subprotocol like upstream's `:memory:`, P:28).
   *
-  * Exactly-once: each (app, epoch, partition) claims a row in a
-  * `<table>_commits` log INSIDE the same transaction as its data rows. A
-  * replayed epoch (task retry, or query restart from checkpoint) finds its
-  * claim taken and skips — the idempotent-sink half of the source's
-  * replayable-offset contract. Two preconditions make the per-partition
-  * claim sound, and both are enforced here rather than assumed:
+  * Exactly-once: each (app, epoch) claims a row in a `<table>_commits`
+  * log INSIDE the same transaction as its data rows. A replayed epoch
+  * (task retry, or query restart from checkpoint) finds its claim taken
+  * and skips — the idempotent-sink half of the source's replayable-offset
+  * contract. Two preconditions make the claim sound, and both are enforced
+  * here rather than assumed:
   *
   *   - Claims are scoped by an application id (the Delta `txnAppId`
   *     pattern). `sink` derives it from the checkpoint location, so the
@@ -28,36 +27,47 @@ import org.apache.spark.sql.types._
   *     its batch ids also restart at 0, and without the scope they would
   *     collide with stale claims and the fresh data would be silently
   *     dropped as "replays".
-  *   - A replayed batch must re-plan into the same row→partition mapping.
-  *     File sources re-split by parallelism/config, so `writeBatch`
-  *     repartitions every batch by the hash of the full row over a FIXED
-  *     partition count before writing (environment-independent, so a
-  *     restart on a different core count claims identically).
+  *   - A claim must name the same rows on every replay. It covers the
+  *     WHOLE batch, written by one writer, so how the source split the
+  *     batch (file sources re-split by parallelism/config) cannot change
+  *     what a claim stands for.
   *
-  * Writes are distributed (one transaction per partition, executor-side);
-  * nothing funnels through the driver. A failed partition rolls back its
-  * open transaction before the connection closes — Derby otherwise fails
-  * the close (SQLState 25001), masking the real error and keeping the
-  * claim-row lock alive until lock timeout.
+  * One writer per micro-batch: an embedded Derby table takes inserts one
+  * at a time, so parallel writers only add transactions and a shuffle.
+  * The batch is coalesced to a single executor-side task (no shuffle,
+  * nothing funnels through the driver) holding one transaction: the claim
+  * plus every row. A failed batch rolls back its open transaction before
+  * the connection closes — Derby otherwise fails the close (SQLState
+  * 25001), masking the real error and keeping the claim-row lock alive
+  * until lock timeout.
   *
   * `batchSize` plays upstream's `--batch-size` amortization role at the
   * JDBC layer: rows are flushed with executeBatch every `batchSize` rows.
-  * The DURABILITY unit here is the partition transaction (that is what
+  * The DURABILITY unit here is the micro-batch transaction (that is what
   * makes replays exactly-once), not every `batchSize` rows as in the
-  * single-writer reference — documented divergence.
+  * reference — documented divergence.
   */
 object TransactionalJdbcSink {
 
-  /** Fixed write-side partition count: part of the claim contract (a claim
-    * names one deterministic slice of the batch), so it must not derive
-    * from cluster parallelism. Plenty for an embedded/JDBC sink whose
-    * bottleneck is the database, not Spark.
+  /** Write-side partition count: one writer, one transaction and one
+    * claim per micro-batch.
     */
-  val WritePartitions = 8
+  val WritePartitions = 1
+
+  /** partition_id of the whole-batch claim. Older builds claimed slices
+    * 0 until [[LegacySlices]] of each batch; this id is one they never used,
+    * so a claim from either layout can never be mistaken for the other.
+    */
+  private val BatchClaim = -1
+
+  /** Slice count of the older layout: `pmod(hash(all columns), 8)` per row,
+    * the slice function of the hash repartition that build wrote through.
+    */
+  private val LegacySlices = 8
 
   /** Derby-flavored DDL type for a Spark field. Strings get Derby's max
     * VARCHAR width: a narrower column would make any longer row a POISON
-    * PILL — the INSERT fails (22001), the partition transaction rolls
+    * PILL — the INSERT fails (22001), the batch transaction rolls
     * back, the retry hits the same row, and the replayed batch wedges the
     * stream permanently.
     */
@@ -117,13 +127,6 @@ object TransactionalJdbcSink {
       .digest(canonical.getBytes("UTF-8"))
       .map("%02x".format(_)).mkString
   }
-
-  /** The deterministic write layout: hash of the full row over a fixed
-    * partition count, so the same logical batch maps to the same
-    * (partition → rows) slices no matter how the source split it.
-    */
-  def deterministic(batch: DataFrame): DataFrame =
-    batch.repartition(WritePartitions, batch.schema.fieldNames.map(col): _*)
 
   /** CREATE TABLE IF NOT EXISTS analog (R8; Derby has no IF NOT EXISTS —
     * an existing table surfaces as SQLState X0Y32 and is fine). A
@@ -196,13 +199,41 @@ object TransactionalJdbcSink {
     }
   }
 
-  /** Write one micro-batch exactly-once: per partition (of the
-    * deterministic layout), one transaction containing the
-    * (appId, batchId, partitionId) commit-log claim plus the rows.
+  /** The partition_ids claimed so far for (appId, batchId). */
+  private def claimsOf(url: String, table: String, appId: String,
+                       batchId: Long): Set[Int] = {
+    val conn = connect(url)
+    try {
+      val st = conn.prepareStatement(s"SELECT partition_id FROM ${table}_commits " +
+        "WHERE app_id = ? AND batch_id = ?")
+      try {
+        st.setString(1, appId); st.setLong(2, batchId)
+        val rs = st.executeQuery()
+        try Iterator.continually(rs).takeWhile(_.next()).map(_.getInt(1)).toSet
+        finally rs.close()
+      } finally st.close()
+    } finally conn.close()
+  }
+
+  /** Write one micro-batch exactly-once: one transaction containing the
+    * (appId, batchId) commit-log claim plus all the rows.
+    *
+    * A batch already claimed returns without starting a Spark job. A
+    * database resumed from an older build may hold some of that build's
+    * per-slice claims for the in-flight batch (its slice transactions
+    * committed independently); the rows of the claimed slices already
+    * landed, so they are dropped and only the rest is written.
     */
   def writeBatch(batch: DataFrame, batchId: Long, url: String,
                  table: String, batchSize: Int,
                  appId: String = "default"): Unit = {
+    val claimed = claimsOf(url, table, appId, batchId)
+    if (claimed.contains(BatchClaim)) return
+    // any claims left are the older layout's slice ids
+    val pending =
+      if (claimed.isEmpty) batch
+      else batch.filter(!pmod(hash(batch.schema.fieldNames.map(col): _*),
+                              lit(LegacySlices)).isin(claimed.toSeq: _*))
     val schema = batch.schema
     val insert = s"INSERT INTO $table (${schema.fieldNames.mkString(", ")}) " +
       s"VALUES (${schema.fieldNames.map(_ => "?").mkString(", ")})"
@@ -213,22 +244,21 @@ object TransactionalJdbcSink {
       "(app_id, batch_id, partition_id) VALUES (?, ?, ?)"
     val types = schema.fields.map(f => (f.dataType, sqlType(f.dataType)))
     val flushEvery = math.max(batchSize, 1)
-    deterministic(batch).foreachPartition { (rows: Iterator[Row]) =>
-      val pid = TaskContext.getPartitionId()
+    pending.coalesce(WritePartitions).foreachPartition { (rows: Iterator[Row]) =>
       val conn = connect(url)
       try {
         conn.setAutoCommit(false)
-        val claimed =
+        val claimedNow =
           try {
             val st = conn.prepareStatement(claim)
-            st.setString(1, appId); st.setLong(2, batchId); st.setInt(3, pid)
+            st.setString(1, appId); st.setLong(2, batchId); st.setInt(3, BatchClaim)
             st.executeUpdate(); st.close(); true
           } catch {
-            // duplicate key — this partition of this epoch already
-            // committed in a previous attempt; replay must be a no-op
+            // duplicate key — this epoch already committed in a previous
+            // attempt (a task retry after the commit); replay is a no-op
             case e: SQLException if e.getSQLState == "23505" => false
           }
-        if (claimed) {
+        if (claimedNow) {
           val ps = conn.prepareStatement(insert)
           var n = 0
           rows.foreach { r =>
@@ -266,16 +296,6 @@ object TransactionalJdbcSink {
     }
   }
 
-  /** Drop claims no replay can ever match again: structured streaming
-    * replays at most the in-flight epoch, so once `currentBatch` commits,
-    * claims below `currentBatch - 1` (one epoch of slack) are dead weight.
-    * Without pruning the commits table and its PK index grow by
-    * `WritePartitions` rows per micro-batch FOREVER — ~690k rows/day at a
-    * 1 s trigger. Only the streaming path calls this (its checkpoint
-    * guarantees monotonic batch ids); the [[writeBatch]] primitive stays
-    * pruning-free so callers replaying arbitrary old batches keep their
-    * idempotence.
-    */
   /** A from-scratch run (batch 0) must not find claims a PREVIOUS life
     * of the same checkpoint path left behind: deleting the checkpoint in
     * place while keeping the database hands the new run the old run's
@@ -310,6 +330,15 @@ object TransactionalJdbcSink {
     } finally conn.close()
   }
 
+  /** Drop claims no replay can ever match again: structured streaming
+    * replays at most the in-flight epoch, so once `currentBatch` commits,
+    * claims below `currentBatch - 1` (one epoch of slack) are dead weight.
+    * Without pruning the commits table and its PK index grow by one row
+    * per micro-batch FOREVER — ~86k rows/day at a 1 s trigger. Only the
+    * streaming path calls this (its checkpoint guarantees monotonic batch
+    * ids); the [[writeBatch]] primitive stays pruning-free so callers
+    * replaying arbitrary old batches keep their idempotence.
+    */
   def pruneClaims(url: String, table: String, appId: String,
                   currentBatch: Long): Unit = {
     val conn = connect(url)

@@ -1,5 +1,7 @@
 package graft.tools
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.streaming.{StreamingOps, TransactionalJdbcSink}
@@ -19,7 +21,7 @@ import graft.streaming.{StreamingOps, TransactionalJdbcSink}
   * `squitters` table with upstream's 22 columns + parsed_time (P:55-81).
   * `--batch-size` is the JDBC statement-batch size (upstream's commit
   * amortization knob, P:32-35); durability/exactly-once comes from the
-  * per-partition transaction + commit log (TransactionalJdbcSink).
+  * one transaction per micro-batch + commit log (TransactionalJdbcSink).
   * Ctrl-C stops the query gracefully and reports totals (R11/R12,
   * P:172-178).
   */
@@ -148,7 +150,11 @@ object Dump1090StreamParser {
         query.stop()
         println(s"${writtenRows(jdbcUrl(c.database))} rows written to " +
           s"${c.database} (${metrics.totalRows} ingested this run)")
-      } catch { case _: Throwable => () }
+      } catch {
+        case NonFatal(e) =>
+          System.err.println(s"dump1090-stream-parser: shutdown report failed: $e")
+          e.printStackTrace()
+      }
     }))
     query.awaitTermination()
   }

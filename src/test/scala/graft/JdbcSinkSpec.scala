@@ -185,9 +185,9 @@ class JdbcSinkSpec extends SparkSpec {
       st.execute("CREATE TABLE t_up_commits (" +
         "batch_id BIGINT NOT NULL, partition_id INTEGER NOT NULL, " +
         "PRIMARY KEY (batch_id, partition_id))")
-      // the deterministic layout puts these 2 rows in fixed partitions;
-      // claim ALL partitions of batch 5 the way the old build did
-      (0 until TransactionalJdbcSink.WritePartitions)
+      // the old build wrote each batch as 8 hash slices, one claim each;
+      // claim ALL slices of batch 5 the way it did
+      (0 until 8)
         .foreach(p => st.execute(s"INSERT INTO t_up_commits VALUES (5, $p)"))
       st.execute("INSERT INTO t_up VALUES (1, 'a')")
       st.execute("INSERT INTO t_up VALUES (2, 'b')")
@@ -253,14 +253,11 @@ class JdbcSinkSpec extends SparkSpec {
   test("a failed partition rolls back: real error surfaces and the claim is retryable") {
     import spark.implicits._
     val url = Dump1090StreamParser.jdbcUrl(":memory:")
-    // one poison row (overflows even the wide VARCHAR(32672)) among good rows
+    // one poison row (overflows even the wide VARCHAR(32672)) among good
+    // rows, spread over several source splits
     val batch = ((0 until 20).map(i => (i, s"row$i")) :+ (99, "x" * 40000))
-      .toDF("id", "s")
+      .toDF("id", "s").repartition(4)
     TransactionalJdbcSink.ensureTables(url, "t_rb", batch.schema)
-    val badPid = TransactionalJdbcSink.deterministic(batch).rdd
-      .mapPartitionsWithIndex((pid, it) =>
-        if (it.exists(_.getInt(0) == 99)) Iterator(pid) else Iterator.empty)
-      .collect().head
     def states(t: Throwable): Seq[String] =
       if (t == null) Nil
       else (t match {
@@ -268,14 +265,6 @@ class JdbcSinkSpec extends SparkSpec {
         case _ => Nil
       }) ++ states(t.getCause) ++
         t.getSuppressed.toSeq.flatMap(states)
-    def claims(): Set[Int] = {
-      val c = TransactionalJdbcSink.connect(url)
-      try {
-        val rs = c.createStatement()
-          .executeQuery("SELECT partition_id FROM t_rb_commits")
-        Iterator.continually(rs).takeWhile(_.next()).map(_.getInt(1)).toSet
-      } finally c.close()
-    }
     def replay(): Throwable = intercept[Exception] {
       TransactionalJdbcSink.writeBatch(batch, 0L, url, "t_rb", 10, appId = "rb")
     }
@@ -283,22 +272,17 @@ class JdbcSinkSpec extends SparkSpec {
     val e1 = replay()
     assert(states(e1).contains("22001"), s"expected 22001 in ${states(e1)}")
     assert(!states(e1).contains("25001"), "rollback must precede close")
-    // the rollback released the poison partition's claim...
-    assert(!claims().contains(badPid))
-    // ...so a replay re-attempts exactly that slice: it fails on the same
-    // poison row immediately (22001 again — not a lock timeout from a
-    // wedged claim), and already-committed rows are not duplicated
+    // the whole batch is one transaction: the rollback released its claim
+    // and took every good row with it...
+    assert(count(url, "t_rb_commits") == 0L)
+    assert(count(url, "t_rb") == 0L)
+    // ...so a replay re-attempts the batch: it fails on the same poison
+    // row immediately (22001 again — not a lock timeout from a wedged
+    // claim) and still leaves nothing behind
     val e2 = replay()
     assert(states(e2).contains("22001"), s"expected 22001 in ${states(e2)}")
-    val dupes = {
-      val c = TransactionalJdbcSink.connect(url)
-      try {
-        val rs = c.createStatement().executeQuery(
-          "SELECT count(*) FROM (SELECT id FROM t_rb GROUP BY id HAVING count(*) > 1) d")
-        rs.next(); rs.getLong(1)
-      } finally c.close()
-    }
-    assert(dupes == 0L)
+    assert(count(url, "t_rb_commits") == 0L)
+    assert(count(url, "t_rb") == 0L)
   }
 
   test("claims survive source re-splitting: row→partition mapping is plan-independent") {
@@ -307,32 +291,105 @@ class JdbcSinkSpec extends SparkSpec {
     val rows = (0 until 100).map(i => (i, s"row$i"))
     val narrow = spark.createDataset(rows).toDF("id", "s").repartition(3)
     val wide = spark.createDataset(rows).toDF("id", "s").repartition(13)
-    def layout(df: org.apache.spark.sql.DataFrame): Set[(Int, Int)] =
-      TransactionalJdbcSink.deterministic(df).rdd
-        .mapPartitionsWithIndex((pid, it) => it.map(r => (pid, r.getInt(0))))
-        .collect().toSet
-    val lNarrow = layout(narrow)
-    assert(lNarrow == layout(wide), "write layout must not depend on source splits")
-
-    // partial replay across a re-split: claim one slice as already
-    // committed, re-deliver the batch with different parallelism — exactly
-    // the unclaimed slices' rows must land (no dupes, no drops)
     TransactionalJdbcSink.ensureTables(url, "t_det", narrow.schema)
-    val donePid = lNarrow.head._1
-    val conn = TransactionalJdbcSink.connect(url)
-    try conn.createStatement().executeUpdate(
-      s"INSERT INTO t_det_commits VALUES ('det', 4, $donePid)")
-    finally conn.close()
+    // the same batch delivered with 3 source splits, then replayed with 13:
+    // the claim covers the whole batch, so the replay is a no-op
+    TransactionalJdbcSink.writeBatch(narrow, 4L, url, "t_det", 10, appId = "det")
     TransactionalJdbcSink.writeBatch(wide, 4L, url, "t_det", 10, appId = "det")
-    val expect = lNarrow.collect { case (pid, id) if pid != donePid => id }
     val got = {
       val c = TransactionalJdbcSink.connect(url)
       try {
         val rs = c.createStatement().executeQuery("SELECT id FROM t_det")
-        Iterator.continually(rs).takeWhile(_.next()).map(_.getInt(1)).toSet
+        Iterator.continually(rs).takeWhile(_.next()).map(_.getInt(1)).toList
       } finally c.close()
     }
-    assert(got == expect.toSet)
+    assert(got.sorted == (0 until 100).toList)
+  }
+
+  test("an upgrade mid-batch writes exactly the rows the old 8-slice claims did not cover") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.col
+    val url = Dump1090StreamParser.jdbcUrl(":memory:")
+    val batch = spark.createDataset((0 until 200).map(i => (i, s"row$i", i * 0.5)))
+      .toDF("id", "s", "x").repartition(5)
+    // the older build's layout: hash repartition over all columns into 8
+    // slices, one transaction and one claim per slice
+    val slices = batch.repartition(8, batch.columns.map(col): _*).rdd
+      .mapPartitionsWithIndex((pid, it) => it.map(r => r.getInt(0) -> pid))
+      .collect().toMap
+    def ids(table: String): List[Int] = {
+      val c = TransactionalJdbcSink.connect(url)
+      try {
+        val rs = c.createStatement().executeQuery(s"SELECT id FROM $table")
+        Iterator.continually(rs).takeWhile(_.next()).map(_.getInt(1)).toList.sorted
+      } finally c.close()
+    }
+    def plant(table: String, claimed: Set[Int]): Unit = {
+      TransactionalJdbcSink.ensureTables(url, table, batch.schema)
+      val c = TransactionalJdbcSink.connect(url)
+      try claimed.foreach(p => c.createStatement().executeUpdate(
+        s"INSERT INTO ${table}_commits VALUES ('up', 3, $p)"))
+      finally c.close()
+    }
+    // the old process died after slices 2 and 5 of batch 3 committed
+    plant("t_mid", Set(2, 5))
+    TransactionalJdbcSink.writeBatch(batch, 3L, url, "t_mid", 10, appId = "up")
+    val expect = slices.collect { case (id, p) if p != 2 && p != 5 => id }.toList.sorted
+    assert(expect.nonEmpty && expect.size < 200, "fixture must split across slices")
+    assert(ids("t_mid") == expect)
+    // the whole-batch claim now stands: a further replay is a no-op
+    TransactionalJdbcSink.writeBatch(batch, 3L, url, "t_mid", 10, appId = "up")
+    assert(ids("t_mid") == expect)
+    // every slice committed before the upgrade: nothing is left to write
+    plant("t_all", (0 until 8).toSet)
+    TransactionalJdbcSink.writeBatch(batch, 3L, url, "t_all", 10, appId = "up")
+    assert(ids("t_all").isEmpty)
+  }
+
+  test("the parse compiles once: micro-batches reuse the generated code") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val srcDir = java.nio.file.Files.createTempDirectory("cgsrc")
+    val ckpt = java.nio.file.Files.createTempDirectory("cgck").toString
+    val url = Dump1090StreamParser.jdbcUrl(":memory:")
+    val q = TransactionalJdbcSink.sink(
+      StreamingOps.ingestFiles(spark, srcDir.toString), url, "t_cg",
+      batchSize = 7, checkpoint = ckpt,
+      trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime("100 milliseconds"))
+    def compiles(): Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    try {
+      // one file per micro-batch: the next file is written only once the
+      // previous one's rows have landed
+      val after = (0 until 4).map { k =>
+        java.nio.file.Files.write(srcDir.resolve(s"f$k.txt"),
+          (k * 10 until k * 10 + 10).map(mk).mkString("", "\n", "\n").getBytes)
+        val deadline = System.currentTimeMillis() + 60000
+        def sunk(): Long = try count(url, "t_cg") catch { case _: SQLException => 0L }
+        while (sunk() < (k + 1) * 10 && System.currentTimeMillis() < deadline)
+          Thread.sleep(50)
+        q.processAllAvailable()
+        compiles()
+      }
+      assert(after.tail.forall(_ == after.head),
+        s"compilations after each batch: $after")
+    } finally q.stop()
+    val c = TransactionalJdbcSink.connect(url)
+    val perBatch = try {
+      val rs = c.createStatement().executeQuery(
+        "SELECT aircraft_id / 10, count(*), count(parsed_time), " +
+        "count(DISTINCT parsed_time), min(parsed_time) FROM t_cg " +
+        "GROUP BY aircraft_id / 10")
+      Iterator.continually(rs).takeWhile(_.next())
+        .map(r => (r.getInt(1), r.getLong(2), r.getLong(3), r.getLong(4),
+                   r.getTimestamp(5)))
+        .toList
+    } finally c.close()
+    assert(perBatch.map(_._1).sorted == List(0, 1, 2, 3), perBatch.toString)
+    // each batch's rows share one non-null parsed_time...
+    perBatch.foreach { case (_, n, nonNull, distinct, _) =>
+      assert(n == 10 && nonNull == 10 && distinct == 1, perBatch.toString)
+    }
+    // ...and the batches carry different ones
+    assert(perBatch.map(_._5).distinct.size == 4, perBatch.toString)
   }
 
   test("cross-restart exactly-once: a crashed epoch replays from the spill " +
