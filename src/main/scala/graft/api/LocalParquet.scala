@@ -1,5 +1,7 @@
 package graft.api
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.types._
 
@@ -28,8 +30,9 @@ import org.apache.spark.sql.types._
 object LocalParquet {
 
   /** All rows of the (small) parquet file/directory at `path`, read on
-    * the driver. None on ANY failure — absent path, unsupported type,
-    * I/O error — so call sites keep their Spark-read fallback semantics.
+    * the driver. None on any non-fatal failure — absent path, unsupported
+    * type, I/O error, a corrupt file — so call sites keep their Spark-read
+    * fallback semantics. Fatal errors (out of memory, linkage) propagate.
     */
   def readRows(s: SparkSession, path: String): Option[(StructType, Seq[Row])] =
     try {
@@ -83,7 +86,7 @@ object LocalParquet {
         } finally reader.close()
       }
       Some((schema, out.result()))
-    } catch { case _: Throwable => None }
+    } catch { case NonFatal(_) => None }
 
   private def allNullable(st: StructType): StructType =
     StructType(st.fields.map(f =>

@@ -1,6 +1,10 @@
 package graft.streaming
 
-import java.sql.{Connection, DriverManager, SQLException, Types}
+import java.sql.{Connection, Date, DriverManager, ResultSet, SQLException, Timestamp}
+import java.util.concurrent.{ArrayBlockingQueue, ConcurrentHashMap, ExecutionException,
+  Executors, Future, TimeUnit}
+
+import org.apache.derby.vti.VTITemplate
 
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions.{col, hash, lit, pmod}
@@ -35,17 +39,27 @@ import org.apache.spark.sql.types._
   * One writer per micro-batch: an embedded Derby table takes inserts one
   * at a time, so parallel writers only add transactions and a shuffle.
   * The batch is coalesced to a single executor-side task (no shuffle,
-  * nothing funnels through the driver) holding one transaction: the claim
-  * plus every row. A failed batch rolls back its open transaction before
-  * the connection closes — Derby otherwise fails the close (SQLState
-  * 25001), masking the real error and keeping the claim-row lock alive
-  * until lock timeout.
+  * nothing funnels through the driver), and its rows reach Derby through
+  * ONE set-based statement, `INSERT INTO t SELECT … FROM TABLE(t_rows(?))`,
+  * run in one transaction with the claim. `<table>_rows` is a Derby table
+  * function ([[ensureTables]] creates it) reading the rows the task hands
+  * over. The task thread keeps the Spark iterator (parse, deserialize);
+  * a long-lived pooled writer thread keeps the connection; a bounded
+  * hand-off between them lets the two run at once. Either side failing
+  * stops the other within a poll interval: a failed writer stops the task
+  * pulling rows and its error is rethrown; a failed task makes the table
+  * function fail, so the INSERT and the claim roll back, and the task's
+  * own error is rethrown. A failed batch rolls back its open transaction
+  * before the connection closes — Derby otherwise fails the close
+  * (SQLState 25001), masking the real error and keeping the claim-row lock
+  * alive until lock timeout.
   *
-  * `batchSize` plays upstream's `--batch-size` amortization role at the
-  * JDBC layer: rows are flushed with executeBatch every `batchSize` rows.
-  * The DURABILITY unit here is the micro-batch transaction (that is what
-  * makes replays exactly-once), not every `batchSize` rows as in the
-  * reference — documented divergence.
+  * `batchSize` is upstream's `--batch-size` commit-amortization knob. It
+  * is accepted for CLI parity and no longer changes how rows are written:
+  * every micro-batch is one statement in one transaction. The DURABILITY
+  * unit here is that micro-batch transaction (it is what makes replays
+  * exactly-once), not every `batchSize` rows as in the reference —
+  * documented divergence.
   */
 object TransactionalJdbcSink {
 
@@ -65,6 +79,9 @@ object TransactionalJdbcSink {
     */
   private val LegacySlices = 8
 
+  /** Derby's widest VARCHAR, the width of every string column here. */
+  private val MaxVarchar = 32672
+
   /** Derby-flavored DDL type for a Spark field. Strings get Derby's max
     * VARCHAR width: a narrower column would make any longer row a POISON
     * PILL — the INSERT fails (22001), the batch transaction rolls
@@ -72,7 +89,7 @@ object TransactionalJdbcSink {
     * stream permanently.
     */
   private def ddlType(dt: DataType): String = dt match {
-    case StringType    => "VARCHAR(32672)"
+    case StringType    => s"VARCHAR($MaxVarchar)"
     case IntegerType   => "INTEGER"
     case LongType      => "BIGINT"
     case DoubleType    => "DOUBLE"
@@ -82,18 +99,6 @@ object TransactionalJdbcSink {
     case DateType      => "DATE"
     case other => throw new IllegalArgumentException(
       s"no JDBC mapping for ${other.simpleString}")
-  }
-
-  private def sqlType(dt: DataType): Int = dt match {
-    case StringType    => Types.VARCHAR
-    case IntegerType   => Types.INTEGER
-    case LongType      => Types.BIGINT
-    case DoubleType    => Types.DOUBLE
-    case FloatType     => Types.REAL
-    case BooleanType   => Types.BOOLEAN
-    case TimestampType => Types.TIMESTAMP
-    case DateType      => Types.DATE
-    case _             => Types.OTHER
   }
 
   def connect(url: String): Connection = {
@@ -129,7 +134,10 @@ object TransactionalJdbcSink {
   }
 
   /** CREATE TABLE IF NOT EXISTS analog (R8; Derby has no IF NOT EXISTS —
-    * an existing table surfaces as SQLState X0Y32 and is fine). A
+    * an existing table surfaces as SQLState X0Y32, an existing function as
+    * X0Y68, and both are fine). Besides the table and its commits log this
+    * creates the `<table>_rows` table function [[writeBatch]] inserts from,
+    * so a database made by an older build gains it when it resumes. A
     * pre-app_id commits table (two columns, PK (batch_id, partition_id))
     * left behind by an older build in a persistent database is migrated in
     * place: the three-value claim INSERT would otherwise fail on every
@@ -143,11 +151,16 @@ object TransactionalJdbcSink {
       def create(ddl: String): Boolean = {
         val st = conn.createStatement()
         try { st.execute(ddl); true }
-        catch { case e: SQLException if e.getSQLState == "X0Y32" => false }
+        catch { case e: SQLException if Set("X0Y32", "X0Y68")(e.getSQLState) => false }
         finally st.close() // also on unexpected SQLExceptions (e.g. 40XL1)
       }
-      create(s"CREATE TABLE $table (" +
-        schema.fields.map(f => s"${f.name} ${ddlType(f.dataType)}").mkString(", ") + ")")
+      val columns =
+        schema.fields.map(f => s"${f.name} ${ddlType(f.dataType)}").mkString(", ")
+      create(s"CREATE TABLE $table ($columns)")
+      create(s"CREATE FUNCTION ${table}_rows(handle VARCHAR(64)) " +
+        s"RETURNS TABLE ($columns) LANGUAGE JAVA " +
+        "PARAMETER STYLE DERBY_JDBC_RESULT_SET NO SQL " +
+        s"EXTERNAL NAME '${getClass.getName.stripSuffix("$")}.pendingRows'")
       val fresh = create(s"CREATE TABLE ${table}_commits (" +
         "app_id VARCHAR(64) NOT NULL, " +
         "batch_id BIGINT NOT NULL, partition_id INTEGER NOT NULL, " +
@@ -223,6 +236,9 @@ object TransactionalJdbcSink {
     * per-slice claims for the in-flight batch (its slice transactions
     * committed independently); the rows of the claimed slices already
     * landed, so they are dropped and only the rest is written.
+    *
+    * `batchSize` does not change how rows are written (see the object
+    * doc); it is kept for CLI parity.
     */
   def writeBatch(batch: DataFrame, batchId: Long, url: String,
                  table: String, batchSize: Int,
@@ -234,25 +250,62 @@ object TransactionalJdbcSink {
       if (claimed.isEmpty) batch
       else batch.filter(!pmod(hash(batch.schema.fieldNames.map(col): _*),
                               lit(LegacySlices)).isin(claimed.toSeq: _*))
-    val schema = batch.schema
-    val insert = s"INSERT INTO $table (${schema.fieldNames.mkString(", ")}) " +
-      s"VALUES (${schema.fieldNames.map(_ => "?").mkString(", ")})"
-    // columns named explicitly: a migrated legacy table has app_id
-    // appended LAST, so positional VALUES would bind the scope into
-    // batch_id there
-    val claim = s"INSERT INTO ${table}_commits " +
-      "(app_id, batch_id, partition_id) VALUES (?, ?, ?)"
-    val types = schema.fields.map(f => (f.dataType, sqlType(f.dataType)))
-    val flushEvery = math.max(batchSize, 1)
-    pending.coalesce(WritePartitions).foreachPartition { (rows: Iterator[Row]) =>
-      val conn = connect(url)
+    insertClaimed(pending, batchId, url, table, appId)
+  }
+
+  /** The Spark side of [[writeBatch]], with no driver-side claim check: one
+    * task hands the batch's rows to a pooled writer thread, which claims
+    * the batch and inserts them in one transaction. A claim that is
+    * already taken (a task retry after the commit) writes nothing.
+    */
+  private[graft] def insertClaimed(batch: DataFrame, batchId: Long,
+                                   url: String, table: String,
+                                   appId: String): Unit = {
+    val names = batch.schema.fieldNames.mkString(", ")
+    val insert = s"INSERT INTO $table ($names) " +
+      s"SELECT $names FROM TABLE(${table}_rows(?)) x"
+    batch.coalesce(WritePartitions).foreachPartition { (rows: Iterator[Row]) =>
+      val handle = java.util.UUID.randomUUID().toString
+      val handoff = new Handoff
+      handoffs.put(handle, handoff)
       try {
-        conn.setAutoCommit(false)
+        val writer = writers.submit[Unit](() =>
+          writeHandedOff(url, table, insert, handle, appId, batchId))
+        try handoff.feed(rows, writer)
+        catch {
+          case t: Throwable =>
+            handoff.fail(t)
+            awaitRollback(writer)
+            throw t
+        }
+        try writer.get()
+        catch { case e: ExecutionException => throw e.getCause }
+      } finally handoffs.remove(handle)
+    }
+  }
+
+  /** The writer thread's half of [[insertClaimed]]: claim the batch and run
+    * the one INSERT that drains the hand-off under `handle`, in one
+    * transaction. Returns without writing when the claim is taken.
+    */
+  private def writeHandedOff(url: String, table: String, insert: String,
+                             handle: String, appId: String,
+                             batchId: Long): Unit = {
+    val conn = connect(url)
+    try {
+      conn.setAutoCommit(false)
+      try {
         val claimedNow =
           try {
-            val st = conn.prepareStatement(claim)
-            st.setString(1, appId); st.setLong(2, batchId); st.setInt(3, BatchClaim)
-            st.executeUpdate(); st.close(); true
+            // columns named explicitly: a migrated legacy table has app_id
+            // appended LAST, so positional VALUES would bind the scope into
+            // batch_id there
+            val st = conn.prepareStatement(s"INSERT INTO ${table}_commits " +
+              "(app_id, batch_id, partition_id) VALUES (?, ?, ?)")
+            try {
+              st.setString(1, appId); st.setLong(2, batchId); st.setInt(3, BatchClaim)
+              st.executeUpdate(); true
+            } finally st.close()
           } catch {
             // duplicate key — this epoch already committed in a previous
             // attempt (a task retry after the commit); replay is a no-op
@@ -260,30 +313,7 @@ object TransactionalJdbcSink {
           }
         if (claimedNow) {
           val ps = conn.prepareStatement(insert)
-          var n = 0
-          rows.foreach { r =>
-            var i = 0
-            while (i < types.length) {
-              if (r.isNullAt(i)) ps.setNull(i + 1, types(i)._2)
-              else types(i)._1 match {
-                case StringType    => ps.setString(i + 1, r.getString(i))
-                case IntegerType   => ps.setInt(i + 1, r.getInt(i))
-                case LongType      => ps.setLong(i + 1, r.getLong(i))
-                case DoubleType    => ps.setDouble(i + 1, r.getDouble(i))
-                case FloatType     => ps.setFloat(i + 1, r.getFloat(i))
-                case BooleanType   => ps.setBoolean(i + 1, r.getBoolean(i))
-                case TimestampType => ps.setTimestamp(i + 1, r.getTimestamp(i))
-                case DateType      => ps.setDate(i + 1, r.getDate(i))
-                case _             => ps.setObject(i + 1, r.get(i))
-              }
-              i += 1
-            }
-            ps.addBatch()
-            n += 1
-            if (n % flushEvery == 0) ps.executeBatch()
-          }
-          ps.executeBatch()
-          ps.close()
+          try { ps.setString(1, handle); ps.executeUpdate() } finally ps.close()
           conn.commit() // rows + claim become visible atomically
         } else conn.rollback()
       } catch {
@@ -292,8 +322,137 @@ object TransactionalJdbcSink {
           // over the real failure and the claim-row lock dies with us
           try conn.rollback() catch { case _: SQLException => () }
           throw t
-      } finally conn.close()
+      }
+    } finally conn.close()
+  }
+
+  /** After the task side failed: wait for the writer to see it and roll
+    * back, so the batch's claim is released before the task's own error
+    * surfaces. A killed (interrupted) task does not wait; its writer rolls
+    * back on its own within a poll interval.
+    */
+  private def awaitRollback(writer: Future[_]): Unit =
+    try writer.get()
+    catch {
+      case _: ExecutionException => () // the writer's view of the task's failure
+      case _: InterruptedException => Thread.currentThread().interrupt()
     }
+
+  // hand-off sizing: the task runs at most QueuedChunks chunks ahead of
+  // the writer; each side re-checks the other every PollMs while blocked
+  private val ChunkRows = 1024
+  private val QueuedChunks = 8
+  private val PollMs = 100L
+
+  /** One batch's rows on their way from the Spark task thread to the writer
+    * thread, in chunks; an empty chunk ends them.
+    */
+  private final class Handoff {
+    private val queue = new ArrayBlockingQueue[Array[Row]](QueuedChunks)
+    @volatile private var taskFailure: Throwable = _
+
+    /** Task side: hand `rows` over, then the empty chunk. Stops pulling
+      * rows once `writer` has finished early (it failed, or found the
+      * batch claimed).
+      */
+    def feed(rows: Iterator[Row], writer: Future[_]): Unit = {
+      var open = true
+      while (open && rows.hasNext) {
+        val buf = new Array[Row](ChunkRows)
+        var n = 0
+        while (n < ChunkRows && rows.hasNext) { buf(n) = rows.next(); n += 1 }
+        open = put(if (n == ChunkRows) buf else buf.take(n), writer)
+      }
+      if (open) put(Array.empty, writer)
+    }
+
+    private def put(chunk: Array[Row], writer: Future[_]): Boolean = {
+      while (!writer.isDone)
+        if (queue.offer(chunk, PollMs, TimeUnit.MILLISECONDS)) return true
+      false
+    }
+
+    def fail(t: Throwable): Unit = taskFailure = t
+
+    /** Writer side: the next chunk; fails once the task side has failed. */
+    def take(): Array[Row] = {
+      var chunk: Array[Row] = null
+      while (chunk == null) {
+        if (taskFailure != null)
+          throw new SQLException("the Spark task feeding this batch failed",
+            "38000", taskFailure)
+        chunk = queue.poll(PollMs, TimeUnit.MILLISECONDS)
+      }
+      chunk
+    }
+  }
+
+  /** Hand-offs in flight, by the handle their INSERT passes to the table
+    * function.
+    */
+  private val handoffs = new ConcurrentHashMap[String, Handoff]()
+
+  /** Long-lived daemon writer threads, reused across batches: the Derby
+    * side of every batch runs here. Their context class loader is this
+    * object's, so Derby resolves `pendingRows` to this same class and its
+    * [[handoffs]].
+    */
+  private val writers = Executors.newCachedThreadPool { (r: Runnable) =>
+    val t = new Thread(r, "jdbc-sink-writer")
+    t.setDaemon(true)
+    t.setContextClassLoader(getClass.getClassLoader)
+    t
+  }
+
+  /** The `<table>_rows(handle)` table function: the rows a task is handing
+    * over under `handle`. Derby calls this on the writer thread.
+    */
+  def pendingRows(handle: String): ResultSet = {
+    val handoff = handoffs.get(handle)
+    if (handoff == null)
+      throw new SQLException(s"no rows are being handed over under $handle", "38000")
+    new HandedOffRows(handoff)
+  }
+
+  /** A forward-only view of a hand-off, read by Derby column by column.
+    * Derby silently truncates a table function's VARCHAR value to the
+    * declared width, so an over-long string raises 22001 here — the same
+    * error a direct INSERT gives, and what keeps a poison row loud.
+    */
+  private final class HandedOffRows(handoff: Handoff) extends VTITemplate {
+    private var chunk: Array[Row] = Array.empty
+    private var i = 0
+    private var done = false
+    private var row: Row = _
+    private var lastNull = false
+
+    override def next(): Boolean = {
+      if (i == chunk.length && !done) {
+        chunk = handoff.take(); i = 0; done = chunk.isEmpty
+      }
+      if (done) false else { row = chunk(i); i += 1; true }
+    }
+
+    private def value(c: Int): Any = {
+      val v = row.get(c - 1); lastNull = v == null; v
+    }
+
+    override def wasNull(): Boolean = lastNull
+    override def getString(c: Int): String = value(c) match {
+      case s: String if s.length > MaxVarchar =>
+        throw new SQLException(s"column $c holds ${s.length} chars, more " +
+          s"than VARCHAR($MaxVarchar) takes", "22001")
+      case v => v.asInstanceOf[String]
+    }
+    // null unboxes to 0 / false; Derby then asks wasNull
+    override def getInt(c: Int): Int = value(c).asInstanceOf[Int]
+    override def getLong(c: Int): Long = value(c).asInstanceOf[Long]
+    override def getDouble(c: Int): Double = value(c).asInstanceOf[Double]
+    override def getFloat(c: Int): Float = value(c).asInstanceOf[Float]
+    override def getBoolean(c: Int): Boolean = value(c).asInstanceOf[Boolean]
+    override def getTimestamp(c: Int): Timestamp = value(c).asInstanceOf[Timestamp]
+    override def getDate(c: Int): Date = value(c).asInstanceOf[Date]
+    override def close(): Unit = ()
   }
 
   /** A from-scratch run (batch 0) must not find claims a PREVIOUS life

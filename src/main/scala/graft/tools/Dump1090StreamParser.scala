@@ -19,9 +19,11 @@ import graft.streaming.{StreamingOps, TransactionalJdbcSink}
   * `--database` is a Derby database path (`:memory:` gives an in-memory
   * database, like upstream's `:memory:`, P:28); the rows land in a
   * `squitters` table with upstream's 22 columns + parsed_time (P:55-81).
-  * `--batch-size` is the JDBC statement-batch size (upstream's commit
-  * amortization knob, P:32-35); durability/exactly-once comes from the
-  * one transaction per micro-batch + commit log (TransactionalJdbcSink).
+  * `--batch-size` is upstream's commit-amortization knob (P:32-35). It is
+  * accepted for parity and does not change how rows are written: each
+  * micro-batch lands through one INSERT in one transaction with its
+  * commit-log claim, which is also the unit of durability and
+  * exactly-once (TransactionalJdbcSink).
   * Ctrl-C stops the query gracefully and reports totals (R11/R12,
   * P:172-178).
   */
@@ -51,7 +53,8 @@ object Dump1090StreamParser {
       |  -d, --database           database path, or :memory: (default
       |                           adsb_messages.db)
       |  --buffer-size            bytes per socket read (default 100)
-      |  --batch-size             rows per JDBC statement batch (default 1)
+      |  --batch-size             accepted for parity; each micro-batch is
+      |                           written in one transaction (default 1)
       |  --connect-attempt-limit  connect retries before quitting (default 10)
       |  --connect-attempt-delay  seconds between retries (default 5.14)
       |  --checkpoint             checkpoint dir (default: temp dir)

@@ -81,7 +81,24 @@ object StreamLatencyProbe {
     } finally q.stop()
   }
 
+  /** `SPARK_GRAFT_STREAM_K`, checked before any Spark work: unset is None;
+    * a value must be an integer above [[graft.api.IvfOps.StaticKMax]],
+    * because the drill exists to serve the gates past the literal form.
+    */
+  private[graft] def streamK(raw: Option[String]): Option[Int] = raw.map { v =>
+    val max = graft.api.IvfOps.StaticKMax
+    v.trim.toIntOption match {
+      case Some(k) if k > max => k
+      case Some(k) => throw new IllegalArgumentException(
+        s"SPARK_GRAFT_STREAM_K=$k: the engaged-k drill needs k > " +
+        s"IvfOps.StaticKMax ($max); unset it for the fixture's own k")
+      case None => throw new IllegalArgumentException(
+        s"SPARK_GRAFT_STREAM_K='$v' is not an integer")
+    }
+  }
+
   def main(args: Array[String]): Unit = {
+    val kOverride = streamK(sys.env.get("SPARK_GRAFT_STREAM_K"))
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     val nBatches = sys.env.getOrElse("SPARK_GRAFT_STREAM_BATCHES", "12").toInt
     val rowsPer = sys.env.getOrElse("SPARK_GRAFT_STREAM_ROWS", "256").toInt
@@ -142,7 +159,6 @@ object StreamLatencyProbe {
     // two vector gates from THEM — the engaged-k latency drill for the
     // block route (centroids as data), without needing a corpus-sized
     // fixture. Unset = the exact historical probe.
-    val kOverride = sys.env.get("SPARK_GRAFT_STREAM_K").map(_.toInt)
     val (cents, pack) = kOverride match {
       case None =>
         (simq.trainedIvfCentroidSeq(spark, sfDir),

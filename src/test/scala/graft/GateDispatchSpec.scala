@@ -74,4 +74,15 @@ class GateDispatchSpec extends SparkSpec {
     assert(!own.contains("Subquery"), own.take(2000))
     assert(!own.contains("Generate"), own.take(2000))
   }
+
+  test("SPARK_GRAFT_STREAM_K is checked and named before the drill starts") {
+    import graft.tools.StreamLatencyProbe.streamK
+    val max = graft.api.IvfOps.StaticKMax
+    assert(streamK(None).isEmpty)
+    assert(streamK(Some(s" ${max + 4} ")) == Some(max + 4))
+    Seq("twenty", "", "1e3", max.toString, "-5").foreach { v =>
+      val e = intercept[IllegalArgumentException](streamK(Some(v)))
+      assert(e.getMessage.contains("SPARK_GRAFT_STREAM_K"), e.getMessage)
+    }
+  }
 }

@@ -456,6 +456,156 @@ class JdbcSinkSpec extends SparkSpec {
     } finally server.close()
   }
 
+  /** Runs `body` on another thread and fails the test if it has not
+    * returned within `seconds`: a hung hand-off must fail, not wedge the
+    * suite.
+    */
+  private def within[T](seconds: Int)(body: => T): T = {
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration._
+    Await.result(Future(body)(ExecutionContext.global), seconds.seconds)
+  }
+
+  private def sqlStates(t: Throwable): Seq[String] =
+    if (t == null) Nil
+    else (t match {
+      case s: SQLException => Seq(s.getSQLState)
+      case _ => Nil
+    }) ++ sqlStates(t.getCause) ++ t.getSuppressed.toSeq.flatMap(sqlStates)
+
+  test("the writer hand-off: a poison row past the queue's capacity fails with 22001") {
+    import org.apache.spark.sql.functions.{col, concat, lit, repeat, when}
+    val url = Dump1090StreamParser.jdbcUrl(":memory:")
+    // one source split, so row 15,000 reaches the writer after more than
+    // the hand-off's 8 x 1,024 queued rows have gone through
+    val batch = spark.range(0, 20000, 1, 1).select(
+      col("id").cast("int").as("id"),
+      when(col("id") === 15000, repeat(lit("x"), 40000))
+        .otherwise(concat(lit("row"), col("id"))).as("s"))
+    TransactionalJdbcSink.ensureTables(url, "t_hpoison", batch.schema)
+    def attempt(): Throwable = within(120) {
+      intercept[Exception] {
+        TransactionalJdbcSink.writeBatch(batch, 0L, url, "t_hpoison", 1, appId = "hp")
+      }
+    }
+    val e1 = attempt()
+    assert(sqlStates(e1).contains("22001"), s"expected 22001 in ${sqlStates(e1)}")
+    assert(!sqlStates(e1).contains("25001"), "rollback must precede close")
+    assert(count(url, "t_hpoison_commits") == 0L)
+    assert(count(url, "t_hpoison") == 0L)
+    val e2 = attempt()
+    assert(sqlStates(e2).contains("22001"), s"expected 22001 in ${sqlStates(e2)}")
+    assert(count(url, "t_hpoison_commits") == 0L)
+    assert(count(url, "t_hpoison") == 0L)
+  }
+
+  test("the writer hand-off: a task-side error mid-batch rolls the writer back") {
+    import org.apache.spark.sql.functions.{col, concat, lit, raise_error, when}
+    val url = Dump1090StreamParser.jdbcUrl(":memory:")
+    def rows(fail: Boolean) = {
+      val s = concat(lit("row"), col("id"))
+      spark.range(0, 20000, 1, 1).select(col("id").cast("int").as("id"),
+        (if (fail) when(col("id") === 10000, raise_error(lit("projection boom")))
+           .otherwise(s)
+         else s).as("s"))
+    }
+    TransactionalJdbcSink.ensureTables(url, "t_htask", rows(false).schema)
+    val e = within(120) {
+      intercept[Exception] {
+        TransactionalJdbcSink.writeBatch(rows(true), 0L, url, "t_htask", 1, appId = "ht")
+      }
+    }
+    def chain(t: Throwable): List[Throwable] =
+      if (t == null) Nil else t :: chain(t.getCause)
+    assert(chain(e).exists(t => String.valueOf(t.getMessage).contains("projection boom")),
+      chain(e).map(_.toString).mkString("\n"))
+    assert(!sqlStates(e).contains("25001"), "rollback must precede close")
+    assert(count(url, "t_htask_commits") == 0L)
+    assert(count(url, "t_htask") == 0L)
+    // the claim was released: the same batch id, now good, writes
+    within(120) {
+      TransactionalJdbcSink.writeBatch(rows(false), 0L, url, "t_htask", 1, appId = "ht")
+    }
+    assert(count(url, "t_htask") == 20000L)
+    assert(count(url, "t_htask_commits") == 1L)
+  }
+
+  test("the writer hand-off: a claimed batch replays with nothing written") {
+    import org.apache.spark.sql.functions.{col, udf}
+    val url = Dump1090StreamParser.jdbcUrl(":memory:")
+    val pulled = spark.sparkContext.longAccumulator("pulled")
+    val tally = udf { (i: Long) => pulled.add(1); i }
+    val batch = spark.range(0, 50000, 1, 1)
+      .select(tally(col("id")).as("id"), col("id").cast("string").as("s"))
+    TransactionalJdbcSink.ensureTables(url, "t_hclaim", batch.schema)
+    within(120) {
+      TransactionalJdbcSink.writeBatch(batch, 2L, url, "t_hclaim", 1, appId = "hc")
+    }
+    assert(count(url, "t_hclaim") == 50000L)
+    // a task retry after the commit gets past the driver-side check; the
+    // writer finds the claim taken, and the task stops pulling rows
+    pulled.reset()
+    within(120) {
+      TransactionalJdbcSink.insertClaimed(batch, 2L, url, "t_hclaim", "hc")
+    }
+    assert(count(url, "t_hclaim") == 50000L)
+    assert(count(url, "t_hclaim_commits") == 1L)
+    assert(pulled.value < 50000L, s"pulled ${pulled.value} rows of a claimed batch")
+  }
+
+  test("a database from the build before the rows function upgrades on resume") {
+    val srcDir = java.nio.file.Files.createTempDirectory("upsrc")
+    val ckpt = java.nio.file.Files.createTempDirectory("upck").toString
+    val db = java.nio.file.Files.createTempDirectory("updb").toString + "/adsb.db"
+    val url = Dump1090StreamParser.jdbcUrl(db)
+    // the previous build made squitters and squitters_commits, no function
+    TransactionalJdbcSink.ensureTables(url, "squitters", graft.sources.Sbs1.Schema)
+    val conn = TransactionalJdbcSink.connect(url)
+    try {
+      val st = conn.createStatement()
+      st.execute("DROP FUNCTION squitters_rows")
+      st.execute("INSERT INTO squitters (session_id, hex_ident) VALUES (-1, 'OLD')")
+      st.close()
+    } finally conn.close()
+    java.nio.file.Files.write(srcDir.resolve("a.txt"),
+      (0 until 25).map(mk).mkString("", "\n", "\n").getBytes)
+    val q = TransactionalJdbcSink.sink(
+      StreamingOps.ingestFiles(spark, srcDir.toString),
+      url, "squitters", batchSize = 1, checkpoint = ckpt)
+    q.awaitTermination()
+    assert(count(url) == 26)
+    // and a second ensureTables leaves the function and the tables be
+    TransactionalJdbcSink.ensureTables(url, "squitters", graft.sources.Sbs1.Schema,
+      legacyClaimScope = Some(TransactionalJdbcSink.appIdFor(ckpt)))
+    assert(count(url) == 26)
+  }
+
+  test("every column type crosses the writer hand-off, nulls included") {
+    import spark.implicits._
+    val url = Dump1090StreamParser.jdbcUrl(":memory:")
+    val ts = java.sql.Timestamp.valueOf("2026-08-12 14:21:07.25")
+    val day = java.sql.Date.valueOf("2026-08-12")
+    val batch = Seq(
+      (Option(1), Option(2L), Option(0.5), Option(1.5f), Option(true),
+        Option(ts), Option(day), Option("a  ")),
+      (None, None, None, None, None, None, None, None))
+      .toDF("i", "l", "d", "f", "b", "ts", "dt", "s")
+    TransactionalJdbcSink.ensureTables(url, "t_types", batch.schema)
+    TransactionalJdbcSink.writeBatch(batch, 0L, url, "t_types", 1, appId = "ty")
+    val c = TransactionalJdbcSink.connect(url)
+    try {
+      val rs = c.createStatement().executeQuery(
+        "SELECT i, l, d, f, b, ts, dt, s FROM t_types ORDER BY i NULLS LAST")
+      assert(rs.next())
+      assert(rs.getInt(1) == 1 && rs.getLong(2) == 2L && rs.getDouble(3) == 0.5 &&
+        rs.getFloat(4) == 1.5f && rs.getBoolean(5) && rs.getTimestamp(6) == ts &&
+        rs.getDate(7) == day && rs.getString(8) == "a  ")
+      assert(rs.next())
+      (1 to 8).foreach { k => rs.getObject(k); assert(rs.wasNull(), s"column $k") }
+      assert(!rs.next())
+    } finally c.close()
+  }
+
   test("CLI pipeline e2e: argparse surface → socket → Derby squitters") {
     val cfg = Dump1090StreamParser.parseArgs(Seq(
       "--location=localhost", "-p", "0", "--buffer-size", "64",

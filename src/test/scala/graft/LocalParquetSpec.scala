@@ -88,6 +88,22 @@ class LocalParquetSpec extends SparkSpec {
     assert(LocalParquet.readRows(spark, dir).isEmpty)
   }
 
+  test("a corrupted footer is None, so the caller falls back to the Spark read") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("lp6").toString + "/x"
+    Seq((1L, "a"), (2L, "b")).toDF("k", "v").coalesce(1)
+      .write.mode("overwrite").parquet(dir)
+    val part = new java.io.File(dir).listFiles()
+      .filter(_.getName.endsWith(".parquet")).head
+    // overwrite the footer length and the trailing PAR1 magic
+    val raf = new java.io.RandomAccessFile(part, "rw")
+    try { raf.seek(raf.length() - 8); raf.write(Array.fill[Byte](8)(0x7f)) }
+    finally raf.close()
+    assert(LocalParquet.readRows(spark, dir).isEmpty)
+    // the fallback read reports the corruption instead of hiding it
+    intercept[Exception](spark.read.parquet(dir).collect())
+  }
+
   test("absent path is None") {
     assert(LocalParquet.readRows(spark, "/no/such/dir/at/all").isEmpty)
   }
