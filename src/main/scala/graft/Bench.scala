@@ -1,5 +1,6 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 
 /** Self-attributing benchmark runner.
   *
@@ -66,6 +67,16 @@ object Bench {
     }
     b.toString
   }
+
+  /** The `bench_c<slug>.json` name part for a SPARK_GRAFT_CPUS value:
+    * the text itself when it is plain alphanumeric, otherwise the text
+    * sanitized to [A-Za-z0-9_] plus a digest of the raw text, so two
+    * values that sanitize alike ("8 ", "8_") never share a file. */
+  private[graft] def cpuSlug(cpus: String): String =
+    if (cpus.matches("[A-Za-z0-9]+")) cpus
+    else cpus.replaceAll("[^A-Za-z0-9]+", "_") + "_" + java.util.HexFormat
+      .of().formatHex(java.security.MessageDigest.getInstance("SHA-256")
+        .digest(cpus.getBytes(java.nio.charset.StandardCharsets.UTF_8)), 0, 4)
 
   // Locale.ROOT pins the '.' decimal separator — the f interpolator uses
   // the default locale, which on comma-decimal machines emits invalid JSON
@@ -619,23 +630,18 @@ object Bench {
       s"""  {"name":"${esc(n)}","partitions":$np,"cached":$nc,""" +
         s""""mem_bytes":$mem,"disk_bytes":$disk}"""
     }.mkString(",\n")).append("\n ]\n}\n")
-    try {
-      val out = java.nio.file.Paths.get("target", "bench.json")
+    // per-core-count copy (VERDICT r18 #2): a bench at two core counts
+    // had the second run OVERWRITE target/bench.json — the r18 8-core
+    // run clobbered the 32-core record. One durable file per
+    // SPARK_GRAFT_CPUS value keeps both; each write fails on its own.
+    val bytes = detail.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+    for (name <- Seq("bench.json", s"bench_c${cpuSlug(cpus)}.json")) try {
+      val out = java.nio.file.Paths.get("target", name)
       java.nio.file.Files.createDirectories(out.getParent)
-      java.nio.file.Files.write(out,
-        detail.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      // per-core-count copy (VERDICT r18 #2): the driver benches at two
-      // core counts and the second run OVERWROTE target/bench.json — the
-      // r18 8-core run clobbered the 32-core record. One durable file per
-      // SPARK_GRAFT_CPUS value keeps both. (cpus is env text — sanitize.)
-      val cpuSlug = cpus.replaceAll("[^A-Za-z0-9]+", "_")
-      val outC = java.nio.file.Paths.get("target", s"bench_c$cpuSlug.json")
-      java.nio.file.Files.write(outC,
-        detail.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      System.err.println(
-        s"[bench] wrote ${out.toAbsolutePath} and ${outC.toAbsolutePath}")
+      java.nio.file.Files.write(out, bytes)
+      System.err.println(s"[bench] wrote ${out.toAbsolutePath}")
     } catch {
-      case t: Throwable => System.err.println(s"[bench] file write failed: $t")
+      case NonFatal(t) => System.err.println(s"[bench] $name write failed: $t")
     }
     spark.stop()
     // re-emit as the process's very last stdout bytes: the first print can

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.DedupQueries
 import graft.sources.BucketedLayout
+import scala.util.control.NonFatal
 
 /** Build-once, append-many index artifacts for the dedup/ANN family. At
   * 100 TB the shingle index and the IVF assignment are not per-session
@@ -667,7 +668,7 @@ object IndexArtifacts {
         case Some((sc, rs)) => (sc, rs)
         case None =>
           val t = try s.read.parquet(path)
-            catch { case _: Throwable => return None }
+            catch { case NonFatal(_) => return None }
           (t.schema, t.collect().toSeq)
       }
     if (!schema.fieldNames.contains("__fp")) return None
@@ -874,7 +875,7 @@ object IndexArtifacts {
       }
     } catch { case _: Exception => false }
     if (!fresh) None
-    else try Some(s.read.parquet(path)) catch { case _: Throwable => None }
+    else try Some(s.read.parquet(path)) catch { case NonFatal(_) => None }
   }
 
   /** MANIFEST-INCREMENTAL derived-layer serve (VERDICT r13 #6): at 100 TB

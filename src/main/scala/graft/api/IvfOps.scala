@@ -1,162 +1,61 @@
 package graft.api
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.functions.expressions.VectorFunctions.{cosine_sim, dot_product}
+import graft.functions.expressions.VectorFunctions.{dot_product, nearest_centroids}
 
 /** IVF (inverted-file) building blocks for similarity search and embedding
   * near-dup at scale.
   *
   * The centroid set is BOUNDED MODEL STATE (k × dim doubles, k ≪ corpus):
-  * it collapses to a single-row DataFrame holding one array of
-  * (cid, cv, cnrm) structs, so broadcasting it is O(k·dim) at any corpus
-  * size. Assignment is then a pure map-side projection — each vector
-  * computes its cosine to all k centroids inside one array expression and
-  * takes the argmax — with ZERO shuffles, versus the naive
+  * it collapses to ONE centroid block, an array of (cid, cv, cnrm)
+  * structs, O(k·dim) at any corpus size. Assignment is then a pure
+  * map-side projection — one codegen'd kernel (NearestCentroids) scores
+  * all k centroids per vector — with ZERO shuffles, versus the naive
   * crossJoin(centroids) + Window.partitionBy(vec_id) row_number form that
   * shuffles a k×-expanded corpus just to reduce per-row.
   *
   * Cosine arithmetic is the engine's parity form — dot/(sqrt(|a|²)·sqrt(|b|²))
-  * via the native codegen'd dot product, with per-centroid norms
+  * with the native left-to-right dot product, per-centroid norms
   * precomputed once in the block (bit-identical to inline evaluation).
   */
 object IvfOps {
 
-  /** Collapse a (cid, vec) centroid table into the single-row broadcastable
-    * block consumed by [[assign]]. Sorted by cid for determinism
-    * (collect_list order is not).
+  /** A (cid, vec) centroid table as a centroid block: one uncorrelated
+    * scalar subquery, evaluated once per query — no join node of any kind
+    * in the consumer's plan. Sorted by cid (collect_list order is not).
     */
   def centroidBlock(cents: DataFrame, cidCol: String = "cid",
-                    vecCol: String = "v"): DataFrame =
-    cents.agg(sort_array(collect_list(struct(
-      col(cidCol).as("cid"), col(vecCol).as("cv"),
-      sqrt(dot_product(col(vecCol), col(vecCol))).as("cnrm")))).as("__cents"))
+                    vecCol: String = "v"): Column =
+    org.apache.spark.sql.GraftSqlBridge.scalarSubquery(
+      cents.agg(sort_array(collect_list(struct(
+        col(cidCol).as("cid"), col(vecCol).as("cv"),
+        sqrt(dot_product(col(vecCol), col(vecCol))).as("cnrm"))))))
+
+  /** DRIVER-RESIDENT centroids (a k-means model between iterations, a
+    * memoized model) as a centroid block: one literal, so no subquery job
+    * per query and a stream-safe plan; the task binary grows with k·dim.
+    * cnrm sums left to right as [[centroidBlock]]'s does: same scores.
+    */
+  def centroidLiteral(cents: Seq[(Long, Array[Double])]): Column =
+    typedlit(cents.map { case (cid, cv) =>
+      (cid, cv.toSeq, math.sqrt(cv.foldLeft(0d)((a, x) => a + x * x)))
+    })
 
   /** Map-side centroid assignment: every input row is emitted once per
-    * probe (its `nProbe` nearest centroids by cosine, ties to the lowest
-    * cid), with an added `cid` column. All input columns pass through.
+    * probe (its `nProbe` nearest centroids in `block` by cosine, ties to
+    * the lowest cid) with an added `cid` column, plus the probe's cosine
+    * `csim` under `keepScore`. All input columns pass through. An EMPTY
+    * block fails the query rather than bucket every row under a null cid.
     */
-  def assign(vecs: DataFrame, centroidBlock: DataFrame, nProbe: Int,
+  def assign(vecs: DataFrame, block: Column, nProbe: Int,
              vecCol: String = "v", keepScore: Boolean = false): DataFrame = {
-    // struct(csim, -cid) sorted ascending then reversed = order by
-    // (csim DESC, cid ASC) — the row_number tiebreak, as one expression.
-    // nProbe=1 takes the argmax directly (array_max) instead of sorting.
-    // zero-norm floor: a zero-norm vector or centroid makes csim 0/0 —
-    // NaN in legacy mode (which Spark orders ABOVE every number: one
-    // degenerate centroid would silently absorb the corpus) and a
-    // DIVIDE_BY_ZERO *error* under ANSI (a singleton coarse cluster's
-    // residual is exactly zero — hit by PQ-on-residual training). The
-    // when-guard skips the division entirely on a zero denominator and
-    // the nanvl belt stays for any other NaN; -2 is below any cosine,
-    // so degenerate scores lose every comparison (ties then break to
-    // the lowest cid, deterministically). Identical results wherever
-    // the old form didn't throw.
-    val scored = transform(col("__cents"), c =>
-      struct(nanvl(when(col("__nrm") * c.getField("cnrm") > 0,
-                     dot_product(col(vecCol), c.getField("cv")) /
-                       (col("__nrm") * c.getField("cnrm")))
-                   .otherwise(lit(-2d)), lit(-2d)).as("csim"),
-             (-c.getField("cid")).as("negcid")))
-    val ranked =
-      if (nProbe == 1) array(array_max(scored))
-      else slice(reverse(array_sort(scored)), 1, nProbe)
-    // the block is inlined as an uncorrelated scalar subquery — evaluated
-    // once, injected into the projection as a literal. No join node (of
-    // any kind) appears in the consumer's plan, so assignment is a pure
-    // map-side projection even in the physical plan.
-    // an EMPTY centroid block is caller error with two DIFFERENT silent
-    // degenerate outcomes (nProbe=1: array_max over [] is [null], so
-    // every row lands in one null-cid bucket and bucketPairs then pairs
-    // unrelated vectors; nProbe>1: the empty slice explodes to nothing
-    // and the whole corpus silently vanishes) — fail loudly instead
-    // (r18 self-review)
-    val guarded = when(size(col("__cents")) > 0, ranked)
-      .otherwise(raise_error(lit(
-        "IvfOps.assign: empty centroid block — nothing to assign to")))
-    vecs.withColumn("__cents",
-        org.apache.spark.sql.GraftSqlBridge.scalarSubquery(
-          centroidBlock.select("__cents")))
-      .withColumn("__nrm", sqrt(dot_product(col(vecCol), col(vecCol))))
-      .withColumn("__p", explode(guarded))
-      .withColumn("cid", -col("__p.negcid"))
-      // keepScore surfaces the winning cosine (q_emb_outliers' distance-
-      // to-own-centroid signal) without a centroid re-join downstream
-      .withColumns(
-        if (keepScore) Map[String, org.apache.spark.sql.Column](
-          "csim" -> col("__p.csim"))
-        else Map.empty[String, org.apache.spark.sql.Column])
-      .drop("__cents", "__nrm", "__p")
-  }
-
-  /** Map-side assignment against DRIVER-RESIDENT centroids (e.g. the
-    * k-means model between iterations): every per-centroid cosine becomes
-    * a static codegen'd expression over a literal vector, so the whole
-    * argmax runs inside WholeStageCodegen — no interpreted higher-order
-    * lambda in the hot path (the [[assign]] form pays k interpreted calls
-    * per row; identical results, pinned by spec). Preferred whenever the
-    * centroids are already materialized on the driver.
-    */
-  /** Literal-codegen centroid bound for [[assignStatic]]: past it the
-    * per-row expression tree (k structs, each a dim-literal dot product)
-    * outgrows whole-stage codegen — the generated method blows the JVM
-    * size limits and execution falls back to INTERPRETED expression eval
-    * per row, while the plan itself carries k×dim literal doubles into
-    * every task binary. The r18 scale-stress run measured the cliff:
-    * the trained-ANN phase went 4.2 → 62.6 s when the sized-k model
-    * (k=40 at the stress corpus; kMax 65536 at scale) rode the literal
-    * form. [[assignAuto]] routes larger models to the scalar-subquery
-    * block, whose centroids are DATA (one interpreted lambda loop over a
-    * runtime array), not plan. */
-  val StaticKMax = 16
-
-  /** [[assignStatic]] for models within [[StaticKMax]], the broadcast
-    * block form past it — the dispatch every DRIVER-RESIDENT-centroid
-    * caller should use when k is corpus-sized (trained models under the
-    * sized-k policy); constant-k fixture callers may call assignStatic
-    * directly. Identical results on both routes (same dot/norm
-    * arithmetic — the assign/assignStatic spec pin). */
-  def assignAuto(vecs: DataFrame, cents: Seq[(Long, Array[Double])],
-                 nProbe: Int, vecCol: String = "v",
-                 keepScore: Boolean = false): DataFrame =
-    if (cents.size <= StaticKMax)
-      assignStatic(vecs, cents, nProbe, vecCol, keepScore)
-    else {
-      val s = vecs.sparkSession
-      import s.implicits._
-      val cdf = cents.toDF("cid", "cv")
-      assign(vecs, centroidBlock(cdf, "cid", "cv"), nProbe, vecCol,
-        keepScore)
-    }
-
-  def assignStatic(vecs: DataFrame, cents: Seq[(Long, Array[Double])],
-                   nProbe: Int, vecCol: String = "v",
-                   keepScore: Boolean = false): DataFrame = {
-    require(cents.nonEmpty,
-      "assignStatic: empty centroid set — nothing to assign to")
-    val scored = array(cents.map { case (cid, cv) =>
-      // left-to-right sum, like DotProduct's loop — bit-identical norms;
-      // zero-norm floor as in [[assign]] (ANSI-safe when-guard + nanvl)
-      val cnrm = math.sqrt(cv.map(x => x * x).sum)
-      struct(nanvl(when(col("__nrm") * lit(cnrm) > 0,
-                     dot_product(col(vecCol), lit(cv)) /
-                       (col("__nrm") * lit(cnrm)))
-                   .otherwise(lit(-2d)), lit(-2d)).as("csim"),
-             lit(-cid).as("negcid"))
-    }: _*)
-    val ranked =
-      if (nProbe == 1) array(array_max(scored))
-      else slice(reverse(array_sort(scored)), 1, nProbe)
-    vecs
-      .withColumn("__nrm", sqrt(dot_product(col(vecCol), col(vecCol))))
-      .withColumn("__p", explode(ranked))
-      .withColumn("cid", -col("__p.negcid"))
-      // keepScore mirrors [[assign]]'s: the winning cosine as a column
-      .withColumns(
-        if (keepScore) Map[String, org.apache.spark.sql.Column](
-          "csim" -> col("__p.csim"))
-        else Map.empty[String, org.apache.spark.sql.Column])
-      .drop("__nrm", "__p")
+    val probed = vecs
+      .withColumn("__p", explode(nearest_centroids(col(vecCol), block, nProbe)))
+      .withColumn("cid", col("__p.cid"))
+    (if (keepScore) probed.withColumn("csim", col("__p.csim")) else probed)
+      .drop("__p")
   }
 
   /** Default per-bucket membership bound for [[bucketPairs]]: far above
@@ -319,53 +218,30 @@ object IvfOps {
   }
 
   /** Approximate top-k neighbours for a batch of queries over an IVF
-    * index (centroids typically from [[KMeans.fit]]): the corpus is
-    * multi-assigned to its `corpusProbes` nearest buckets (boundary-vector
-    * remedy, `corpusProbes`× index size), queries probe their
-    * `queryProbes` nearest, candidate (query, vector) pairs are deduped
-    * (a pair sharing several buckets must score once), and only
-    * candidates get the exact cosine. Per-query cost is the probed
-    * buckets, not the corpus; candidate volume is O(p²·n/k) per query, so
-    * k grows with the corpus at scale.
+    * index (centroids typically from [[KMeans.fit]], as a [[centroidBlock]]
+    * or [[centroidLiteral]]): the corpus is multi-assigned to its
+    * `corpusProbes` nearest buckets (boundary-vector remedy,
+    * `corpusProbes`× index size), queries probe their `queryProbes`
+    * nearest, candidate (query, vector) pairs are deduped (a pair sharing
+    * several buckets must score once), and only candidates get the exact
+    * cosine. Per-query cost is the probed buckets, not the corpus;
+    * candidate volume is O(p²·n/k) per query, so k grows with the corpus
+    * at scale.
     *
     * Returns (qIdCol, idCol, sim, rnk) with rnk ≤ k per query.
     */
   def annTopK(corpus: DataFrame, idCol: String, vecCol: String,
               queries: DataFrame, qIdCol: String, qVecCol: String,
-              centroids: DataFrame, k: Int,
+              block: Column, k: Int,
               corpusProbes: Int = 2, queryProbes: Int = 3,
-              excludeSelf: Boolean = true): DataFrame =
-    annTopKWith(corpus, idCol, vecCol, queries, qIdCol, qVecCol,
-      (vecs, np, vc) => assign(vecs, centroidBlock(centroids, "cid", "cv"),
-        np, vc),
-      k, corpusProbes, queryProbes, excludeSelf)
-
-  /** [[annTopK]] over DRIVER-RESIDENT centroids: both assignment passes
-    * ride [[assignAuto]] — literal codegen within [[StaticKMax]] (no
-    * scalar-subquery job per pass, no interpreted per-row lambda), the
-    * block form past it (the sized-k cliff note on StaticKMax); scores
-    * bit-identical either way. */
-  def annTopKStatic(corpus: DataFrame, idCol: String, vecCol: String,
-                    queries: DataFrame, qIdCol: String, qVecCol: String,
-                    cents: Seq[(Long, Array[Double])], k: Int,
-                    corpusProbes: Int = 2, queryProbes: Int = 3,
-                    excludeSelf: Boolean = true): DataFrame =
-    annTopKWith(corpus, idCol, vecCol, queries, qIdCol, qVecCol,
-      (vecs, np, vc) => assignAuto(vecs, cents, np, vc),
-      k, corpusProbes, queryProbes, excludeSelf)
-
-  private def annTopKWith(corpus: DataFrame, idCol: String, vecCol: String,
-              queries: DataFrame, qIdCol: String, qVecCol: String,
-              assignFn: (DataFrame, Int, String) => DataFrame, k: Int,
-              corpusProbes: Int, queryProbes: Int,
-              excludeSelf: Boolean): DataFrame = {
+              excludeSelf: Boolean = true): DataFrame = {
     // candidate generation and pair-dedup carry ONLY the id pair — at
     // dim=64 each vector is ~0.5 KB, so keeping both vectors in the
     // bucket-join rows and the distinct's shuffle key would move ~1 KB of
     // pure overhead per candidate; the vectors re-attach by id afterwards
-    val candIds = assignFn(corpus, corpusProbes, vecCol)
+    val candIds = assign(corpus, block, corpusProbes, vecCol)
       .select(col("cid"), col(idCol))
-      .join(assignFn(queries, queryProbes, qVecCol)
+      .join(assign(queries, block, queryProbes, qVecCol)
               .select(col("cid"), col(qIdCol)), Seq("cid"))
       // excludeSelf drops id-equal pairs — the QUERIES-ARE-CORPUS-ROWS
       // posture (every in-repo call site). Set it false when the query

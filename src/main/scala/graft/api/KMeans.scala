@@ -17,8 +17,8 @@ import org.apache.spark.sql.functions._
   * Each iteration is:
   *
   *   1. map-side assignment of every vector to its nearest centroid
-  *      (IvfOps.assign over the scalar-subquery centroid block — zero
-  *      shuffles), then
+  *      (IvfOps.assign over the driver-resident centroids as a literal
+  *      block — zero shuffles), then
   *   2. one groupBy(cid) with `dim` avg slots (map-side partial
   *      aggregation, a single shuffle of k×dim partial sums per task).
   *
@@ -51,20 +51,19 @@ object KMeans {
     val cached = iters >= 1
     if (cached) corpus.cache()
     try {
-      var cents: Seq[(Long, Seq[Double])] = corpus
+      var cents: Seq[(Long, Array[Double])] = corpus
         .orderBy(col(idCol)).limit(k)
         .select(col(vecCol)).collect()
         .zipWithIndex
-        .map { case (r, i) => (i.toLong, r.getSeq[Double](0)) }.toSeq
+        .map { case (r, i) => (i.toLong, r.getSeq[Double](0).toArray) }.toSeq
       require(cents.nonEmpty,
         "cannot fit k-means on an empty corpus (no vectors to initialize " +
         "centroids from — check upstream filters)")
       val dim = cents.head._2.length
 
       for (_ <- 1 to iters) {
-        // centroids are already driver-resident → static codegen assignment
-        val assigned = IvfOps.assignStatic(
-          corpus, cents.map { case (cid, v) => (cid, v.toArray) },
+        // centroids are already driver-resident → a literal block
+        val assigned = IvfOps.assign(corpus, IvfOps.centroidLiteral(cents),
           nProbe = 1, vecCol)
         // centroid means accumulate in DECIMAL, not double: double
         // addition is non-associative and the final-aggregate merge order
@@ -81,7 +80,7 @@ object KMeans {
             .as("cv"))
           .orderBy("cid")
           .collect()
-          .map(r => (r.getLong(0), r.getSeq[Double](1))).toSeq
+          .map(r => (r.getLong(0), r.getSeq[Double](1).toArray)).toSeq
       }
       cents.toDF("cid", "cv")
     } finally if (cached) corpus.unpersist(blocking = true)
@@ -107,7 +106,6 @@ object KMeans {
                    m: Int, sub: Int, k: Int, iters: Int): DataFrame = {
     val spark = vecs.sparkSession
     import spark.implicits._
-    import graft.functions.expressions.VectorFunctions.dot_product
 
     require(m >= 1 && sub >= 1 && k >= 1,
       s"invalid PQ geometry: m=$m sub=$sub k=$k")
@@ -121,7 +119,7 @@ object KMeans {
     if (cached) parts.cache()
     try {
       val initRows = vecs.orderBy(col(idCol)).limit(k)
-        .select(col(vecCol)).collect().map(_.getSeq[Double](0))
+        .select(col(vecCol)).collect().map(_.getSeq[Double](0).toArray)
       require(initRows.nonEmpty, "cannot fit on an empty corpus")
       // undersized vectors would slice to EMPTY subvectors past dim —
       // every centroid would score the -2 floor, all rows would tie to
@@ -132,41 +130,24 @@ object KMeans {
         s"vector dim ${initRows.map(_.length).min} < m*sub = ${m * sub}: " +
         "the PQ subspace slices would be empty or truncated")
       // cents(i) = subspace i's (cid, centroid) model
-      var cents: Seq[Seq[(Long, Seq[Double])]] = (0 until m).map { i =>
+      var cents: Seq[Seq[(Long, Array[Double])]] = (0 until m).map { i =>
         initRows.zipWithIndex.map { case (v, j) =>
           (j.toLong, v.slice(i * sub, i * sub + sub)) }.toSeq
       }
       for (_ <- 1 to iters) {
-        // per row: pick THIS subspace's static scored argmax (the
-        // assignStatic expression per m, selected by a when-chain — all
-        // codegen'd literals, one scan)
-        def argmax(model: Seq[(Long, Seq[Double])]) = {
-          val scored = array(model.map { case (cid, cv) =>
-            val cnrm = math.sqrt(cv.map(x => x * x).sum)
-            // zero-norm floor (ANSI-safe — the IvfOps.assign form): a
-            // singleton coarse cluster's residual is EXACTLY zero, and
-            // the unguarded division threw DIVIDE_BY_ZERO under ANSI
-            // instead of the intended NaN→-2 demotion
-            struct(nanvl(when(col("__nrm") * lit(cnrm) > 0,
-                           dot_product(col("v"), lit(cv.toArray)) /
-                             (col("__nrm") * lit(cnrm)))
-                         .otherwise(lit(-2d)), lit(-2d)).as("csim"),
-                   lit(-cid).as("negcid"))
-          }: _*)
-          -array_max(scored).getField("negcid")
-        }
-        val assigned = parts
-          .withColumn("__nrm", sqrt(dot_product(col("v"), col("v"))))
-          .withColumn("cid",
-            (0 until m).map(i => when(col("m") === i, argmax(cents(i))))
-              .reduceRight(_ otherwise _))
+        // per row: THIS subspace's model, as one literal block per m
+        // selected by a when-chain — one scan assigns every subspace
+        val block = (0 until m).map(i =>
+          when(col("m") === i, IvfOps.centroidLiteral(cents(i))))
+          .reduceRight(_ otherwise _)
+        val assigned = IvfOps.assign(parts, block, nProbe = 1)
         val next = assigned.groupBy("m", "cid")
           .agg(array((0 until sub).map(i =>
             avg(col("v").getItem(i).cast("decimal(30,15)"))
               .cast("double")): _*).as("cv"))
           .orderBy("m", "cid")
           .collect()
-          .map(r => (r.getInt(0), r.getLong(1), r.getSeq[Double](2)))
+          .map(r => (r.getInt(0), r.getLong(1), r.getSeq[Double](2).toArray))
         cents = (0 until m).map(i =>
           next.filter(_._1 == i).map(t => (t._2, t._3)).toSeq)
       }

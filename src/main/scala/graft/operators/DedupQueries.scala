@@ -395,14 +395,8 @@ object DedupQueries {
     * set-based form of SemDeDup's within-cluster pruning). ONE
     * definition for the fixture-centroid twin and the trained twin.
     */
-  private def semanticKeepers(e: DataFrame,
-      cents: Seq[(Long, Array[Double])]): DataFrame = {
-    // assignAuto over driver-resident centroids (r18): literal codegen'd
-    // scoring within StaticKMax (no per-run scalar-subquery job), the
-    // block form past it — the trained caller's k is corpus-sized, and
-    // the stress run measured the literal form's interpreted-fallback
-    // cliff at k=40. Identical scores on both routes.
-    val asgP = IvfOps.assignAuto(e, cents, nProbe = 1)
+  private def semanticKeepers(e: DataFrame, block: Column): DataFrame = {
+    val asgP = IvfOps.assign(e, block, nProbe = 1)
     // the (v, nrm) payload rides through the block expansion — verify is
     // map-side over the spread block-pair partitions (the embedPairs r17
     // shape), never a corpus re-join onto the pair stream
@@ -2102,10 +2096,8 @@ object DedupQueries {
         .filter(floor(cosAB * lit(1e9)).cast("long")
           >= SimilarityQueries.SemDupThrE9)
         .select(col("a.vec_id").as("va"), col("b.vec_id").as("vb"))
-      // assignStatic over the memoized fixture centroids (r18 — the
-      // q_emb_drift note)
-      val asg = IvfOps.assignStatic(sample,
-          SimilarityQueries.fixtureIvfCentroidSeq(s, d), nProbe = 2)
+      val asg = IvfOps.assign(sample,
+          SimilarityQueries.fixtureIvfBlock(s, d), nProbe = 2)
         .select("vec_id", "cid")
       val cand = IvfOps.bucketPairs(asg, "cid", "vec_id")
         .select(col("a").as("va"), col("b").as("vb")).distinct()
@@ -2436,7 +2428,7 @@ object DedupQueries {
         .select(col("vec_id"),
           transform(col("embedding"), x => x.cast("double")).as("v"))
         .withColumn("nrm", sqrt(dot_product(col("v"), col("v"))))
-      semanticKeepers(e, SimilarityQueries.fixtureIvfCentroidSeq(s, d))
+      semanticKeepers(e, SimilarityQueries.fixtureIvfBlock(s, d))
     }),
 
     "q_dedup_semantic_trained" -> ((s, d) => {
@@ -2453,7 +2445,7 @@ object DedupQueries {
         .select(col("vec_id"),
           transform(col("embedding"), x => x.cast("double")).as("v"))
         .withColumn("nrm", sqrt(dot_product(col("v"), col("v"))))
-      semanticKeepers(e, SimilarityQueries.trainedIvfCentroidSeq(s, d))
+      semanticKeepers(e, SimilarityQueries.trainedIvfBlock(s, d))
     }),
 
     "q_dedup_embed" -> ((s, d) => {
@@ -2714,10 +2706,8 @@ object DedupQueries {
       .select(col("vec_id"),
         transform(col("embedding"), x => x.cast("double")).as("v"))
       .withColumn("nrm", sqrt(dot_product(col("v"), col("v"))))
-    // assignStatic over the memoized fixture centroids (r18 — the
-    // q_emb_drift note): no per-run subquery job, codegen'd scoring
-    val asg = IvfOps.assignStatic(e,
-      SimilarityQueries.fixtureIvfCentroidSeq(s, d), nProbe = 2)
+    val asg = IvfOps.assign(e, SimilarityQueries.fixtureIvfBlock(s, d),
+      nProbe = 2)
     // pairs from bucket membership via ONE aggregation instead of a
     // self-join on cid (which would evaluate the assignment subtree
     // twice and shuffle it twice); IvfOps caps membership per bucket

@@ -3,7 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables._
-import graft.functions.expressions.VectorFunctions.{cosine_sim, dot_product}
+import graft.functions.expressions.VectorFunctions.{cosine_sim, dot_product,
+  nearest_centroids}
 import graft.api.IvfOps
 
 /** Similarity search over the embedding column (north star): brute-force
@@ -73,8 +74,7 @@ object SimilarityQueries {
     * (dist, j, cv) structs. The codebook collapses to a single-row
     * struct-array block attached as an uncorrelated scalar subquery —
     * assignment is a pure map-side projection, no join node (the IvfOps
-    * rule); at real scale the lambdas swap for assignStatic-style literal
-    * codegen with no shape change.
+    * rule).
     */
   /** The fixture codebook as (m, j, cv) rows: the subvectors of the 4
     * lowest-id vectors — which is also EXACTLY [[graft.api.KMeans.fit]]'s
@@ -341,13 +341,14 @@ object SimilarityQueries {
   private[graft] val SemDupThrE9 = 450000000L
 
   /** The corpus packed per IVF cell for the semantic gate's stream-static
-    * probe: one row per cid carrying its members as a sorted
-    * (vec_id, v) array, membership capped at [[IvfOps.BucketCap]] by
-    * vec_id rank (the bucketPairs skew rule — a degenerate cell must not
-    * become an unbounded per-row fold; members past the cap escape the
-    * gate exactly as they escape q_dedup_embed's capped pair join,
-    * documented, and the spec pins the in-cap contract). STATIC side —
-    * windows and aggregation are fine here; only the probe side streams.
+    * probe: one row per cid carrying its members as a sorted (vec_id, v,
+    * nrm = |v|) array — each member's norm computed once here, not per
+    * probing row — membership capped at [[IvfOps.BucketCap]] by vec_id rank
+    * (the bucketPairs skew rule — a degenerate cell must not become an
+    * unbounded per-row fold; members past the cap escape the gate exactly
+    * as they escape q_dedup_embed's capped pair join, documented, and the
+    * spec pins the in-cap contract). STATIC side — windows and aggregation
+    * are fine here; only the probe side streams.
     */
   private[graft] def semanticGateCellPack(corpus: DataFrame,
                                           cents: DataFrame): DataFrame = {
@@ -358,37 +359,40 @@ object SimilarityQueries {
       .withColumn("__rn", row_number().over(byCell))
       .filter(col("__rn") <= IvfOps.BucketCap)
       .groupBy("cid")
-      .agg(sort_array(collect_list(struct(col("vec_id"), col("v"))))
-        .as("members"))
+      .agg(sort_array(collect_list(struct(col("vec_id"), col("v"),
+        sqrt(dot_product(col("v"), col("v"))).as("nrm")))).as("members"))
   }
+
+  /** The memoized centroid Seqs as literal centroid blocks. */
+  private[graft] def fixtureIvfBlock(s: SparkSession, d: String): Column =
+    IvfOps.centroidLiteral(fixtureIvfCentroidSeq(s, d))
+  private[graft] def trainedIvfBlock(s: SparkSession, d: String): Column =
+    IvfOps.centroidLiteral(trainedIvfCentroidSeq(s, d))
 
   /** The STREAMING SEMANTIC dedup gate — "drop today's crawl rows whose
     * embedding near-duplicates the corpus" (SemDeDup's question asked per
     * micro-batch), completing the gate family's fourth dedup lens beside
     * exact hash (s_dedup_gate), MinHash bands (s_fuzzy_gate), and
     * benchmark n-grams (s_contamination_gate). Stateless by the fuzzy
-    * gate's construction: the k trained centroids ship as LITERAL vectors
-    * (driver-resident model state, the assignStatic device), so each
-    * row's 2 probe cells compute as pure codegen'd projections — COLUMNS,
-    * never exploded rows — then one stream-static equi LEFT join per
-    * probe column attaches the probed cell's packed members
-    * ([[semanticGateCellPack]]) and a per-row HOF fold takes the best
-    * cosine over ≤ BucketCap candidates (ties → lowest vec_id; the row
-    * itself excluded). No aggregation, no window, no state — the
-    * identical plan runs under readStream append (StreamingSpec pins
-    * two-micro-batch bit-equality to the batch twin and zero false
-    * negatives for exact-duplicate vectors whose twin is CAP-RESIDENT
-    * in its cell — the duplicate shares its twin's cell by determinism
-    * of the assignment, but a twin ranked past BucketCap in a
-    * degenerate cell escapes the pack and therefore the gate, exactly
-    * as it escapes q_dedup_embed's capped pair join; the guarantee is
-    * in-cap, not unconditional — ADVICE r15).
+    * gate's construction: each row's 2 probe cells come from
+    * [[withProbedCells]] as COLUMNS (never exploded rows), then a per-row
+    * HOF fold takes the best cosine over ≤ BucketCap candidates (ties →
+    * lowest vec_id; the row itself excluded; a zero-norm query or member
+    * scores the -2 floor, never a neighbour). No aggregation, no window, no
+    * state — the identical plan runs under readStream append (StreamingSpec
+    * pins two-micro-batch bit-equality to the batch twin and zero false
+    * negatives for exact-duplicate vectors whose twin is CAP-RESIDENT in
+    * its cell — the duplicate shares its twin's cell by determinism of the
+    * assignment, but a twin ranked past BucketCap in a degenerate cell
+    * escapes the pack and therefore the gate, exactly as it escapes
+    * q_dedup_embed's capped pair join; the guarantee is in-cap, not
+    * unconditional — ADVICE r15).
     *
     * Emits (vec_id, nn_vec_id, sim_e9, is_semdup) — null nn/sim when the
     * probed cells hold no candidate. is_semdup = sim_e9 ≥ [[SemDupThrE9]],
     * the q_dedup_embed τ, so the gate's verdict is the batch family's.
     *
-    * Shape at 100 TB: per incoming row the work is k literal dot
+    * Shape at 100 TB: per incoming row the work is k centroid dot
     * products + 2 joins on a cell id + a ≤ 2·BucketCap-element fold; the
     * static side is the IVF-packed corpus (the persisted index layer in
     * production), shuffled once per micro-batch at most — never the
@@ -396,57 +400,21 @@ object SimilarityQueries {
     */
   /** The streaming probe scaffold [[semanticGateRows]] and
     * [[annServeRows]] share: per row, the 2 nearest-of-`cents` cell ids
-    * as pure-projection COLUMNS (centroids as literals — the
-    * assignStatic device; never exploded rows), then one stream-static
-    * equi LEFT join per probe column attaching the probed cell's packed
-    * member array from `cellPack`. Emits (vec_id, v, __ms_0, __ms_1).
+    * as pure-projection COLUMNS (the centroids as one literal block —
+    * driver-resident model state, no subquery, no generator, so the plan
+    * is stream-safe), then one stream-static equi LEFT join per probe
+    * column attaching the probed cell's packed member array from
+    * `cellPack`. Emits (vec_id, v, __qn, __ms_0, __ms_1), __qn = |v|.
     */
   private def withProbedCells(batch: DataFrame,
-      cents: Seq[(Long, Array[Double])], cellPack: DataFrame,
-      // test seam: GateDispatchSpec forces each form on BOTH sides of
-      // the bound to pin their row equality; production callers leave it
-      // None and take the k-dispatch
-      forceBlock: Option[Boolean] = None): DataFrame = {
-    // k-DISPATCH (r19, VERDICT r18 #1 — the assignAuto rule applied to
-    // the streaming gates, the last literal-centroid path): within
-    // IvfOps.StaticKMax the per-centroid cosines are k codegen'd literal
-    // expressions (every fixture path, k=8); PAST it that expression
-    // tree outgrows whole-stage codegen (generated-method size limits →
-    // interpreted per-row eval, k×dim literals in every task binary —
-    // the 4.2→62.6 s cliff the r18 scale stress measured on the batch
-    // twin). Large models instead ship as ONE literal array-of-structs
-    // VALUE — centroids are DATA, scored by a single transform() lambda
-    // over a runtime array, so k grows the array, never the plan. Both
-    // forms are pure projections (stream-safe, no subquery, no join) and
-    // compute the identical doubles: same dot_product, same driver-side
-    // cnrm, same nanvl floor (GateDispatchSpec pins row equality on both
-    // sides of the bound).
-    val scored =
-      if (!forceBlock.getOrElse(cents.size > graft.api.IvfOps.StaticKMax))
-        array(cents.map { case (cid, cv) =>
-          val cnrm = math.sqrt(cv.map(x => x * x).sum)
-          struct(nanvl(dot_product(col("v"), lit(cv)) /
-                         (col("__nrm") * lit(cnrm)), lit(-2d)).as("csim"),
-                 lit(-cid).as("negcid"))
-        }: _*)
-      else {
-        val centArr = typedlit(cents.map { case (cid, cv) =>
-          (cid, cv.toSeq, math.sqrt(cv.map(x => x * x).sum))
-        })
-        transform(centArr, c =>
-          struct(nanvl(dot_product(col("v"), c.getField("_2")) /
-                         (col("__nrm") * c.getField("_3")), lit(-2d))
-                   .as("csim"),
-                 (-c.getField("_1")).as("negcid")))
-      }
-    val ranked = slice(reverse(array_sort(scored)), 1, 2)
+      cents: Seq[(Long, Array[Double])], cellPack: DataFrame): DataFrame = {
     val keyed = batch
-      .withColumn("__nrm", sqrt(dot_product(col("v"), col("v"))))
-      .withColumn("__ranked", ranked)
-      .select(Seq(col("vec_id"), col("v")) ++
-        (0 until 2).map(p =>
-          (-element_at(col("__ranked"), p + 1).getField("negcid"))
-            .as(s"__cid_$p")): _*)
+      .withColumn("__near",
+        nearest_centroids(col("v"), IvfOps.centroidLiteral(cents), 2))
+      .select(Seq(col("vec_id"), col("v"),
+          sqrt(dot_product(col("v"), col("v"))).as("__qn")) ++
+        (0 until 2).map(p => element_at(col("__near"), p + 1)
+          .getField("cid").as(s"__cid_$p")): _*)
     var out = keyed
     for (p <- 0 until 2)
       out = out.join(
@@ -456,15 +424,23 @@ object SimilarityQueries {
     out
   }
 
+  /** A probe row's cosine to cell member `m` behind the IvfOps zero-norm
+    * floor: a zero |v|·|m.v| scores -2 (below any cosine) instead of a
+    * DIVIDE_BY_ZERO under ANSI; any other NaN floors too. */
+  private def memberCosine(m: Column): Column = {
+    val den = col("__qn") * m.getField("nrm")
+    nanvl(when(den > 0, dot_product(col("v"), m.getField("v")) / den)
+            .otherwise(lit(-2d)), lit(-2d))
+  }
+
   /** Empty member-array literal for the null side of the probe joins. */
   private def noMembers: Column =
-    array().cast("array<struct<vec_id:bigint,v:array<double>>>")
+    array().cast("array<struct<vec_id:bigint,v:array<double>,nrm:double>>")
 
   private[graft] def semanticGateRows(batch: DataFrame,
-      cents: Seq[(Long, Array[Double])], cellPack: DataFrame,
-      forceBlock: Option[Boolean] = None): DataFrame = {
+      cents: Seq[(Long, Array[Double])], cellPack: DataFrame): DataFrame = {
     val nilBest = struct(lit(-2d).as("s"), lit(-1L).as("id"))
-    val out = withProbedCells(batch, cents, cellPack, forceBlock)
+    val out = withProbedCells(batch, cents, cellPack)
     // best (cosine, id) over one cell's members: exact same better-rule
     // in the fold and the cross-probe combine — higher sim wins, ties to
     // the lowest id; the probe row itself can never be its own neighbour
@@ -473,13 +449,10 @@ object SimilarityQueries {
       (s > a) || (s === a && cand.getField("id") < acc.getField("id"))
     }
     def bestOf(ms: Column): Column =
-      aggregate(
-        coalesce(ms, array().cast(
-          "array<struct<vec_id:bigint,v:array<double>>>")),
-        nilBest,
+      aggregate(coalesce(ms, noMembers), nilBest,
         (acc, m) => {
-          val sim = nanvl(cosine(col("v"), m.getField("v")), lit(-2d))
-          val cand = struct(sim.as("s"), m.getField("vec_id").as("id"))
+          val cand = struct(memberCosine(m).as("s"),
+            m.getField("vec_id").as("id"))
           when(m.getField("vec_id") =!= col("vec_id") && better(cand, acc),
                cand).otherwise(acc)
         })
@@ -511,7 +484,7 @@ object SimilarityQueries {
     * readStream append (StreamingSpec pins two-micro-batch bit-equality
     * and the exact-match-at-rank-1 contract).
     *
-    * Shape at 100 TB: per query the work is |cents| literal dot
+    * Shape at 100 TB: per query the work is |cents| centroid dot
     * products + 2 cell-id joins + a ≤ 2·BucketCap fold — the corpus
     * never rescans, and the static side is the same packed IVF index
     * the semantic gate serves. This is the family's SERVING member:
@@ -520,8 +493,8 @@ object SimilarityQueries {
     */
   private[graft] def annServeRows(queries: DataFrame,
       cents: Seq[(Long, Array[Double])], cellPack: DataFrame,
-      k: Int = 3, forceBlock: Option[Boolean] = None): DataFrame = {
-    val out = withProbedCells(queries, cents, cellPack, forceBlock)
+      k: Int = 3): DataFrame = {
+    val out = withProbedCells(queries, cents, cellPack)
     // top-k invariant fold: the accumulator stays SORTED DESCENDING, so
     // a candidate enters only when the list isn't full or it beats the
     // current k-th (one struct comparison) — the insert's
@@ -530,9 +503,9 @@ object SimilarityQueries {
     // (the naive insert-always form measured ~3× the whole query)
     def foldTop(acc0: Column, ms: Column): Column =
       aggregate(coalesce(ms, noMembers), acc0, (acc, m) => {
-        val sim = nanvl(cosine(col("v"), m.getField("v")), lit(-2d))
+        val sim = memberCosine(m)
         val cand = struct(sim.as("s"), (-m.getField("vec_id")).as("nid"))
-        // sim ≤ −1.5 is the NaN sentinel (zero-norm corpus or query
+        // sim ≤ −1.5 is the floor sentinel (zero-norm corpus or query
         // vector — cosine undefined): skip it like the self-match, so a
         // degenerate vector in a sparse cell can never be emitted as a
         // ranked neighbour with sim_e9 = −2e9; a query whose candidates
@@ -769,9 +742,8 @@ object SimilarityQueries {
     * bounded k×dim model state (the modelCache contract). The collect
     * behind each Seq is a Spark job when the model frame is an
     * artifact-served parquet read; memoizing it keeps consumers that
-    * assign via literal codegen ([[IvfOps.assignStatic]] — the
-    * documented at-scale swap for the scalar-subquery centroid block)
-    * from re-paying that job per query run (r18). */
+    * assign against a literal block ([[IvfOps.centroidLiteral]]) from
+    * re-paying that job per query run (r18). */
   private val centroidSeqMemo =
     new graft.api.SessionMemo[Seq[(Long, Array[Double])]]()
 
@@ -803,7 +775,7 @@ object SimilarityQueries {
     * (vector, label), 1×[[Dim]] bounded model state, memoized per
     * (session, dir): consumers inline it with `lit(...)` instead of the
     * uncorrelated scalar subquery, whose execution was one job per query
-    * run injecting the SAME values (r18 — the assignStatic device).
+    * run injecting the SAME values (r18).
     * Exactly one vec-0 row is required, loudly — the subquery form threw
     * on duplicates too (scalar subquery cardinality check). */
   private val qv0Memo = new graft.api.SessionMemo[(Array[Double], Any)]()
@@ -821,11 +793,9 @@ object SimilarityQueries {
     lit(queryRow0(s, d)._1)
 
   /** Driver-resident FIXTURE IVF centroids (vec_id < 8, double-cast) —
-    * the literal form of the fixture centroid block (8×[[Dim]] doubles).
-    * Consumers assign via [[IvfOps.assignStatic]]: codegen'd literal
-    * scoring instead of the scalar-subquery block's one-job-per-query +
-    * interpreted per-row lambda (r18; values bit-identical — same
-    * dot/norm arithmetic, pinned by KMeansIvfSpec). */
+    * the literal form of the fixture centroid block (8×[[Dim]] doubles):
+    * no subquery job per query run, and scores bit-identical to the
+    * scalar-subquery block (same dot/norm arithmetic). */
   private[graft] def fixtureIvfCentroidSeq(s: SparkSession,
       d: String): Seq[(Long, Array[Double])] =
     centroidSeqMemo.get(s, "fxseq", d) {
@@ -1116,19 +1086,15 @@ object SimilarityQueries {
       // centroids and compare per-cluster occupancy shares in exact ppm.
       // A retrained embedder or a shifted corpus shows up as cluster
       // mass moving; |Δppm| ranks the moved clusters first. Shape: ONE
-      // map-side assignment pass (scalar-subquery centroid block), one
+      // map-side assignment pass (literal centroid block), one
       // k×2-bounded keyed aggregation, cohort totals from a conditional
       // rollup of the same tiny table — integer DIV everywhere, no
       // floats past the assignment. Fixture centroids (vec_id < 8) keep
       // the twin hash-checked; the trained path is a centroid swap.
       val e = emb(s, d)
-      // assignStatic over the memoized driver-resident fixture centroids
-      // (r18): literal codegen'd scoring — no per-run scalar-subquery job,
-      // no interpreted per-row lambda; identical scores. No fanOut: the
-      // codegen'd assignment is ~µs/row, so the repartition's 32 task
-      // constants outweighed it (the bm25 r18 note).
-      val asg = IvfOps.assignStatic(e,
-          fixtureIvfCentroidSeq(s, d), nProbe = 1)
+      // No fanOut: the codegen'd assignment is ~µs/row, so the
+      // repartition's 32 task constants outweighed it (the bm25 r18 note).
+      val asg = IvfOps.assign(e, fixtureIvfBlock(s, d), nProbe = 1)
         .select(col("cid"), pmod(col("vec_id"), lit(2L)).as("cohort"))
       val cells = asg.groupBy("cid", "cohort").agg(count(lit(1)).as("n"))
       // cohort totals ride a window over the k×2-BOUNDED cells rollup
@@ -1167,11 +1133,9 @@ object SimilarityQueries {
       // KMeans.fit output (the q_sim_ivf_trained split); fixture
       // centroids (vec_id < 8) keep this twin hash-checked.
       val e = emb(s, d)
-      // assignStatic over memoized fixture centroids (the q_emb_drift r18
-      // note) with the winning cosine kept; no fanOut — codegen'd
-      // assignment, µs/row
-      val asg = IvfOps.assignStatic(e,
-          fixtureIvfCentroidSeq(s, d), nProbe = 1, keepScore = true)
+      // the winning cosine kept; no fanOut (the q_emb_drift note)
+      val asg = IvfOps.assign(e, fixtureIvfBlock(s, d), nProbe = 1,
+          keepScore = true)
         .select(col("vec_id"), col("cid"),
           floor(col("csim") * 1e9).cast("long").as("cos_e9"))
       asg.groupBy("cid")
@@ -1418,10 +1382,8 @@ object SimilarityQueries {
       val e = emb(s, d).select("vec_id", "v")
       val qs = e.filter(col("vec_id") < 10)
         .select(col("vec_id").as("q_id"), col("v").as("qv"))
-      // annTopKStatic over the memoized fixture centroids (r18 — the
-      // q_emb_drift note): both assignment passes are literal codegen
-      IvfOps.annTopKStatic(e, "vec_id", "v", qs, "q_id", "qv",
-          fixtureIvfCentroidSeq(s, d), k = 3)
+      IvfOps.annTopK(e, "vec_id", "v", qs, "q_id", "qv",
+          fixtureIvfBlock(s, d), k = 3)
         .select(col("q_id"), col("vec_id"), floor9(col("sim")).as("sim"),
                 col("rnk"))
         .orderBy("q_id", "rnk")
@@ -1469,11 +1431,8 @@ object SimilarityQueries {
       val e = emb(s, d)
       val index = ivfpqIndex(s, d, trained = false)
       val q = e.filter(col("vec_id") === 0)
-      // probe assignment via assignStatic over the memoized fixture
-      // centroids; the query vector inlines as a literal (r18 — the
-      // queryRow0 device)
-      val probes = IvfOps.assignStatic(q, fixtureIvfCentroidSeq(s, d),
-          nProbe = 2)
+      // the query vector inlines as a literal (r18 — the queryRow0 device)
+      val probes = IvfOps.assign(q, fixtureIvfBlock(s, d), nProbe = 2)
         .select(col("cid").as("probe_cid"))
       val shortlist = index
         .join(broadcast(probes), col("cid") === col("probe_cid"))
@@ -1528,11 +1487,8 @@ object SimilarityQueries {
       val index = ivfpqIndex(s, d, trained = true)
         .select("vec_id", "cid", "rvfull")
       val q = e.filter(col("vec_id") === 0)
-      // probe assignment via assignAuto over the memoized trained
-      // centroid Seq (k is corpus-sized — the StaticKMax dispatch);
       // query vector as a literal (r18)
-      val probes = IvfOps.assignAuto(q, trainedIvfCentroidSeq(s, d),
-          nProbe = 2)
+      val probes = IvfOps.assign(q, trainedIvfBlock(s, d), nProbe = 2)
         .select(col("cid").as("probe_cid"))
       val shortlist = index
         .join(broadcast(probes), col("cid") === col("probe_cid"))
@@ -1564,9 +1520,8 @@ object SimilarityQueries {
       val e = emb(s, d)
       val qs = e.filter(col("vec_id") < 10)
         .select(col("vec_id").as("q_id"), col("v").as("qv"))
-      // annTopKStatic over the memoized trained centroid Seq (r18)
-      IvfOps.annTopKStatic(e, "vec_id", "v", qs, "q_id", "qv",
-          trainedIvfCentroidSeq(s, d), k = 3)
+      IvfOps.annTopK(e, "vec_id", "v", qs, "q_id", "qv",
+          trainedIvfBlock(s, d), k = 3)
         .select(col("q_id"), col("rnk"), col("vec_id"),
                 floor9(col("sim")).as("sim"))
         .orderBy("q_id", "rnk")
@@ -1582,13 +1537,10 @@ object SimilarityQueries {
       // unlike the crossJoin + Window.partitionBy(vec_id) row_number form,
       // which shuffled the k×-expanded corpus just for a per-row argmax.
       val e = emb(s, d)
-      // both assignments ride assignStatic over the memoized fixture
-      // centroids (r18 — the q_emb_drift note): literal codegen, no
-      // subquery jobs, identical scores
-      val fx = fixtureIvfCentroidSeq(s, d)
-      val assigned = IvfOps.assignStatic(e, fx, nProbe = 1)
+      val fx = fixtureIvfBlock(s, d)
+      val assigned = IvfOps.assign(e, fx, nProbe = 1)
       // the query's 2 nearest centroids, exploded to rows for an equi-join
-      val probes = IvfOps.assignStatic(
+      val probes = IvfOps.assign(
         e.filter(col("vec_id") === 0), fx, nProbe = 2)
         .select(col("cid").as("probe_cid"))
       assigned

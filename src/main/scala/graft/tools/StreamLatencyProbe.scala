@@ -82,16 +82,14 @@ object StreamLatencyProbe {
   }
 
   /** `SPARK_GRAFT_STREAM_K`, checked before any Spark work: unset is None;
-    * a value must be an integer above [[graft.api.IvfOps.StaticKMax]],
-    * because the drill exists to serve the gates past the literal form.
+    * a value must be an integer k ≥ 1 (the number of centroids to fit).
     */
   private[graft] def streamK(raw: Option[String]): Option[Int] = raw.map { v =>
-    val max = graft.api.IvfOps.StaticKMax
     v.trim.toIntOption match {
-      case Some(k) if k > max => k
+      case Some(k) if k >= 1 => k
       case Some(k) => throw new IllegalArgumentException(
-        s"SPARK_GRAFT_STREAM_K=$k: the engaged-k drill needs k > " +
-        s"IvfOps.StaticKMax ($max); unset it for the fixture's own k")
+        s"SPARK_GRAFT_STREAM_K=$k: the drill needs k >= 1 centroids; " +
+        "unset it for the fixture's own k")
       case None => throw new IllegalArgumentException(
         s"SPARK_GRAFT_STREAM_K='$v' is not an integer")
     }
@@ -153,12 +151,10 @@ object StreamLatencyProbe {
       .filter(col("doc_id") % 50 =!= 0)
     corpusSigs.count()
     // SPARK_GRAFT_STREAM_K (r19, VERDICT r18 #1): the fixture's sized k
-    // resolves to 8, so the gates' k-dispatch never leaves the literal
-    // form in a fixture run. Setting this to a k past IvfOps.StaticKMax
-    // fits that many centroids over the fixture embeddings and serves the
-    // two vector gates from THEM — the engaged-k latency drill for the
-    // block route (centroids as data), without needing a corpus-sized
-    // fixture. Unset = the exact historical probe.
+    // resolves to 8. Setting this fits that many centroids over the
+    // fixture embeddings and serves the two vector gates from THEM — the
+    // engaged-k latency drill, without needing a corpus-sized fixture.
+    // Unset = the exact historical probe.
     val (cents, pack) = kOverride match {
       case None =>
         (simq.trainedIvfCentroidSeq(spark, sfDir),

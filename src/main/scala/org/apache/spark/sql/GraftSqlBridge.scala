@@ -22,4 +22,9 @@ object GraftSqlBridge {
   def scalarSubquery(df: Dataset[Row]): Column =
     toColumn(catalyst.expressions.ScalarSubquery(
       df.asInstanceOf[classic.Dataset[Row]].queryExecution.analyzed))
+
+  /** The exception `raise_error(message)` throws (private[spark]). */
+  def userRaisedError(message: String): RuntimeException =
+    new org.apache.spark.SparkRuntimeException("USER_RAISED_EXCEPTION",
+      Map("errorMessage" -> message))
 }

@@ -12,46 +12,120 @@ import graft.functions.expressions.VectorFunctions.cosine_sim
   */
 class KMeansIvfSpec extends SparkSpec {
 
-  test("assignStatic (codegen literals) ≡ assign (scalar-subquery block)") {
-    val e = Tables.embeddings(spark, sf)
-      .select(col("vec_id"),
-        transform(col("embedding"), x => x.cast("double")).as("v"))
-    val centsDf = e.filter(col("vec_id") < 8)
-      .select(col("vec_id").as("cid"), col("v").as("cv"))
-    val dyn = IvfOps.assign(e, IvfOps.centroidBlock(centsDf, "cid", "cv"),
-        nProbe = 2)
-      .select("vec_id", "cid").collect()
-      .map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
-    val cents = centsDf.collect()
-      .map(r => (r.getLong(0), r.getSeq[Double](1).toArray)).toSeq
-    val stat = IvfOps.assignStatic(e, cents, nProbe = 2)
-      .select("vec_id", "cid").collect()
-      .map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
-    assert(dyn == stat)
+  /** The scoring form IvfOps.assign used before the NearestCentroids
+    * kernel — an interpreted transform() over the scalar-subquery block,
+    * ranked by one struct sort (array_max at nProbe 1) — kept here as the
+    * kernel's reference: (vec_id, [(csim, cid)] best first). */
+  private def referenceNearest(vecs: org.apache.spark.sql.DataFrame,
+      block: org.apache.spark.sql.Column, nProbe: Int) = {
+    import graft.functions.expressions.VectorFunctions.dot_product
+    val scored = transform(col("__cents"), c =>
+      struct(nanvl(when(col("__nrm") * c.getField("cnrm") > 0,
+                     dot_product(col("v"), c.getField("cv")) /
+                       (col("__nrm") * c.getField("cnrm")))
+                   .otherwise(lit(-2d)), lit(-2d)).as("csim"),
+             (-c.getField("cid")).as("negcid")))
+    val ranked =
+      if (nProbe == 1) array(array_max(scored))
+      else slice(reverse(array_sort(scored)), 1, nProbe)
+    vecs.withColumn("__cents", block)
+      .withColumn("__nrm", sqrt(dot_product(col("v"), col("v"))))
+      .select(col("vec_id"), transform(ranked, p => struct(
+        p.getField("csim").as("csim"), (-p.getField("negcid")).as("cid")))
+        .as("near"))
   }
 
-  test("assignAuto dispatches by k and both routes agree (r18: the " +
-       "StaticKMax cliff — literal codegen within the bound, block past)") {
+  /** (vec_id, [(csim bits, cid)]) rows, sorted: exact to the bit. */
+  private def nearRows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.collect().map { r =>
+      val near = r.getSeq[org.apache.spark.sql.Row](1).map { p =>
+        val sim = if (p.isNullAt(0)) "null"
+          else java.lang.Double.doubleToRawLongBits(p.getDouble(0)).toString
+        s"($sim,${p.get(1)})"
+      }
+      s"${r.getLong(0)}:${near.mkString(",")}"
+    }.sorted.toSeq
+
+  private def withConf[T](kv: (String, String)*)(f: => T): T = {
+    val old = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kv.foreach { case (k, v) => spark.conf.set(k, v) }
+    try f finally old.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  test("NearestCentroids ≡ the transform-scored reference, bit for bit, " +
+       "at k = 8 and 24 and nProbe 1-3, codegen'd and interpreted, from " +
+       "a scalar-subquery block and from a literal block") {
+    import spark.implicits._
+    import graft.functions.expressions.VectorFunctions.nearest_centroids
     val e = Tables.embeddings(spark, sf)
       .select(col("vec_id"),
         transform(col("embedding"), x => x.cast("double")).as("v"))
-    // a >StaticKMax centroid set (every vec_id < 24 vector) forces the
-    // block route; the ≤StaticKMax fixture set takes the literal route —
-    // both must equal the always-block assign() on the same centroids
-    for (kCut <- Seq(8L, IvfOps.StaticKMax + 8L)) {
-      val centsDf = e.filter(col("vec_id") < kCut)
-        .select(col("vec_id").as("cid"), col("v").as("cv"))
-      val cents = centsDf.collect()
+    val dim = e.select(size(col("v"))).head().getInt(0)
+    val v1 = e.filter(col("vec_id") === 1).select("v").head().getSeq[Double](0)
+    // the degenerate rows: a zero-norm vector, a null vector, a ragged
+    // vector, a vector with a null element, and one exactly on the tied
+    // centroids' direction
+    val odd = Seq[(Long, Option[Seq[Option[Double]]])](
+        (-1L, Some(Seq.fill(dim)(Some(0d)))), (-2L, None),
+        (-3L, Some(Seq.fill(dim - 1)(Some(0.5)))),
+        (-4L, Some(Some(1d) +: Seq.fill(dim - 1)(None: Option[Double]))),
+        (-5L, Some(v1.map(Some(_)))))
+      .toDF("vec_id", "v")
+    val vecs = e.unionByName(odd)
+    for (k <- Seq(8, 24)) {
+      // cid k-2 duplicates cid 1 (tied scores); cid k-1 is all zeros
+      val base = e.filter(col("vec_id") < k - 2).collect()
         .map(r => (r.getLong(0), r.getSeq[Double](1).toArray)).toSeq
-      val auto = IvfOps.assignAuto(e, cents, nProbe = 2)
-        .select("vec_id", "cid").collect()
-        .map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
-      val block = IvfOps.assign(e, IvfOps.centroidBlock(centsDf, "cid", "cv"),
-          nProbe = 2)
-        .select("vec_id", "cid").collect()
-        .map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
-      assert(auto == block, s"kCut=$kCut")
+      val cents = base ++ Seq(((k - 2).toLong, v1.toArray),
+                              ((k - 1).toLong, Array.fill(dim)(0d)))
+      val centsDf = cents.map { case (c, v) => (c, v.toSeq) }.toDF("cid", "cv")
+      val block = IvfOps.centroidBlock(centsDf, "cid", "cv")
+      for (nProbe <- 1 to 3) {
+        val want = nearRows(referenceNearest(vecs, block, nProbe))
+        // the ragged row: only the zero-norm centroid (floor -2) outranks
+        // its null scores, which then tie to the lowest cid
+        if (nProbe >= 2) assert(
+          want.find(_.startsWith("-3:")).get.contains(s",${k - 1}),(null,0)"))
+        for (mode <- Seq("CODEGEN_ONLY", "NO_CODEGEN")) withConf(
+            "spark.sql.codegen.factoryMode" -> mode,
+            "spark.sql.codegen.wholeStage" -> (mode == "CODEGEN_ONLY").toString) {
+          for ((src, b) <- Seq("block" -> block,
+                               "literal" -> IvfOps.centroidLiteral(cents))) {
+            val got = nearRows(vecs.select(col("vec_id"),
+              nearest_centroids(col("v"), b, nProbe).as("near")))
+            assert(got == want, s"k=$k nProbe=$nProbe $mode $src")
+          }
+        }
+      }
+      // the tie goes to the lower cid and the zero-norm centroid scores
+      // the floor: the row on cid 1's direction probes cid 1, then k-2
+      val ref = nearRows(referenceNearest(vecs, block, 2))
+      val onDir = ref.find(_.startsWith("-5:")).get
+      assert(onDir.matches(s"-5:\\([0-9-]+,1\\),\\([0-9-]+,${k - 2}\\)"),
+        onDir)
+      // assign is the kernel exploded to one row per probe
+      def probeRows(df: org.apache.spark.sql.DataFrame) = df.collect()
+        .map(r => s"${r.getLong(0)}:${r.get(1)}:${r.get(2)}").sorted.toSeq
+      val asg = IvfOps.assign(vecs, IvfOps.centroidLiteral(cents), nProbe = 2,
+          keepScore = true)
+      assert(probeRows(asg.select("vec_id", "cid", "csim")) ==
+        probeRows(referenceNearest(vecs, block, 2)
+          .select(col("vec_id"), explode(col("near")).as("p"))
+          .select("vec_id", "p.cid", "p.csim")), s"assign k=$k")
     }
+  }
+
+  test("assign fails loudly on an empty centroid block") {
+    import spark.implicits._
+    val vecs = Seq((1L, Seq(1d, 0d))).toDF("vec_id", "v")
+    val empty = Seq.empty[(Long, Seq[Double])].toDF("cid", "cv")
+    val err = intercept[Exception](
+      IvfOps.assign(vecs, IvfOps.centroidBlock(empty, "cid", "cv"), 1)
+        .collect())
+    assert(err.getMessage.contains("empty centroid block"), err.getMessage)
   }
 
   test("corpus-sized coarse k (VERDICT r17 #1): the policy clamps " +
@@ -124,7 +198,8 @@ class KMeansIvfSpec extends SparkSpec {
       val qs = e.filter(col("vec_id") % 440 === 0)
         .select(col("vec_id").as("q_id"), col("v").as("qv"))
       val got = graft.api.IvfOps
-        .annTopK(e, "vec_id", "v", qs, "q_id", "qv", cents, k = 3)
+        .annTopK(e, "vec_id", "v", qs, "q_id", "qv",
+          IvfOps.centroidBlock(cents, "cid", "cv"), k = 3)
         .select("q_id", "vec_id").collect()
         .map(r => (r.getLong(0), r.getLong(1)))
         .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
@@ -202,7 +277,8 @@ class KMeansIvfSpec extends SparkSpec {
     val qs = e.filter(col("vec_id") < 10)
       .select(col("vec_id").as("q_id"), col("v").as("qv"))
 
-    val ann = IvfOps.annTopK(e, "vec_id", "v", qs, "q_id", "qv", cents, k = 3)
+    val ann = IvfOps.annTopK(e, "vec_id", "v", qs, "q_id", "qv",
+        IvfOps.centroidBlock(cents, "cid", "cv"), k = 3)
       .select("q_id", "vec_id").collect()
       .groupBy(_.getLong(0)).view
       .mapValues(_.map(_.getLong(1)).toSet).toMap
@@ -298,7 +374,7 @@ class KMeansIvfSpec extends SparkSpec {
 
     // IVF through the library entry point (corpus 2-probe, query 3-probe)
     val ivf = IvfOps.annTopK(e, "vec_id", "v", qs, "q_id", "qv",
-        cents, k = 5)
+        IvfOps.centroidBlock(cents, "cid", "cv"), k = 5)
       .select("q_id", "vec_id").collect()
       .groupBy(_.getLong(0)).view
       .mapValues(_.map(_.getLong(1)).toSet).toMap
@@ -439,7 +515,7 @@ class KMeansIvfSpec extends SparkSpec {
     // vec_id 7 is a coincidence, not a self-pair
     val qs = Seq((7L, Seq(1.0, 0.1))).toDF("q_id", "qv")
     val got = IvfOps.annTopK(corpus, "vec_id", "v", qs, "q_id", "qv",
-        cents, k = 3, excludeSelf = false)
+        IvfOps.centroidBlock(cents, "cid", "cv"), k = 3, excludeSelf = false)
       .orderBy("rnk").select("vec_id").as[Long].collect().toSeq
     // corpus 7 retrievable; the zero vector (NaN cosine → -2 floor)
     // ranks last instead of NaN-first
@@ -447,7 +523,7 @@ class KMeansIvfSpec extends SparkSpec {
     // the default keeps the queries-are-corpus-rows posture: the
     // id-equal pair is excluded
     val self = IvfOps.annTopK(corpus, "vec_id", "v", qs, "q_id", "qv",
-        cents, k = 3)
+        IvfOps.centroidBlock(cents, "cid", "cv"), k = 3)
       .orderBy("rnk").select("vec_id").as[Long].collect().toSeq
     assert(self == Seq(8L, 9L), self.toString)
   }
