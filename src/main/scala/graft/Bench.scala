@@ -10,7 +10,7 @@ import scala.util.control.NonFatal
   * distinguish host steal from a real regression or a cache eviction. This
   * version makes every alternative provable from the artifact alone:
   *
-  *  - each query runs N≥3 times (SPARK_GRAFT_BENCH_N, default 3); the
+  *  - each query runs N times (SPARK_GRAFT_BENCH_N, default 3); the
   *    per-query record keeps every wall time AND the process-CPU time of
   *    every run. Host steal has a signature — wall inflates while CPU stays
   *    flat (the work is constant; the host just schedules it thinner) — a
@@ -203,38 +203,9 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val nRuns = math.max(1,
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_N", "3").toInt)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // status-store retention caps: even with the UI off, AppStatusListener
-      // and SQLAppStatusListener retain per-job/stage/task rows and up to
-      // 1000 SQLExecutionUIData entries (each holding the FULL physical-plan
-      // description + per-metric maps). At 195 queries x 3 runs x several
-      // AQE jobs each, that is hundreds of MB of LIVE driver heap by the
-      // sweep tail — the r12 in-sweep inflation's largest non-garbage
-      // contributor. A bench run needs none of it.
-      .config("spark.sql.ui.retainedExecutions", "8")
-      .config("spark.ui.retainedJobs", "100")
-      .config("spark.ui.retainedStages", "100")
-      .config("spark.ui.retainedTasks", "1000")
-      // generated-class cache (static conf — builder only): the default
-      // 100 entries thrash across a 216-query sweep (each query carries
-      // several codegen fragments), so every query's run 1 recompiled
-      // fragments the warmup had already compiled — probe-measured 31
-      // janino compilations on a single fresh q_text_bm25 build at the
-      // default vs 0 at 4096, exec 2.8 s → 1.65 s (r18). A production
-      // driver serving many query shapes wants the same headroom; the
-      // value is shape-count-scaled, not core-count- or data-scaled.
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = GraftSession.cpus
+    val nRuns = GraftSession.envInt("SPARK_GRAFT_BENCH_N", 3)
+    val spark = GraftSession.builder(cpus).getOrCreate()
     // fail loudly on a misspelled key: a typo'd arg would otherwise
     // filter to nothing and print a "successful" zero-query record
     val unknown = args.filterNot(SparkEntry.queries.keySet)
@@ -274,7 +245,7 @@ object Bench {
           "q_stats_outliers", "q_text_bm25", "q_text_heavyhitters",
           "q_dedup_typos",
           // round-12 additions whose first run otherwise pays its own
-          // plan/codegen warm-in (the covariance bench-vs-PlanProbe gap:
+          // plan/codegen warm-in (the covariance bench-vs-probe gap:
           // execution 0.05-0.09 s warm, bench min ~0.75 s on a
           // freshly-built plan)
           "q_stats_covariance", "q_emb_covariance", "q_sim_hybrid",
@@ -597,10 +568,9 @@ object Bench {
     val detail = new StringBuilder
     detail.append("{\n")
       .append(s""" "metric":"total","value":${r3(total)},"unit":"sec",""")
-      // esc + quoted cpus: a quote/backslash in SPARK_GRAFT_SF_DIR or a
-      // non-numeric SPARK_GRAFT_CPUS must not break the parseable-JSON
-      // capture contract (r18 self-review)
-      .append(s""""sf":"${esc(sfDir)}","n_runs":$nRuns,"cpus":"${esc(cpus)}",""").append("\n")
+      // esc: a quote/backslash in SPARK_GRAFT_SF_DIR must not break the
+      // parseable-JSON capture contract (r18 self-review)
+      .append(s""""sf":"${esc(sfDir)}","n_runs":$nRuns,"cpus":"$cpus",""").append("\n")
       .append(s""" "bench_wall_sec":${r3(benchWall)},"bench_cpu_sec":${r3(benchCpu)},"load_avg":${r3(loadAvg)},""").append("\n")
       .append(s""" "gc_total_sec":${r3(gcTotal)},"hygiene_sec":${r3(hygieneNs / 1e9)},"regressed":$regJson,""").append("\n")
       .append(s""" "fixed_cost":$fixedCostJson,""").append("\n")
@@ -635,7 +605,7 @@ object Bench {
     // run clobbered the 32-core record. One durable file per
     // SPARK_GRAFT_CPUS value keeps both; each write fails on its own.
     val bytes = detail.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-    for (name <- Seq("bench.json", s"bench_c${cpuSlug(cpus)}.json")) try {
+    for (name <- Seq("bench.json", s"bench_c${cpuSlug(cpus.toString)}.json")) try {
       val out = java.nio.file.Paths.get("target", name)
       java.nio.file.Files.createDirectories(out.getParent)
       java.nio.file.Files.write(out, bytes)
@@ -671,7 +641,7 @@ object Bench {
       .append(s""","bench_cpu_sec":${r3(benchCpu)},"load_avg":${r3(loadAvg)}""")
       .append(s""","gc_total_sec":${r3(gcTotal)}""")
       .append(s""","cached_rdds":${storage.size},"partially_cached":$partial""")
-      .append(s""","cpus":"${esc(cpus)}","sf":"${esc(sfDir)}"}""")
+      .append(s""","cpus":"$cpus","sf":"${esc(sfDir)}"}""")
     println(compact.toString)
   }
 }

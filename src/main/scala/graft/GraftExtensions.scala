@@ -9,7 +9,7 @@ import graft.functions.expressions.{BigramHashCounts, C4CleanStats, C4CleanToken
   * expressions for the SQL surface, so `spark.sql("SELECT dot_product(a,b)")`
   * works anywhere the Scala Column API does.
   *
-  *   SparkSession.builder().withExtensions(new GraftExtensions) ...
+  *   GraftSession.builder(cpus).withExtensions(new GraftExtensions) ...
   *   // or: spark.conf spark.sql.extensions=graft.GraftExtensions
   *   // or on a live session: GraftExtensions.register(spark)
   */

@@ -1,6 +1,6 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import scala.util.control.NonFatal
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -14,24 +14,14 @@ object Verify {
     val unknown = only.diff(SparkEntry.queries.keySet)
     require(unknown.isEmpty,
       s"unknown query key(s): ${unknown.toSeq.sorted.mkString(", ")}")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // events.parquet is TIMESTAMP(NANOS): read as ns-Long (Tables.events)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.builder(GraftSession.cpus).getOrCreate()
     new java.io.File(outDir).mkdirs()
     // register + ANALYZE the fixture tables so stats consumers
     // (q_dedup_bloom's catalog-sized sketch) exercise the production
     // zero-pre-scan path in the correctness run too (a failure must not
     // zero the round: queries fall back to their count() path)
     try graft.api.CatalogOps.registerFixture(spark, sfDir)
-    catch { case t: Throwable =>
+    catch { case NonFatal(t) =>
       System.err.println(s"[verify] fixture catalog registration failed " +
         s"(stats-free fallback paths still run): $t")
     }
@@ -40,7 +30,7 @@ object Verify {
       .foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
+      catch { case NonFatal(e) =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
         // a PREVIOUS run's dump for this key must not survive into a
         // re-used outDir — the DuckDB compare would read it and report

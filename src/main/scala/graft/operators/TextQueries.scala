@@ -1296,10 +1296,10 @@ object TextQueries {
   }
 
   /** Holdout AUC of the trained gate against the heuristic labels on the
-    * doc_id % 5 == 0 split the fit never saw — the LogRegSpec gate,
-    * shared with the LogitProbe dev harness. Collects only the
-    * holdout-sized (score, label) pairs (evaluation scale, not corpus
-    * scale — the q_dedup_audit sampled-ground-truth posture). */
+    * doc_id % 5 == 0 split the fit never saw — the LogRegSpec gate.
+    * Collects only the holdout-sized (score, label) pairs (evaluation
+    * scale, not corpus scale — the q_dedup_audit sampled-ground-truth
+    * posture). */
   private[graft] def trainedQualityHoldoutAuc(s: SparkSession,
                                               d: String): Double = {
     val scored = scoreWithWeights(qualityFeatures(s, d),

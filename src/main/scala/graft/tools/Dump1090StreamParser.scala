@@ -4,6 +4,7 @@ import scala.util.control.NonFatal
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import graft.GraftSession
 import graft.streaming.{StreamingOps, TransactionalJdbcSink}
 
 /** CLI parity with the reference's entry point
@@ -133,11 +134,11 @@ object Dump1090StreamParser {
 
   def main(argv: Array[String]): Unit = {
     val c = parseArgs(argv.toIndexedSeq)
-    val spark = SparkSession.builder()
+    // the engine's session at 32 shuffle partitions, deployed where
+    // SPARK_MASTER points (all local cores by default)
+    val spark = GraftSession.builder(32)
       .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
       .appName("dump1090-stream-parser")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
       .getOrCreate()
     // R11: lifetime totals via listener — recentProgress is a ring buffer
     // capped at numRecentProgressUpdates and undercounts long sessions

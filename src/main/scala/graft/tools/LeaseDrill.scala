@@ -2,6 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.GraftSession
 import graft.api.IndexArtifacts
 
 /** TWO-PROCESS lease contention drill (VERDICT r17 #3): the cross-JVM
@@ -41,17 +42,9 @@ import graft.api.IndexArtifacts
   */
 object LeaseDrill {
 
-  private def session(wh: String, app: String): SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName(app)
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.warehouse.dir", wh)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  /** Parent and child sessions share the drill's warehouse. */
+  private def session(wh: String): SparkSession = GraftSession.builder(4)
+    .config("spark.sql.warehouse.dir", wh).getOrCreate()
 
   /** The drill layer: k → k·10 off a parquet dir of longs — trivially
     * re-derivable, so every assertion is a closed-form check. */
@@ -70,7 +63,7 @@ object LeaseDrill {
 
   def main(args: Array[String]): Unit = args.toList match {
     case "worker" :: wh :: src :: table :: rounds :: Nil =>
-      val s = session(wh, "lease-drill-worker")
+      val s = session(wh)
       val rng = new scala.util.Random(7)
       for (i <- 1 to rounds.toInt) {
         val (df, how) = serve(s, table, src)
@@ -81,7 +74,7 @@ object LeaseDrill {
       s.stop()
 
     case "holder" :: wh :: src :: table :: Nil =>
-      val s = session(wh, "lease-drill-holder")
+      val s = session(wh)
       println("HOLDER starting slow serve")
       Console.flush()
       serve(s, table, src, slowMs = 60000L) // killed long before this ends
@@ -128,7 +121,7 @@ object LeaseDrill {
       .createTempDirectory("leasedrill_wh").toString
     val src = java.nio.file.Files
       .createTempDirectory("leasedrill_src").toString + "/keys.parquet"
-    val s = session(wh, "lease-drill-parent")
+    val s = session(wh)
     import s.implicits._
     val results = scala.collection.mutable.ArrayBuffer.empty[String]
     def js(k: String, v: String) = results += s""""$k":$v"""

@@ -2,6 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.GraftSession
 import graft.api.{GraftOps, IndexArtifacts}
 import graft.operators.{DedupQueries, SimilarityQueries}
 
@@ -309,18 +310,11 @@ object LifecycleFuzz {
   }
 
   def main(args: Array[String]): Unit = {
-    val seqs = sys.env.getOrElse("SPARK_GRAFT_LIFECYCLE_SEQS", "20").toInt
-    val seed0 = sys.env.getOrElse("SPARK_GRAFT_LIFECYCLE_SEED", "42").toLong
-    val steps = sys.env.getOrElse("SPARK_GRAFT_LIFECYCLE_STEPS", "8").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val seqs = GraftSession.envInt("SPARK_GRAFT_LIFECYCLE_SEQS", 20)
+    val seed0 = GraftSession.envLong("SPARK_GRAFT_LIFECYCLE_SEED", 42L,
+      min = Long.MinValue)
+    val steps = GraftSession.envInt("SPARK_GRAFT_LIFECYCLE_STEPS", 8)
+    val spark = GraftSession.builder(GraftSession.cpus).getOrCreate()
     val t0 = System.nanoTime()
     val out = sweep(spark, seed0 = seed0, seqs = seqs, steps = steps)
     val sec = (System.nanoTime() - t0) / 1e9

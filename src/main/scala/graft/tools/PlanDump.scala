@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.GraftSession
 
 /** Dev harness: dump `.explain("formatted")` for named query keys to
   * files — the optimization rounds' before/after plan evidence.
@@ -8,8 +8,8 @@ import org.apache.spark.sql.SparkSession
   *   sbt "runMain graft.tools.PlanDump plans/r18 before q_stats_ks,q_stats_mwu"
   *
   * Writes <outDir>/<key>_<suffix>.txt per key. Runs under the bench's
-  * session shape (same master/shuffle-partition/AQE confs) so the dumped
-  * initial plan matches what the bench executes.
+  * session ([[graft.GraftSession]]) so the dumped initial plan matches
+  * what the bench executes.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
@@ -17,16 +17,8 @@ object PlanDump {
     val suffix = args(1)
     val keys = args(2).split(",").toSeq.map(_.trim).filter(_.nonEmpty)
     val dir = if (args.length > 3) args(3) else "/root/testdata/sf0.1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.builder(GraftSession.cpus)
+      .config("spark.log.level", "ERROR").getOrCreate()
     val all = graft.SparkEntry.queries
     val unknown = keys.filterNot(all.keySet)
     require(unknown.isEmpty, s"unknown keys: ${unknown.mkString(",")}")

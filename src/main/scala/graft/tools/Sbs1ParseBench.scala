@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.GraftSession
 import graft.sources.Sbs1
 
 /** SBS-1 batch-replay parse throughput (BASELINE.md engineering target:
@@ -14,15 +14,8 @@ import graft.sources.Sbs1
 object Sbs1ParseBench {
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toInt).getOrElse(2000000)
-    val cores = args.lift(1).getOrElse("4")
-
-    val spark = SparkSession.builder()
-      .master(s"local[$cores]")
-      .appName("sbs1-parse-bench")
-      .config("spark.sql.shuffle.partitions", cores)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cores = args.lift(1).map(_.toInt).getOrElse(4)
+    val spark = GraftSession.builder(cores).getOrCreate()
 
     val dir = java.nio.file.Files.createTempDirectory("sbs1bench")
     val file = dir.resolve("lines.txt")

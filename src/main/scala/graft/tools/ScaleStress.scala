@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted, SparkListenerTaskEnd}
 import java.util.concurrent.atomic.AtomicLong
+import graft.GraftSession
 
 /** Scale-stress EVIDENCE for the capped-bucket claims (VERDICT r16 #6):
   * every 100 TB argument in SURVEY §2.6 is analytic — this harness makes
@@ -39,18 +40,11 @@ object ScaleStress {
     String.format(java.util.Locale.ROOT, "%.1f", Double.box(v))
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = GraftSession.cpus
+    val spark = GraftSession.builder(cpus).getOrCreate()
 
-    val nDocs = sys.env.getOrElse("SPARK_GRAFT_STRESS_DOCS", "50000").toLong
-    val nVecs = sys.env.getOrElse("SPARK_GRAFT_STRESS_VECS", "20000").toLong
+    val nDocs = GraftSession.envLong("SPARK_GRAFT_STRESS_DOCS", 50000L)
+    val nVecs = GraftSession.envLong("SPARK_GRAFT_STRESS_VECS", 20000L)
     val dir = new java.io.File("target/scale10").getAbsolutePath
 
     // ---- fixture generation (idempotent: reused when present) ----
@@ -202,7 +196,7 @@ object ScaleStress {
       s""""max_band_bucket_raw":$maxBandBucket,""" +
       s""""band_bucket_cap":${graft.api.IvfOps.BucketCap},""" +
       s""""max_ivf_cell":$maxIvfCell},""" +
-      s""""cpus":"${cpus.replace("\\", "\\\\").replace("\"", "\\\"")}",""" +
+      s""""cpus":"$cpus",""" +
       s""""load_avg":${r1(java.lang.management.ManagementFactory
         .getOperatingSystemMXBean.getSystemLoadAverage)}}"""
     println(line)

@@ -2,6 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import graft.GraftSession
 
 /** Per-micro-batch LATENCY evidence for the streaming serving family
   * (VERDICT r15 #5): the gates are bit-equal to their batch twins
@@ -84,31 +85,16 @@ object StreamLatencyProbe {
   /** `SPARK_GRAFT_STREAM_K`, checked before any Spark work: unset is None;
     * a value must be an integer k ≥ 1 (the number of centroids to fit).
     */
-  private[graft] def streamK(raw: Option[String]): Option[Int] = raw.map { v =>
-    v.trim.toIntOption match {
-      case Some(k) if k >= 1 => k
-      case Some(k) => throw new IllegalArgumentException(
-        s"SPARK_GRAFT_STREAM_K=$k: the drill needs k >= 1 centroids; " +
-        "unset it for the fixture's own k")
-      case None => throw new IllegalArgumentException(
-        s"SPARK_GRAFT_STREAM_K='$v' is not an integer")
-    }
-  }
+  private[graft] def streamK(raw: Option[String]): Option[Int] =
+    raw.map(GraftSession.knob("SPARK_GRAFT_STREAM_K", _).toInt)
 
   def main(args: Array[String]): Unit = {
     val kOverride = streamK(sys.env.get("SPARK_GRAFT_STREAM_K"))
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val nBatches = sys.env.getOrElse("SPARK_GRAFT_STREAM_BATCHES", "12").toInt
-    val rowsPer = sys.env.getOrElse("SPARK_GRAFT_STREAM_ROWS", "256").toInt
+    val nBatches = GraftSession.envInt("SPARK_GRAFT_STREAM_BATCHES", 12)
+    val rowsPer = GraftSession.envInt("SPARK_GRAFT_STREAM_ROWS", 256)
     val warmSkip = 2
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
+    val spark = GraftSession.builder(GraftSession.cpus)
       // recentProgress is a RING BUFFER (default 100): a batch count past
       // it would silently drop the oldest durations and misalign the
       // per-batch (ms, load) zip the record's adjudicability rests on
@@ -116,7 +102,6 @@ object StreamLatencyProbe {
       .config("spark.sql.streaming.numRecentProgressUpdates",
         (nBatches + 16).toString)
       .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
     import org.apache.spark.sql.functions._
 
     val tq = graft.operators.TextQueries

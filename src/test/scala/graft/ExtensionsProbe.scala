@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Manual probe for the production extensions path: a FRESH session built
   * with spark.sql.extensions=graft.GraftExtensions must resolve the native
   * functions in SQL. Run: sbt "Test/runMain graft.ExtensionsProbe"
@@ -9,12 +7,10 @@ import org.apache.spark.sql.SparkSession
   */
 object ExtensionsProbe {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[2]")
-      .appName("ext-probe")
+    val spark = GraftSession.builder(2)
       .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
+      .config("spark.log.level", "ERROR")
       .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
     val r = spark.sql(
       "SELECT dot_product(array(1.0d,2.0d), array(3.0d,4.0d)) AS d").first()
     println(s"[extprobe] dot_product via spark.sql.extensions = ${r.getDouble(0)}")
