@@ -5,11 +5,15 @@ import java.net.{InetSocketAddress, Socket}
 import java.nio.charset.StandardCharsets
 import java.util
 import scala.collection.mutable.ArrayBuffer
+import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
 
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, ReadMaxRows, SupportsAdmissionControl}
+import org.apache.spark.sql.connector.read.streaming.{CompositeReadLimit, MicroBatchStream, Offset,
+  ReadLimit, ReadMaxRows, ReadMinRows, ReportsSourceMetrics, SupportsTriggerAvailableNow}
+import org.apache.spark.sql.GraftSqlBridge
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -50,6 +54,27 @@ import org.apache.spark.unsafe.types.UTF8String
   * `maxLinesPerPartition` lines so a large catch-up batch parses on all
   * cores instead of one.
   *
+  * Admission: a micro-batch starts as soon as one partition's worth of
+  * lines (`maxLinesPerPartition`, or `maxLinesPerTrigger` if smaller) is
+  * framed past the last issued offset, or [[Dump1090Source.MaxTriggerDelayMs]]
+  * after the previous `latestOffset` returned if at least one line is
+  * waiting (Spark's `ReadLimit.minRows`, the Kafka source's
+  * `minOffsetsPerTrigger`/`maxTriggerDelay` rule). `latestOffset` blocks
+  * on the buffer's monitor until the rule holds, so run the query with a
+  * 0 ms processing-time trigger: the stream thread then sleeps instead of
+  * polling, an idle feed returns about once per delay, and
+  * `processAllAvailable` on an idle feed returns after up to about two
+  * delays. The first call after construction, `ReadLimit.allAvailable()`
+  * (Trigger.Once) and Trigger.AvailableNow never wait. Once the feed is
+  * gone (connect budget spent) and every framed line is in a completed
+  * micro-batch, the source stops its query, as the reference quits
+  * (P:98-99).
+  *
+  * Metrics (`StreamingQueryProgress.sources(i).metrics`): linesFramed,
+  * bytesRead, reconnects, bufferedLines, exhausted, and the batches the
+  * rule admitted by rows (a full partition) vs by delay (short of one:
+  * the delay ran out, the buffer filled or the feed ended).
+  *
   * Usage: spark.readStream.format("graft.sources.Dump1090TableProvider")
   *          .option("host", ...).option("port", ...).load()
   */
@@ -64,6 +89,12 @@ class Dump1090TableProvider extends TableProvider {
 object Dump1090Source {
   /** Raw framed lines; parse with Sbs1.parse downstream. */
   val Schema: StructType = StructType(Seq(StructField("value", StringType)))
+
+  /** Longest wait for a partial batch: the cadence of the 1 s
+    * processing-time trigger the pipeline ran on before admission moved
+    * into the source.
+    */
+  val MaxTriggerDelayMs = 1000L
 }
 
 class Dump1090Table extends Table with SupportsRead {
@@ -108,7 +139,7 @@ class Dump1090MicroBatchStream(
     maxBufferedLines: Int = 1000000,
     maxLinesPerTrigger: Option[Long] = None,
     spillDir: Option[String] = None)
-  extends MicroBatchStream with SupportsAdmissionControl {
+  extends MicroBatchStream with SupportsTriggerAvailableNow with ReportsSourceMetrics {
 
   // lines[i] holds line (trimOffset + i); guarded by `lock`
   private val lock = new Object
@@ -116,6 +147,25 @@ class Dump1090MicroBatchStream(
   private var trimOffset = 0L
   @volatile private var exhausted = false
   @volatile private var stopped = false
+  // set once readLoop has returned (after its feed-end flush): no line
+  // will ever be framed again. Guarded by `lock` for writes.
+  @volatile private var readerDone = false
+
+  // admission state, guarded by `lock`: when the previous
+  // latestOffset(start, limit) returned (None before the first call), the
+  // offset whose framing wakes a blocked call, the Trigger.AvailableNow
+  // target, and whether this source already asked its query to end
+  private var lastReturnNs: Option[Long] = None
+  private var wakeAt = Long.MaxValue
+  private var availableNowEnd: Option[Long] = None
+  private var endRequested = false
+
+  // metrics: written by the reader thread (bytes, connects) or under `lock`
+  @volatile private var bytesRead = 0L
+  @volatile private var connects = 0L
+  private var linesFramed = 0L
+  private var admittedByRows = 0L
+  private var admittedByDelay = 0L
   // a non-socket failure in the reader (spill-log write error, unexpected
   // exception): recorded here and rethrown from latestOffset so the QUERY
   // fails loudly — the alternatives are silently dropping data while the
@@ -227,6 +277,7 @@ class Dump1090MicroBatchStream(
       try {
         if (in == null) {
           attempts += 1
+          connects += 1
           sock = new Socket()
           sock.connect(new InetSocketAddress(host, port), 10000)
           in = sock.getInputStream
@@ -253,6 +304,7 @@ class Dump1090MicroBatchStream(
           }
         } else if (n > 0) {
           attempts = 0
+          bytesRead += n
           val data =
             if (carry.isEmpty) java.util.Arrays.copyOfRange(buf, 0, n)
             else carry ++ buf.take(n)
@@ -290,13 +342,18 @@ class Dump1090MicroBatchStream(
     // (replacement chars for the malformed remainder) before the flush
     if (carry.nonEmpty) partial.append(new String(carry, StandardCharsets.UTF_8))
     // flush a trailing unterminated line at feed end (not on stop(), whose
-    // spill log is already closed)
-    if (partial.nonEmpty) lock.synchronized {
-      val last = partial.toString
-      if (last.nonEmpty && !stopped) {
-        spill.foreach(_.append(Seq(last)))
-        lines += last
+    // spill log is already closed), then wake a latestOffset waiting for
+    // lines that will now never come
+    lock.synchronized {
+      if (partial.nonEmpty && !stopped) {
+        try {
+          spill.foreach(_.append(Seq(partial.toString)))
+          lines += partial.toString
+          linesFramed += 1
+        } catch { case NonFatal(t) => fatal = t }
       }
+      readerDone = true
+      lock.notifyAll()
     }
   }
 
@@ -332,7 +389,12 @@ class Dump1090MicroBatchStream(
         try spill.foreach(_.append(slice))
         catch { case t: Throwable => spillFailed = true; throw t }
         lines ++= slice
+        linesFramed += slice.length
         i += slice.length
+        // wake a blocked latestOffset only once its threshold is crossed
+        // (or the buffer is full, so no more can arrive before a commit)
+        if (trimOffset + lines.length >= wakeAt || lines.length >= maxBufferedLines)
+          lock.notifyAll()
       }
     }
   }
@@ -357,17 +419,58 @@ class Dump1090MicroBatchStream(
     LineOffset(trimOffset + lines.length)
   }
 
-  /** Rate limiting (maxLinesPerTrigger): bounds each micro-batch so a
-    * catch-up backlog drains in sized epochs instead of one giant batch —
-    * the maxOffsetsPerTrigger analog for this source.
+  /** Admission and rate limiting. `minRows`: a batch starts once a full
+    * partition of lines is framed, or [[Dump1090Source.MaxTriggerDelayMs]]
+    * after the previous range was issued with at least one line waiting
+    * (the minOffsetsPerTrigger/maxTriggerDelay analog). `maxRows`
+    * (maxLinesPerTrigger) bounds each micro-batch so a catch-up backlog
+    * drains in sized epochs instead of one giant batch (the
+    * maxOffsetsPerTrigger analog); a batch capped below a partition starts
+    * once the cap is framed.
     */
-  override def getDefaultReadLimit: ReadLimit =
-    maxLinesPerTrigger.map(n => ReadLimit.maxRows(n))
-      .getOrElse(ReadLimit.allAvailable())
+  override def getDefaultReadLimit: ReadLimit = {
+    val partition = maxLinesPerTrigger.fold(maxLinesPerPartition.toLong)(
+      math.min(_, maxLinesPerPartition.toLong))
+    val minRows = ReadLimit.minRows(partition, Dump1090Source.MaxTriggerDelayMs)
+    maxLinesPerTrigger.fold(minRows)(n =>
+      ReadLimit.compositeLimit(Array(minRows, ReadLimit.maxRows(n))))
+  }
+
+  /** Trigger.AvailableNow: serve what is framed now, then end the query. */
+  override def prepareForTriggerAvailableNow(): Unit = lock.synchronized {
+    availableNowEnd = Some(trimOffset + lines.length)
+  }
+
+  /** Blocks on `lock` until the `minRows` rule admits a batch after `s`,
+    * the source stops, or the reader fails. Called with `lock` held.
+    */
+  private def awaitAdmission(s: Long, rule: ReadMinRows, sinceNs: Long): Unit = {
+    def pending = trimOffset + lines.length - s
+    // a full buffer or an ended feed will frame nothing more before a
+    // commit, so waiting longer cannot grow the batch (with nothing
+    // pending, returning at once would only make Spark poll)
+    def ready = pending >= rule.minRows ||
+      (pending > 0 && (lines.length >= maxBufferedLines || readerDone))
+    val deadline = sinceNs + rule.maxTriggerDelayMs * 1000000L
+    wakeAt = s + rule.minRows
+    try {
+      var left = deadline - System.nanoTime()
+      while (!ready && !stopped && fatal == null && left > 0) {
+        lock.wait((left + 999999L) / 1000000L)
+        left = deadline - System.nanoTime()
+      }
+    } finally wakeAt = Long.MaxValue
+    if (pending >= rule.minRows) admittedByRows += 1
+    else if (pending > 0) admittedByDelay += 1
+  }
 
   override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
     checkFatal()
     val s = start.asInstanceOf[LineOffset].offset
+    val limits = limit match {
+      case c: CompositeReadLimit => c.getReadLimits.toSeq
+      case l => Seq(l)
+    }
     lock.synchronized {
       // a start offset this instance never issued is a previous
       // process's checkpoint with its replay state (spill log) gone —
@@ -381,16 +484,51 @@ class Dump1090MicroBatchStream(
           "lines framed this session). The checkpoint predates this " +
           "process and its spill log is missing — resume with a fresh " +
           "checkpoint (see class doc).")
-      val avail = trimOffset + lines.length
-      val end = limit match {
-        case mr: ReadMaxRows => math.min(avail, s + mr.maxRows())
-        case _               => avail
+      // the feed is gone and every line it framed is in a completed
+      // batch: end the query instead of serving empty batches forever
+      if (readerDone && availableNowEnd.isEmpty && s == trimOffset + lines.length &&
+          !endRequested) {
+        endRequested = true
+        endQuery()
+      } else if (availableNowEnd.isEmpty) {
+        // the first call returns at once, so batch 0 is never delayed
+        for (since <- lastReturnNs; rule <- limits.collectFirst { case m: ReadMinRows => m })
+          awaitAdmission(s, rule, since)
       }
+      checkFatal()
+      val avail = availableNowEnd.getOrElse(trimOffset + lines.length)
+      val end = limits.collectFirst { case m: ReadMaxRows => m.maxRows() }
+        .fold(avail)(n => math.min(avail, s + n))
       val out = math.max(end, s)
       servedHighWater = math.max(servedHighWater, out)
+      lastReturnNs = Some(System.nanoTime())
       LineOffset(out)
     }
   }
+
+  /** Stops the query whose stream thread is calling. `stop()` joins that
+    * thread, so it runs on its own; the stream thread's next wait is
+    * interrupted as a normal stop.
+    */
+  private def endQuery(): Unit =
+    GraftSqlBridge.currentStreamingQuery().foreach { q =>
+      val t = new Thread(() => q.stop(), "dump1090-feed-ended")
+      t.setDaemon(true)
+      t.start()
+    }
+
+  override def metrics(latestConsumedOffset: util.Optional[Offset]): util.Map[String, String] =
+    lock.synchronized {
+      Map(
+        "linesFramed" -> linesFramed,
+        "bytesRead" -> bytesRead,
+        "reconnects" -> math.max(0L, connects - 1),
+        "bufferedLines" -> lines.length,
+        "exhausted" -> exhausted,
+        "batchesAdmittedByRows" -> admittedByRows,
+        "batchesAdmittedByDelay" -> admittedByDelay
+      ).map { case (k, v) => k -> v.toString }.asJava
+    }
 
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
     val s = start.asInstanceOf[LineOffset].offset

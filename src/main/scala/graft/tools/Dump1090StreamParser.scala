@@ -2,7 +2,7 @@ package graft.tools
 
 import scala.util.control.NonFatal
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{GraftSqlBridge, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.GraftSession
 import graft.streaming.{StreamingOps, TransactionalJdbcSink}
@@ -25,8 +25,17 @@ import graft.streaming.{StreamingOps, TransactionalJdbcSink}
   * micro-batch lands through one INSERT in one transaction with its
   * commit-log claim, which is also the unit of durability and
   * exactly-once (TransactionalJdbcSink).
-  * Ctrl-C stops the query gracefully and reports totals (R11/R12,
-  * P:172-178).
+  *
+  * A micro-batch starts as soon as one partition's worth of lines (5,000)
+  * is framed, or 1 s after the previous batch started if at least one
+  * line is waiting (the source's admission rule, Dump1090Source), so a
+  * backlog drains at once while a quiet feed keeps a 1 s cadence.
+  *
+  * Ctrl-C or SIGTERM stops the query gracefully and reports totals
+  * (R11/R12, P:172-178). Once the connect budget is spent and every line
+  * read is committed, the query ends, the report prints and the process
+  * exits with status 0, as the reference quits (P:98-99); a failed query
+  * exits with status 1.
   */
 object Dump1090StreamParser {
 
@@ -46,7 +55,10 @@ object Dump1090StreamParser {
       |         [--connect-attempt-limit N] [--connect-attempt-delay SECS]
       |         [--checkpoint DIR]
       |
-      |A program to process dump1090 messages then insert them into a database
+      |A program to process dump1090 messages then insert them into a database.
+      |A batch starts once 5,000 lines are read, or 1 s after the previous one
+      |if any line is waiting. Exits 0 once the connect budget is spent and
+      |every line read is committed, 1 if the pipeline fails.
       |
       |  -l, --location           network location of the dump1090 broadcast
       |                           (default localhost)
@@ -120,9 +132,15 @@ object Dump1090StreamParser {
 
   /** Build the full pipeline (R1-R13): socket source → SBS-1 parse →
     * transactional squitters sink. Returns the running query.
+    *
+    * The default 0 ms trigger leaves admission to the source: a batch
+    * starts once 5,000 lines are framed, or 1 s after the previous one
+    * with at least one line waiting, and the stream thread sleeps in the
+    * source meanwhile. The query ends by itself once the feed is gone and
+    * drained.
     */
   def run(spark: SparkSession, c: Config,
-          trigger: Trigger = Trigger.ProcessingTime("1 second")): StreamingQuery = {
+          trigger: Trigger = Trigger.ProcessingTime(0)): StreamingQuery = {
     val squitters = StreamingOps.ingestSocket(spark, c.location, c.port, Map(
       "bufferSize" -> c.bufferSize.toString,
       "connectAttemptLimit" -> c.connectAttemptLimit.toString,
@@ -145,21 +163,37 @@ object Dump1090StreamParser {
     val metrics = new graft.streaming.IngestMetrics
     spark.streams.addListener(metrics)
     val query = run(spark, c)
-    // R12: Ctrl-C → stop, final report (P:172-178). "Written" comes from
-    // the database itself: the listener's numInputRows counts replayed
-    // batches whose claims the sink skipped, so after a
-    // restart-from-checkpoint it overstates what actually landed.
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      try {
-        query.stop()
-        println(s"${writtenRows(jdbcUrl(c.database))} rows written to " +
-          s"${c.database} (${metrics.totalRows} ingested this run)")
-      } catch {
-        case NonFatal(e) =>
-          System.err.println(s"dump1090-stream-parser: shutdown report failed: $e")
-          e.printStackTrace()
+    metrics.bind(query.id)
+    // R12: final report (P:172-178). "Written" comes from the database
+    // itself: the listener's numInputRows counts replayed batches whose
+    // claims the sink skipped, so after a restart-from-checkpoint it
+    // overstates what actually landed. It runs once: when the query ends
+    // with the feed, or on Ctrl-C/SIGTERM from a hook ordered before
+    // Spark's own, which stops the SparkContext the report still needs.
+    var reported = false
+    def report(): Unit = synchronized {
+      if (!reported) {
+        reported = true
+        try {
+          query.stop()
+          println(s"${writtenRows(jdbcUrl(c.database))} rows written to " +
+            s"${c.database} (${metrics.totalRows} ingested this run)")
+        } catch {
+          case NonFatal(e) =>
+            System.err.println(s"dump1090-stream-parser: shutdown report failed: $e")
+            e.printStackTrace()
+        }
       }
-    }))
-    query.awaitTermination()
+    }
+    GraftSqlBridge.addShutdownHookBeforeSparkContext(() => report())
+    val status =
+      try { query.awaitTermination(); 0 }
+      catch {
+        case NonFatal(e) =>
+          System.err.println(s"dump1090-stream-parser: query failed: $e")
+          1
+      }
+    report()
+    sys.exit(status)
   }
 }

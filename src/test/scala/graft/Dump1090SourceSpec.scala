@@ -206,7 +206,7 @@ class Dump1090SourceSpec extends SparkSpec {
   }
 
   test("maxLinesPerTrigger bounds each micro-batch (admission control)") {
-    import org.apache.spark.sql.connector.read.streaming.{ReadLimit, ReadMaxRows}
+    import org.apache.spark.sql.connector.read.streaming.{CompositeReadLimit, ReadLimit}
     val payload = lines.mkString("", "\n", "\n").getBytes(StandardCharsets.UTF_8)
     val server = serve(payload, chunk = 512)
     try {
@@ -214,7 +214,9 @@ class Dump1090SourceSpec extends SparkSpec {
         "localhost", server.getLocalPort, 100,
         connectAttemptLimit = 0, connectAttemptDelayMs = 50,
         maxLinesPerTrigger = Some(10L))
-      assert(stream.getDefaultReadLimit.isInstanceOf[ReadMaxRows])
+      // the cap rides inside the composite admission limit (minRows + maxRows)
+      assert(stream.getDefaultReadLimit.asInstanceOf[CompositeReadLimit]
+        .getReadLimits.contains(ReadLimit.maxRows(10)))
       def latest() = stream.latestOffset()
         .asInstanceOf[graft.sources.LineOffset].offset
       val deadline = System.currentTimeMillis() + 10000
@@ -443,5 +445,161 @@ class Dump1090SourceSpec extends SparkSpec {
       Thread.sleep(50)
     assert(stream.isExhausted)
     stream.stop()
+  }
+
+  /** A feed that stays open and writes whatever the spec hands it. */
+  private class OpenFeed extends AutoCloseable {
+    val server = new ServerSocket(0)
+    private val queue = new java.util.concurrent.LinkedBlockingQueue[String]()
+    private val writer = new Thread(() => {
+      try {
+        val sock = server.accept()
+        try {
+          val out = sock.getOutputStream
+          while (true) {
+            out.write(queue.take().getBytes(StandardCharsets.UTF_8)); out.flush()
+          }
+        } finally sock.close()
+      } catch { case _: Throwable => }
+    }, "sbs1-open-feed")
+    writer.setDaemon(true)
+    writer.start()
+    def port: Int = server.getLocalPort
+    def send(ls: Seq[String]): Unit = queue.put(ls.mkString("", "\n", "\n"))
+    override def close(): Unit = { writer.interrupt(); server.close() }
+  }
+
+  private def offsetOf(o: org.apache.spark.sql.connector.read.streaming.Offset): Long =
+    o.asInstanceOf[graft.sources.LineOffset].offset
+
+  /** (result, elapsed ms) */
+  private def timed[T](body: => T): (T, Long) = {
+    val t0 = System.nanoTime()
+    val r = body
+    (r, (System.nanoTime() - t0) / 1000000L)
+  }
+
+  test("admission: the first call returns at once, a full partition starts a " +
+       "batch before the delay, a trickle waits for it, an idle feed returns " +
+       "once per delay, and stop() wakes a blocked call") {
+    import org.apache.spark.sql.connector.read.streaming.ReadLimit
+    val feed = new OpenFeed
+    val stream = new graft.sources.Dump1090MicroBatchStream(
+      "localhost", feed.port, 100,
+      connectAttemptLimit = 0, connectAttemptDelayMs = 50,
+      maxLinesPerPartition = 20)
+    try {
+      val (o0, t0) = timed(stream.latestOffset(graft.sources.LineOffset(0),
+        ReadLimit.minRows(20, 60000)))
+      assert(t0 < 10000, s"first call waited $t0 ms")
+      assert(offsetOf(o0) == 0)
+      // a burst past one partition is admitted long before a 60 s delay
+      feed.send(lines.take(25))
+      val (o1, t1) = timed(stream.latestOffset(o0, ReadLimit.minRows(20, 60000)))
+      assert(t1 < 10000, s"burst waited $t1 ms")
+      assert(offsetOf(o1) >= 20 && offsetOf(o1) <= 25, o1)
+      // a trickle short of a partition waits out the delay, then goes
+      feed.send(lines.slice(25, 28))
+      val (o2, t2) = timed(stream.latestOffset(o1, ReadLimit.minRows(20, 500)))
+      assert(t2 >= 300 && t2 < 10000, s"trickle admitted after $t2 ms")
+      assert(offsetOf(o2) == 28, o2)
+      val m = stream.metrics(java.util.Optional.empty())
+      assert(m.get("batchesAdmittedByRows") == "1", m)
+      assert(m.get("batchesAdmittedByDelay") == "1", m)
+      // idle: each call waits a full delay, so the stream thread never spins
+      var o = o2
+      val idleStart = System.nanoTime()
+      var calls = 0
+      while (System.nanoTime() - idleStart < 2000000000L) {
+        val (next, t) = timed(stream.latestOffset(o, ReadLimit.minRows(20, 200)))
+        assert(t >= 150, s"idle call returned after $t ms")
+        assert(next == o)
+        o = next; calls += 1
+      }
+      assert(calls <= 12, s"$calls idle returns in 2 s at a 200 ms delay")
+      // stop() wakes a call parked on a 60 s delay
+      @volatile var woke = 0L
+      val blocked = new Thread(() => {
+        try stream.latestOffset(o, ReadLimit.minRows(20, 60000))
+        catch { case _: Throwable => }
+        woke = System.nanoTime()
+      })
+      blocked.start()
+      Thread.sleep(200)
+      assert(blocked.isAlive, "latestOffset did not block on an idle feed")
+      val stopAt = System.nanoTime()
+      stream.stop()
+      blocked.join(10000)
+      assert(!blocked.isAlive && woke > 0)
+      val wakeMs = (woke - stopAt) / 1000000L
+      assert(wakeMs < 200, s"stop() woke latestOffset after $wakeMs ms")
+    } finally { stream.stop(); feed.close() }
+  }
+
+  test("allAvailable, Trigger.Once and Trigger.AvailableNow never wait") {
+    import org.apache.spark.sql.connector.read.streaming.{ReadLimit, SupportsTriggerAvailableNow}
+    val feed = new OpenFeed
+    val stream = new graft.sources.Dump1090MicroBatchStream(
+      "localhost", feed.port, 100,
+      connectAttemptLimit = 0, connectAttemptDelayMs = 50,
+      maxLinesPerPartition = 20)
+    try {
+      val o0 = stream.latestOffset(graft.sources.LineOffset(0), stream.getDefaultReadLimit)
+      feed.send(lines.take(5))
+      val deadline = System.currentTimeMillis() + 10000
+      while (offsetOf(stream.latestOffset()) < 5 && System.currentTimeMillis() < deadline)
+        Thread.sleep(20)
+      // Trigger.Once reads with allAvailable: no admission rule to wait on
+      val (o1, t1) = timed(stream.latestOffset(o0, ReadLimit.allAvailable()))
+      assert(offsetOf(o1) == 5 && t1 < 10000, s"$o1 after $t1 ms")
+      // Trigger.AvailableNow: the framed-now target, even under a 60 s rule
+      feed.send(lines.slice(5, 8))
+      stream.asInstanceOf[SupportsTriggerAvailableNow].prepareForTriggerAvailableNow()
+      val rule = ReadLimit.compositeLimit(Array(ReadLimit.minRows(20, 60000),
+        ReadLimit.maxRows(100)))
+      val (o2, t2) = timed(stream.latestOffset(o1, rule))
+      assert(t2 < 10000, s"AvailableNow waited $t2 ms")
+      val (o3, t3) = timed(stream.latestOffset(o2, rule))
+      assert(o3 == o2 && t3 < 10000, s"AvailableNow past its target: $o3 after $t3 ms")
+    } finally { stream.stop(); feed.close() }
+
+    // end to end: both triggers finish against a feed that stays open
+    for (trigger <- Seq(Trigger.Once(), Trigger.AvailableNow())) {
+      val open = new OpenFeed
+      try {
+        open.send(lines.take(3))
+        val q = spark.readStream.format("graft.sources.Dump1090TableProvider")
+          .option("host", "localhost").option("port", open.port)
+          .option("connectAttemptLimit", 0).option("spill", false)
+          .load().writeStream.format("noop").trigger(trigger).start()
+        try assert(q.awaitTermination(30000), s"$trigger query still running")
+        finally q.stop()
+        assert(q.exception.isEmpty, q.exception)
+      } finally open.close()
+    }
+  }
+
+  test("the query ends once the feed is gone, and the source reports its " +
+       "metrics through StreamingQueryProgress") {
+    val payload = lines.mkString("", "\n", "\n").getBytes(StandardCharsets.UTF_8)
+    val server = serve(payload, chunk = 512)
+    try {
+      val q = spark.readStream.format("graft.sources.Dump1090TableProvider")
+        .option("host", "localhost").option("port", server.getLocalPort)
+        .option("connectAttemptLimit", 0).option("spill", false)
+        .load().writeStream.format("noop")
+        .trigger(Trigger.ProcessingTime(0)).start()
+      try assert(q.awaitTermination(30000), "query still running after the feed ended")
+      finally q.stop()
+      assert(q.exception.isEmpty, q.exception)
+      val progress = q.recentProgress.filter(_.numInputRows > 0)
+      assert(progress.map(_.numInputRows).sum == lines.length)
+      val m = progress.last.sources(0).metrics
+      assert(m.get("linesFramed") == lines.length.toString, m)
+      assert(m.get("bytesRead") == payload.length.toString, m)
+      assert(m.get("reconnects") == "0", m)
+      Seq("bufferedLines", "exhausted", "batchesAdmittedByRows",
+          "batchesAdmittedByDelay").foreach(k => assert(m.containsKey(k), m))
+    } finally server.close()
   }
 }
