@@ -1326,7 +1326,7 @@ object SimilarityQueries {
       // single-partition rank windows only ever see those k rows.
       import org.apache.spark.sql.expressions.Window
       val lex = graft.operators.TextQueries.bm25(documents(s, d),
-        Some(graft.operators.TextQueries.tokenLayer(s, d)))
+        graft.operators.TextQueries.tokenLayer(s, d))
         .select(col("doc_id"),
           row_number().over(
             Window.orderBy(col("score_e12").desc_nulls_last, col("doc_id")))

@@ -47,7 +47,7 @@ object TextQueries {
   /** The token-count plan over any (doc_id, source, text) table — the
     * grouping keys include doc_id, so the layer is PER-DOC EXACT and the
     * manifest-incremental serve's append ≡ rebuild row-for-row. */
-  private def tokenPlanOf(docs: DataFrame): DataFrame =
+  private[graft] def tokenPlanOf(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"), col("source"),
         explode(split(col("text"), " ")).as("token"))
       .groupBy("doc_id", "source", "token")
@@ -417,26 +417,15 @@ object TextQueries {
       |  JOIN dfreq USING (term)
       |  JOIN dl USING (doc_id))""".stripMargin
 
-  private[graft] def bm25(docs: DataFrame,
-                          tokLayer: Option[DataFrame] = None): DataFrame = {
+  private[graft] def bm25(docs: DataFrame, tokLayer: DataFrame): DataFrame = {
     import org.apache.spark.sql.GraftSqlBridge.scalarSubquery
-    import graft.functions.expressions.StringFunctions.{token_count, token_term_count}
-    // dl and the three per-term tfs come out of ONE fused codegen scan
-    // per document (TokenStats kernels) — the corpus never becomes
-    // token ROWS. The r11 shape exploded T token rows and shuffled them
-    // through two corpus-wide groupBys (dl, tf) plus a dl join-back; at
-    // data scale that explode IS the query's cost (T ≈ 10¹¹ rows at
-    // 100 TB), where this form shuffles only the ≤3·N_match tiny
-    // (doc, term, tf) tuples behind the 3-row df aggregate.
-    // r19 (VERDICT r18 #5): every statistic now serves from the
-    // MAINTAINED token layer — the inverted index the token_counts phase
-    // already feeds ten consumers from — instead of re-deriving them from
-    // raw text per run:
+    // Every statistic serves from the MAINTAINED token layer — the
+    // inverted index the token_counts phase already feeds ten consumers
+    // from — so no text bytes are read at any scale (the decision-vs-data
+    // split of guide §8):
     //   tf   = the layer's (doc, term) rows filtered to the query terms
-    //          (a PUSHABLE In(token, …) predicate at the layer scan;
-    //          layer c ≡ kernel token_term_count — both count the term's
-    //          occurrences in split(text, ' '), the TokenStats parity the
-    //          kernels are pinned to);
+    //          (a PUSHABLE In(token, …) predicate at the layer scan; layer
+    //          c counts the term's occurrences in split(text, ' '));
     //   dl   = Σ c per MATCHED doc only (broadcast semi-join of the
     //          query-sized matched ids, then a query-sized aggregation —
     //          never a corpus-wide doc-keyed shuffle);
@@ -448,59 +437,29 @@ object TextQueries {
     //   N    = count(*) over docs — column-pruned to a ZERO-COLUMN scan
     //          (a null-text doc counts toward N but not the layer, which
     //          is why N alone does not fold onto the layer).
-    // The old form read every text byte TWICE per run (the fused-kernel
-    // scan, duplicated under the broadcast df subtree, plus a third full
-    // pass for T in the stats subquery). Now NO text bytes are read at
-    // any scale: the layer is the artifact appends maintain, exactly the
-    // decision-vs-data split of guide §8. Crafted-corpus callers
-    // (EngineSpec) pass no layer and keep the self-contained kernel form.
-    val (tf, dl, stats) = tokLayer match {
-      case Some(tl) =>
-        val tfL = tl.filter(col("token").isin(Bm25Terms: _*))
-          .select(col("doc_id"), col("token").as("term"), col("c").as("tf"))
-        val dlL = tl.join(
-            broadcast(tfL.select("doc_id").distinct()), Seq("doc_id"),
-            "left_semi")
-          .groupBy("doc_id").agg(sum("c").as("dl"))
-        // one UNION-fed aggregation, not a crossJoin of two 1-row aggs:
-        // a crossJoin plans a BroadcastNestedLoopJoin inside the
-        // subquery, and the suite-wide PlanSpec pin (rightly) rejects
-        // BNLJ nodes. Layer rows carry (c, 0), doc rows (null, 1);
-        // sum(c) skips the doc rows' nulls, sum(one) counts exactly the
-        // doc rows — same exact Longs.
-        val statsL = tl.select(col("c"), lit(0L).as("one"))
-          .unionByName(docs.select(lit(null).cast("bigint").as("c"),
-            lit(1L).as("one")))
-          .agg(sum("c").as("t"), sum("one").as("n"))
-          // count() was never null — pin n=0 on an empty corpus too
-          .select(struct(coalesce(col("n"), lit(0L)).as("n"),
-            col("t")).as("nt"))
-        (tfL, Some(dlL), statsL)
-      case None =>
-        val counted = docs.select(
-          col("doc_id") +: token_count(col("text")).as("dl") +:
-            Bm25Terms.zipWithIndex.map { case (tm, i) =>
-              token_term_count(col("text"), lit(tm)).as(s"tf_$i") }: _*)
-        // unpivot the tf columns to (doc_id, term, tf>0) rows; dl rides
-        // the same row, so no per-doc dl join-back
-        val tfK = counted
-          .filter(Bm25Terms.indices.map(i => col(s"tf_$i") > 0)
-            .reduce(_ || _))
-          .select(col("doc_id"), col("dl"),
-            explode(map(Bm25Terms.zipWithIndex.flatMap { case (tm, i) =>
-              Seq(lit(tm), col(s"tf_$i")) }: _*)).as(Seq("term", "tf")))
-          .filter(col("tf") > 0)
-        // N and T ride ONE scalar subquery as a struct (a subquery must
-        // return one column, not one field)
-        val statsK = docs
-          .select(token_count(col("text")).as("dl"))
-          .agg(count(lit(1)).as("n"), sum("dl").as("t"))
-          .select(struct(col("n"), col("t")).as("nt"))
-        (tfK, None, statsK)
-    }
+    // Crafted-corpus specs build their layer through the same
+    // [[tokenPlanOf]].
+    val tf = tokLayer.filter(col("token").isin(Bm25Terms: _*))
+      .select(col("doc_id"), col("token").as("term"), col("c").as("tf"))
+    val dl = tokLayer.join(
+        broadcast(tf.select("doc_id").distinct()), Seq("doc_id"), "left_semi")
+      .groupBy("doc_id").agg(sum("c").as("dl"))
+    // one UNION-fed aggregation, not a crossJoin of two 1-row aggs: a
+    // crossJoin plans a BroadcastNestedLoopJoin inside the subquery, and
+    // the suite-wide PlanSpec pin (rightly) rejects BNLJ nodes. Layer rows
+    // carry (c, 0), doc rows (null, 1); sum(c) skips the doc rows' nulls,
+    // sum(one) counts exactly the doc rows — same exact Longs. N and T
+    // ride ONE scalar subquery as a struct (a subquery must return one
+    // column, not one field).
+    val stats = tokLayer.select(col("c"), lit(0L).as("one"))
+      .unionByName(docs.select(lit(null).cast("bigint").as("c"),
+        lit(1L).as("one")))
+      .agg(sum("c").as("t"), sum("one").as("n"))
+      // count() was never null — pin n=0 on an empty corpus too
+      .select(struct(coalesce(col("n"), lit(0L)).as("n"),
+        col("t")).as("nt"))
     val dfreq = tf.groupBy("term").agg(count(lit(1)).as("df"))
-    dl.foldLeft(tf.join(broadcast(dfreq), Seq("term")))(
-        (base, dlDf) => base.join(dlDf, Seq("doc_id")))
+    tf.join(broadcast(dfreq), Seq("term")).join(dl, Seq("doc_id"))
       .withColumn("nt", scalarSubquery(stats))
       .withColumn("n", col("nt.n"))
       .withColumn("t", col("nt.t"))
@@ -1837,7 +1796,7 @@ object TextQueries {
       // No fanOut (r18): the fused token kernels are ~µs/doc — the
       // repartition bought nothing and charged every downstream stage 32
       // task constants (deserialize + schedule); stage-probe-measured.
-      bm25(documents(s, d), Some(tokenLayer(s, d)))),
+      bm25(documents(s, d), tokenLayer(s, d))),
 
     "q_text_surprisal" -> ((s, d) => {
       // Corpus-frequency surprisal scoring (the CCNet-style "perplexity

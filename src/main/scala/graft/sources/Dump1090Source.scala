@@ -47,10 +47,16 @@ import org.apache.spark.unsafe.types.UTF8String
   * unservable, and `planInputPartitions` fails fast rather than silently
   * serving different lines from the new socket.
   *
-  * Memory is bounded: at most `maxBufferedLines` framed lines are held;
-  * when full the reader thread blocks, which backpressures the feed via
-  * TCP flow control (the reference behaves identically — it simply stops
-  * recv()ing, P:113). Micro-batches split into partitions of at most
+  * Memory is bounded: at most `maxBufferedLines` framed lines wait to be
+  * issued by `latestOffset`; when that many wait the reader thread blocks,
+  * which backpressures the feed via TCP flow control (the reference
+  * behaves identically — it simply stops recv()ing, P:113). Issued lines
+  * stay buffered until `commit`, and Spark commits a batch only while it
+  * plans the next one, so up to about 2 × `maxBufferedLines` lines are
+  * held: the running batch's and the waiting ones. Bounding the whole
+  * buffer instead would stall for good once one batch took all of it,
+  * since the parked reader could frame nothing for the batch whose
+  * planning commits it. Micro-batches split into partitions of at most
   * `maxLinesPerPartition` lines so a large catch-up batch parses on all
   * cores instead of one.
   *
@@ -120,10 +126,7 @@ class Dump1090Table extends Table with SupportsRead {
           // the per-source checkpoint slot Spark hands this stream — the
           // spill log lives inside it, so replayability travels with the
           // checkpoint (and dies with it, like the offset log)
-          spillDir =
-            if (options.getBoolean("spill", true))
-              Some(checkpointLocation + "/graft-lines")
-            else None)
+          spillDir = Some(checkpointLocation + "/graft-lines"))
     }
 }
 
@@ -203,13 +206,17 @@ class Dump1090MicroBatchStream(
   // replay state is gone. Guarded by `lock`.
   private var servedHighWater = trimOffset + lines.length
 
+  /** Framed lines no latestOffset has issued yet: what `maxBufferedLines`
+    * bounds. Called with `lock` held.
+    */
+  private def unissued: Long = trimOffset + lines.length - servedHighWater
+
   private val reader = new Thread("dump1090-reader") {
     setDaemon(true)
     override def run(): Unit = readLoop()
   }
   reader.start()
 
-  /** R1–R3: connect (with retry), chunked recv, frame, carry partials. */
   /** Length of a trailing INCOMPLETE UTF-8 sequence (0 if none, or if the
     * tail is malformed — malformed bytes decode to U+FFFD either way).
     * A multi-byte character split across two socket reads must not be
@@ -232,6 +239,7 @@ class Dump1090MicroBatchStream(
     if (have < expected) have else 0
   }
 
+  /** R1–R3: connect (with retry), chunked recv, frame, carry partials. */
   private def readLoop(): Unit = {
     val partial = new StringBuilder
     var attempts = 0
@@ -272,6 +280,24 @@ class Dump1090MicroBatchStream(
         }
       }
     }
+    // EOF and a socket error end a connection alike. Both share the retry
+    // budget AND the backoff: a server that accepts then immediately
+    // closes would otherwise busy-spin connect/EOF forever (only
+    // successful DATA resets the budget). endRecord may have FAILED the
+    // stream (spill-log write); then the backoff is skipped so the fatal
+    // surfaces at once.
+    def disconnect(): Unit = {
+      try { if (sock != null) sock.close() } catch { case _: Throwable => }
+      in = null
+      endRecord(partial)
+      if (exhausted) () // fatal from endRecord: fall through to the loop exit
+      else if (attempts >= connectAttemptLimit) {
+        exhausted = true // P:98-99 quit() after retry budget
+      } else {
+        try Thread.sleep(connectAttemptDelayMs)
+        catch { case _: InterruptedException => exhausted = true }
+      }
+    }
     val buf = new Array[Byte](math.max(bufferSize, 1))
     while (!exhausted) {
       try {
@@ -283,26 +309,8 @@ class Dump1090MicroBatchStream(
           in = sock.getInputStream
         }
         val n = in.read(buf)
-        if (n < 0) { // EOF — reference reconnects on empty read (P:120-126)
-          try sock.close() catch { case _: Throwable => }
-          in = null
-          endRecord(partial)
-          // the EOF path shares the retry budget AND the backoff: a
-          // server that accepts then immediately closes would otherwise
-          // busy-spin connect/EOF forever (each successful connect used
-          // to reset the budget; only successful DATA now does).
-          // endRecord may have FAILED the stream (spill-log write) — in
-          // that case skip the backoff so the fatal surfaces immediately
-          // instead of after a pointless reconnect sleep.
-          if (exhausted) {
-            // fatal from endRecord: fall through to the loop exit
-          } else if (connectAttemptLimit == 0 || attempts >= connectAttemptLimit) {
-            exhausted = true
-          } else {
-            try Thread.sleep(connectAttemptDelayMs)
-            catch { case _: InterruptedException => exhausted = true }
-          }
-        } else if (n > 0) {
+        if (n < 0) disconnect() // EOF — reference reconnects on empty read (P:120-126)
+        else if (n > 0) {
           attempts = 0
           bytesRead += n
           val data =
@@ -316,18 +324,7 @@ class Dump1090MicroBatchStream(
         }
       } catch {
         case _: InterruptedException => exhausted = true
-        case _: java.io.IOException if !stopped && !spillFailed =>
-          try { if (sock != null) sock.close() } catch { case _: Throwable => }
-          in = null
-          endRecord(partial)
-          if (exhausted) {
-            // fatal from endRecord (same as the EOF path): no backoff
-          } else if (attempts >= connectAttemptLimit) {
-            exhausted = true // P:98-99 quit() after retry budget
-          } else {
-            try Thread.sleep(connectAttemptDelayMs)
-            catch { case _: InterruptedException => exhausted = true }
-          }
+        case _: java.io.IOException if !stopped && !spillFailed => disconnect()
         case t: Throwable =>
           // spill-log failure, or anything unexpected: NOT a socket
           // problem — reconnecting would silently drop framed data while
@@ -375,15 +372,15 @@ class Dump1090MicroBatchStream(
     }
     if (batch.isEmpty) return
     // bounded buffer, admitted slice-wise (a chunk can frame more lines
-    // than the whole bound): park the reader until commit() trims space;
-    // the un-recv'd bytes back up in the kernel socket buffer (TCP flow
-    // control), which is how the feed is backpressured.
+    // than the whole bound): park the reader until a latestOffset issues
+    // the waiting lines; the un-recv'd bytes back up in the kernel socket
+    // buffer (TCP flow control), which is how the feed is backpressured.
     var i = 0
     while (i < batch.length) {
       lock.synchronized {
-        while (lines.length >= maxBufferedLines && !exhausted) lock.wait(100)
+        while (unissued >= maxBufferedLines && !exhausted) lock.wait(100)
         if (exhausted) return
-        val slice = batch.slice(i, i + (maxBufferedLines - lines.length))
+        val slice = batch.slice(i, i + (maxBufferedLines - unissued).toInt)
         // durable before visible; a spill failure is flagged so readLoop
         // fails the stream instead of treating it as a socket drop
         try spill.foreach(_.append(slice))
@@ -392,8 +389,8 @@ class Dump1090MicroBatchStream(
         linesFramed += slice.length
         i += slice.length
         // wake a blocked latestOffset only once its threshold is crossed
-        // (or the buffer is full, so no more can arrive before a commit)
-        if (trimOffset + lines.length >= wakeAt || lines.length >= maxBufferedLines)
+        // (or the bound is reached, so no more can arrive before a batch)
+        if (trimOffset + lines.length >= wakeAt || unissued >= maxBufferedLines)
           lock.notifyAll()
       }
     }
@@ -416,6 +413,7 @@ class Dump1090MicroBatchStream(
   override def latestOffset(): Offset = lock.synchronized {
     checkFatal()
     servedHighWater = math.max(servedHighWater, trimOffset + lines.length)
+    lock.notifyAll() // a reader parked on the bound may frame again
     LineOffset(trimOffset + lines.length)
   }
 
@@ -446,11 +444,11 @@ class Dump1090MicroBatchStream(
     */
   private def awaitAdmission(s: Long, rule: ReadMinRows, sinceNs: Long): Unit = {
     def pending = trimOffset + lines.length - s
-    // a full buffer or an ended feed will frame nothing more before a
-    // commit, so waiting longer cannot grow the batch (with nothing
+    // a full bound or an ended feed will frame nothing more before this
+    // batch is issued, so waiting longer cannot grow it (with nothing
     // pending, returning at once would only make Spark poll)
     def ready = pending >= rule.minRows ||
-      (pending > 0 && (lines.length >= maxBufferedLines || readerDone))
+      (pending > 0 && (unissued >= maxBufferedLines || readerDone))
     val deadline = sinceNs + rule.maxTriggerDelayMs * 1000000L
     wakeAt = s + rule.minRows
     try {
@@ -501,6 +499,7 @@ class Dump1090MicroBatchStream(
         .fold(avail)(n => math.min(avail, s + n))
       val out = math.max(end, s)
       servedHighWater = math.max(servedHighWater, out)
+      lock.notifyAll() // a reader parked on the bound may frame again
       lastReturnNs = Some(System.nanoTime())
       LineOffset(out)
     }
@@ -571,15 +570,13 @@ class Dump1090MicroBatchStream(
     }
 
   /** Epoch committed — drop replay state below `end` (WAL trim, R9: the
-    * in-memory window and the spill log's covered files) and wake a
-    * reader parked on the buffer bound.
+    * in-memory window and the spill log's covered files).
     */
   override def commit(end: Offset): Unit = lock.synchronized {
     val e = end.asInstanceOf[LineOffset].offset
     val drop = (e - trimOffset).toInt
     if (drop > 0) { lines.dropInPlace(drop); trimOffset = e }
     spill.foreach(_.commit(e))
-    lock.notifyAll()
   }
 
   override def stop(): Unit = {

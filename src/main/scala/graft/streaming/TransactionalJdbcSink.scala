@@ -7,7 +7,6 @@ import java.util.concurrent.{ArrayBlockingQueue, ConcurrentHashMap, ExecutionExc
 import org.apache.derby.vti.VTITemplate
 
 import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.functions.{col, hash, lit, pmod}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
@@ -68,16 +67,8 @@ object TransactionalJdbcSink {
     */
   val WritePartitions = 1
 
-  /** partition_id of the whole-batch claim. Older builds claimed slices
-    * 0 until [[LegacySlices]] of each batch; this id is one they never used,
-    * so a claim from either layout can never be mistaken for the other.
-    */
+  /** partition_id of the whole-batch claim, the only claim there is. */
   private val BatchClaim = -1
-
-  /** Slice count of the older layout: `pmod(hash(all columns), 8)` per row,
-    * the slice function of the hash repartition that build wrote through.
-    */
-  private val LegacySlices = 8
 
   /** Derby's widest VARCHAR, the width of every string column here. */
   private val MaxVarchar = 32672
@@ -137,15 +128,12 @@ object TransactionalJdbcSink {
     * an existing table surfaces as SQLState X0Y32, an existing function as
     * X0Y68, and both are fine). Besides the table and its commits log this
     * creates the `<table>_rows` table function [[writeBatch]] inserts from,
-    * so a database made by an older build gains it when it resumes. A
-    * pre-app_id commits table (two columns, PK (batch_id, partition_id))
-    * left behind by an older build in a persistent database is migrated in
-    * place: the three-value claim INSERT would otherwise fail on every
-    * batch (column-count mismatch), bricking the sink on exactly the
-    * persistent-database resume path the claim scope exists for.
+    * so a database made by an older build gains it when it resumes. An
+    * existing commits log must hold the one claim layout [[writeBatch]]
+    * writes; any other is refused here, at start and before anything is
+    * created (see [[checkClaimLayout]]).
     */
-  def ensureTables(url: String, table: String, schema: StructType,
-                   legacyClaimScope: Option[String] = None): Unit = {
+  def ensureTables(url: String, table: String, schema: StructType): Unit = {
     val conn = connect(url)
     try {
       def create(ddl: String): Boolean = {
@@ -154,6 +142,11 @@ object TransactionalJdbcSink {
         catch { case e: SQLException if Set("X0Y32", "X0Y68")(e.getSQLState) => false }
         finally st.close() // also on unexpected SQLExceptions (e.g. 40XL1)
       }
+      val fresh = create(s"CREATE TABLE ${table}_commits (" +
+        "app_id VARCHAR(64) NOT NULL, " +
+        "batch_id BIGINT NOT NULL, partition_id INTEGER NOT NULL, " +
+        s"PRIMARY KEY (app_id, batch_id, partition_id))")
+      if (!fresh) checkClaimLayout(conn, table)
       val columns =
         schema.fields.map(f => s"${f.name} ${ddlType(f.dataType)}").mkString(", ")
       create(s"CREATE TABLE $table ($columns)")
@@ -161,81 +154,51 @@ object TransactionalJdbcSink {
         s"RETURNS TABLE ($columns) LANGUAGE JAVA " +
         "PARAMETER STYLE DERBY_JDBC_RESULT_SET NO SQL " +
         s"EXTERNAL NAME '${getClass.getName.stripSuffix("$")}.pendingRows'")
-      val fresh = create(s"CREATE TABLE ${table}_commits (" +
-        "app_id VARCHAR(64) NOT NULL, " +
-        "batch_id BIGINT NOT NULL, partition_id INTEGER NOT NULL, " +
-        s"PRIMARY KEY (app_id, batch_id, partition_id))")
-      if (!fresh) migrateCommits(conn, table, legacyClaimScope)
     } finally conn.close()
   }
 
-  /** Adds the app_id claim-scope column to a legacy commits table. Legacy
-    * claims get scope 'default' — the writeBatch default before scoping
-    * existed — so an old run's claims stay distinct from any
-    * checkpoint-derived scope (MD5 hex, never the literal 'default'). The
-    * primary key is rebuilt to include app_id; leaving it at
-    * (batch_id, partition_id) would make two different apps' batch 0
-    * collide and silently drop the second app's data as a replay.
-    *
-    * `legacyClaimScope`: when the caller KNOWS the legacy table belongs to
-    * the checkpoint now resuming (the `sink` path — one checkpoint, one
-    * database), the old claims are rewritten to that checkpoint's scope.
-    * Left at 'default', the one in-flight batch whose transaction
-    * committed just before the pre-upgrade process died would not match
-    * its own claim under the new MD5 scope and would be re-inserted as
-    * duplicates on the first post-upgrade restart — the exact crash-replay
-    * case the claim log exists for. Callers wiring a database SHARED by
-    * multiple legacy writers should pass None (claims stay at 'default';
-    * they then accept that one-batch window per writer instead of
-    * cross-writer claim collisions).
+  /** Refuses a commits log written in a layout this sink no longer reads:
+    * one from before claim scoping (no `app_id` column, so every claim
+    * INSERT would fail on its column count), or one holding the per-slice
+    * claims of the build that wrote each batch as 8 hash slices
+    * (`partition_id <> -1`; a batch it left half-written would be written
+    * again whole). Either means the database predates the current claim
+    * log, and guessing which of its batches landed could duplicate or drop
+    * rows.
     */
-  private def migrateCommits(conn: Connection, table: String,
-                             legacyClaimScope: Option[String] = None): Unit = {
+  private def checkClaimLayout(conn: Connection, table: String): Unit = {
     val commits = s"${table}_commits"
+    def refuse(found: String, remedy: String): Nothing =
+      throw new IllegalStateException(s"$commits holds $found, a claim " +
+        s"layout this sink no longer reads. $remedy, or write to a new " +
+        "database.")
     val rs = conn.getMetaData.getColumns(
       null, null, commits.toUpperCase(java.util.Locale.ROOT), "APP_ID")
     val hasAppId = try rs.next() finally rs.close()
-    if (!hasAppId) {
-      val st = conn.createStatement()
+    if (!hasAppId)
+      refuse("no app_id column (written before claim scoping)",
+        s"If that build's last run stopped cleanly, DROP TABLE $commits " +
+        "and restart")
+    val st = conn.createStatement()
+    val sliced =
       try {
-        st.execute(s"ALTER TABLE $commits ADD COLUMN app_id " +
-          "VARCHAR(64) NOT NULL DEFAULT 'default'")
-        st.execute(s"ALTER TABLE $commits DROP PRIMARY KEY")
-        st.execute(s"ALTER TABLE $commits ADD CONSTRAINT ${commits}_pk " +
-          "PRIMARY KEY (app_id, batch_id, partition_id)")
+        val q = st.executeQuery(
+          s"SELECT count(*) FROM $commits WHERE partition_id <> $BatchClaim")
+        q.next(); q.getLong(1)
       } finally st.close()
-      legacyClaimScope.foreach { scope =>
-        val up = conn.prepareStatement(
-          s"UPDATE $commits SET app_id = ? WHERE app_id = 'default'")
-        try { up.setString(1, scope); up.executeUpdate() } finally up.close()
-      }
-    }
+    if (sliced > 0)
+      refuse(s"$sliced per-slice claim(s) (partition_id <> $BatchClaim, " +
+        "written by the 8-slice build)",
+        "If that build's last run stopped cleanly, DELETE FROM " +
+        s"$commits WHERE partition_id <> $BatchClaim and restart")
   }
 
-  /** The partition_ids claimed so far for (appId, batchId). */
-  private def claimsOf(url: String, table: String, appId: String,
-                       batchId: Long): Set[Int] = {
-    val conn = connect(url)
-    try {
-      val st = conn.prepareStatement(s"SELECT partition_id FROM ${table}_commits " +
-        "WHERE app_id = ? AND batch_id = ?")
-      try {
-        st.setString(1, appId); st.setLong(2, batchId)
-        val rs = st.executeQuery()
-        try Iterator.continually(rs).takeWhile(_.next()).map(_.getInt(1)).toSet
-        finally rs.close()
-      } finally st.close()
-    } finally conn.close()
-  }
-
-  /** Write one micro-batch exactly-once: one transaction containing the
-    * (appId, batchId) commit-log claim plus all the rows.
-    *
-    * A batch already claimed returns without starting a Spark job. A
-    * database resumed from an older build may hold some of that build's
-    * per-slice claims for the in-flight batch (its slice transactions
-    * committed independently); the rows of the claimed slices already
-    * landed, so they are dropped and only the rest is written.
+  /** Write one micro-batch exactly-once: one task hands the batch's rows
+    * to a pooled writer thread, which claims (appId, batchId) in the
+    * commits log and inserts the rows in one transaction. A batch already
+    * claimed (a replay after the commit) writes nothing: its writer finds
+    * the claim taken and the task stops pulling rows. No claim is read on
+    * the driver.
     *
     * `batchSize` does not change how rows are written (see the object
     * doc); it is kept for CLI parity.
@@ -243,24 +206,6 @@ object TransactionalJdbcSink {
   def writeBatch(batch: DataFrame, batchId: Long, url: String,
                  table: String, batchSize: Int,
                  appId: String = "default"): Unit = {
-    val claimed = claimsOf(url, table, appId, batchId)
-    if (claimed.contains(BatchClaim)) return
-    // any claims left are the older layout's slice ids
-    val pending =
-      if (claimed.isEmpty) batch
-      else batch.filter(!pmod(hash(batch.schema.fieldNames.map(col): _*),
-                              lit(LegacySlices)).isin(claimed.toSeq: _*))
-    insertClaimed(pending, batchId, url, table, appId)
-  }
-
-  /** The Spark side of [[writeBatch]], with no driver-side claim check: one
-    * task hands the batch's rows to a pooled writer thread, which claims
-    * the batch and inserts them in one transaction. A claim that is
-    * already taken (a task retry after the commit) writes nothing.
-    */
-  private[graft] def insertClaimed(batch: DataFrame, batchId: Long,
-                                   url: String, table: String,
-                                   appId: String): Unit = {
     val names = batch.schema.fieldNames.mkString(", ")
     val insert = s"INSERT INTO $table ($names) " +
       s"SELECT $names FROM TABLE(${table}_rows(?)) x"
@@ -284,7 +229,7 @@ object TransactionalJdbcSink {
     }
   }
 
-  /** The writer thread's half of [[insertClaimed]]: claim the batch and run
+  /** The writer thread's half of [[writeBatch]]: claim the batch and run
     * the one INSERT that drains the hand-off under `handle`, in one
     * transaction. Returns without writing when the claim is taken.
     */
@@ -297,9 +242,6 @@ object TransactionalJdbcSink {
       try {
         val claimedNow =
           try {
-            // columns named explicitly: a migrated legacy table has app_id
-            // appended LAST, so positional VALUES would bind the scope into
-            // batch_id there
             val st = conn.prepareStatement(s"INSERT INTO ${table}_commits " +
               "(app_id, batch_id, partition_id) VALUES (?, ?, ?)")
             try {
@@ -308,7 +250,7 @@ object TransactionalJdbcSink {
             } finally st.close()
           } catch {
             // duplicate key — this epoch already committed in a previous
-            // attempt (a task retry after the commit); replay is a no-op
+            // attempt (a task retry or a replay after the commit); no-op
             case e: SQLException if e.getSQLState == "23505" => false
           }
         if (claimedNow) {
@@ -521,11 +463,7 @@ object TransactionalJdbcSink {
            checkpoint: String,
            trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
     val appId = appIdFor(checkpoint)
-    // this path owns both the checkpoint and the database, so a legacy
-    // (pre-scope) commits table's claims are rewritten into this
-    // checkpoint's scope — the resumed in-flight batch keeps matching its
-    // claim across the upgrade instead of replaying as duplicates
-    ensureTables(url, table, df.schema, legacyClaimScope = Some(appId))
+    ensureTables(url, table, df.schema)
     df.writeStream
       .foreachBatch { (b: DataFrame, id: Long) =>
         if (id == 0L) assertNoStaleClaims(url, table, appId)

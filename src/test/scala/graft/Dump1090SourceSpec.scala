@@ -570,7 +570,7 @@ class Dump1090SourceSpec extends SparkSpec {
         open.send(lines.take(3))
         val q = spark.readStream.format("graft.sources.Dump1090TableProvider")
           .option("host", "localhost").option("port", open.port)
-          .option("connectAttemptLimit", 0).option("spill", false)
+          .option("connectAttemptLimit", 0)
           .load().writeStream.format("noop").trigger(trigger).start()
         try assert(q.awaitTermination(30000), s"$trigger query still running")
         finally q.stop()
@@ -586,7 +586,7 @@ class Dump1090SourceSpec extends SparkSpec {
     try {
       val q = spark.readStream.format("graft.sources.Dump1090TableProvider")
         .option("host", "localhost").option("port", server.getLocalPort)
-        .option("connectAttemptLimit", 0).option("spill", false)
+        .option("connectAttemptLimit", 0)
         .load().writeStream.format("noop")
         .trigger(Trigger.ProcessingTime(0)).start()
       try assert(q.awaitTermination(30000), "query still running after the feed ended")
@@ -601,5 +601,26 @@ class Dump1090SourceSpec extends SparkSpec {
       Seq("bufferedLines", "exhausted", "batchesAdmittedByRows",
           "batchesAdmittedByDelay").foreach(k => assert(m.containsKey(k), m))
     } finally server.close()
+  }
+
+  test("a batch that takes the whole buffer bound does not stall the stream") {
+    val feed = new OpenFeed
+    try {
+      feed.send(lines)
+      val q = spark.readStream.format("graft.sources.Dump1090TableProvider")
+        .option("host", "localhost").option("port", feed.port)
+        .option("connectAttemptLimit", 0).option("maxBufferedLines", 10)
+        .load().writeStream.format("memory").queryName("bounded_feed")
+        .trigger(Trigger.ProcessingTime(0)).start()
+      try {
+        def committed = spark.table("bounded_feed").count()
+        val deadline = System.currentTimeMillis() + 30000
+        while (committed < lines.length && System.currentTimeMillis() < deadline)
+          Thread.sleep(100)
+        assert(q.exception.isEmpty, q.exception)
+        assert(committed == lines.length,
+          s"$committed of ${lines.length} rows committed through a 10-line bound")
+      } finally q.stop()
+    } finally feed.close()
   }
 }

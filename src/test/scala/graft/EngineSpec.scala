@@ -681,7 +681,8 @@ class EngineSpec extends SparkSpec {
     val docs = Seq(
       (1L, "dup"), (2L, "spark"), (3L, "spark dup"), (4L, "none here")
     ).toDF("doc_id", "text")
-    val got = operators.TextQueries.bm25(docs).collect()
+    val layer = operators.TextQueries.tokenPlanOf(docs.withColumn("source", lit("spec")))
+    val got = operators.TextQueries.bm25(docs, layer).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
     assert(got == Seq(
       (3L, 2L, 1760000000000L),

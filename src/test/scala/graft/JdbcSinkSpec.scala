@@ -129,82 +129,64 @@ class JdbcSinkSpec extends SparkSpec {
     assert(count(url, "t_scope") == 5)
   }
 
-  test("a legacy pre-app_id commits table is migrated in place on resume") {
-    import spark.implicits._
-    val url = Dump1090StreamParser.jdbcUrl(":memory:")
-    val batch = Seq((1, "a"), (2, "b")).toDF("id", "s")
-    // a persistent database created by the pre-scoping build: two-column
-    // commits table, PK (batch_id, partition_id), one committed claim
-    val conn = TransactionalJdbcSink.connect(url)
-    try {
-      val st = conn.createStatement()
-      st.execute("CREATE TABLE t_mig (id INTEGER, s VARCHAR(255))")
-      st.execute("CREATE TABLE t_mig_commits (" +
-        "batch_id BIGINT NOT NULL, partition_id INTEGER NOT NULL, " +
-        "PRIMARY KEY (batch_id, partition_id))")
-      st.execute("INSERT INTO t_mig_commits VALUES (0, 3)")
-      st.close()
-    } finally conn.close()
-    // resume with the current build: ensureTables must widen the table —
-    // otherwise every 3-value claim INSERT fails on column count and the
-    // sink is bricked on exactly the persistent-database resume path
-    TransactionalJdbcSink.ensureTables(url, "t_mig", batch.schema)
-    TransactionalJdbcSink.writeBatch(batch, 7L, url, "t_mig", 10, appId = "mig")
-    assert(count(url, "t_mig") == 2)
-    // legacy claim got the pre-scoping scope...
-    val c2 = TransactionalJdbcSink.connect(url)
-    try {
-      val rs = c2.createStatement().executeQuery(
-        "SELECT app_id FROM t_mig_commits WHERE batch_id = 0 AND partition_id = 3")
-      rs.next(); assert(rs.getString(1) == "default")
-    } finally c2.close()
-    // ...and the rebuilt PK keys claims by app: a DIFFERENT app's batch 0
-    // must not collide with the legacy claim (batch_id=0 above)
-    val fresh = Seq((9, "z")).toDF("id", "s")
-    TransactionalJdbcSink.writeBatch(fresh, 0L, url, "t_mig", 10, appId = "mig2")
-    assert(count(url, "t_mig") == 3)
-    // replays still skip, per app
-    TransactionalJdbcSink.writeBatch(fresh, 0L, url, "t_mig", 10, appId = "mig2")
-    assert(count(url, "t_mig") == 3)
-    // migration is idempotent
-    TransactionalJdbcSink.ensureTables(url, "t_mig", batch.schema)
+  /** Starts the sink on `table` over a five-line file feed, which must
+    * refuse at start: no query runs.
+    */
+  private def refusedStart(url: String, table: String): IllegalStateException = {
+    val srcDir = java.nio.file.Files.createTempDirectory("refsrc")
+    val ckpt = java.nio.file.Files.createTempDirectory("refck").toString
+    java.nio.file.Files.write(srcDir.resolve("a.txt"),
+      (0 until 5).map(mk).mkString("", "\n", "\n").getBytes)
+    intercept[IllegalStateException] {
+      TransactionalJdbcSink.sink(StreamingOps.ingestFiles(spark, srcDir.toString),
+        url, table, batchSize = 1, checkpoint = ckpt)
+    }
   }
 
-  test("migration rewrites legacy claims into the resuming checkpoint's scope") {
-    import spark.implicits._
+  test("a pre-app_id commits table is refused at start, and nothing is written") {
     val url = Dump1090StreamParser.jdbcUrl(":memory:")
-    val batch = Seq((1, "a"), (2, "b")).toDF("id", "s")
-    val appId = TransactionalJdbcSink.appIdFor("/tmp/ckpt-legacy-resume")
-    // the pre-upgrade process died right after batch 5's sink transaction
-    // committed: data rows + legacy (unscoped) claims are in the database,
-    // but the engine will replay batch 5 from the checkpoint on restart
+    // a database written before claim scoping: two-column commits table,
+    // PK (batch_id, partition_id), one committed claim and its row
     val conn = TransactionalJdbcSink.connect(url)
     try {
       val st = conn.createStatement()
-      st.execute("CREATE TABLE t_up (id INTEGER, s VARCHAR(255))")
-      st.execute("CREATE TABLE t_up_commits (" +
+      st.execute("CREATE TABLE t_noscope (hex_ident VARCHAR(255))")
+      st.execute("CREATE TABLE t_noscope_commits (" +
         "batch_id BIGINT NOT NULL, partition_id INTEGER NOT NULL, " +
         "PRIMARY KEY (batch_id, partition_id))")
-      // the old build wrote each batch as 8 hash slices, one claim each;
-      // claim ALL slices of batch 5 the way it did
-      (0 until 8)
-        .foreach(p => st.execute(s"INSERT INTO t_up_commits VALUES (5, $p)"))
-      st.execute("INSERT INTO t_up VALUES (1, 'a')")
-      st.execute("INSERT INTO t_up VALUES (2, 'b')")
+      st.execute("INSERT INTO t_noscope VALUES ('OLD')")
+      st.execute("INSERT INTO t_noscope_commits VALUES (0, 3)")
       st.close()
     } finally conn.close()
-    // post-upgrade resume of the SAME checkpoint against its own database:
-    // sink's ensureTables passes the checkpoint scope, so the legacy
-    // claims are re-stamped...
-    TransactionalJdbcSink.ensureTables(url, "t_up", batch.schema,
-      legacyClaimScope = Some(appId))
-    // ...and the replayed in-flight batch matches its claim and SKIPS —
-    // without the rewrite these rows would be re-inserted as duplicates
-    TransactionalJdbcSink.writeBatch(batch, 5L, url, "t_up", 10, appId = appId)
-    assert(count(url, "t_up") == 2)
-    // genuinely new epochs still write
-    TransactionalJdbcSink.writeBatch(batch, 6L, url, "t_up", 10, appId = appId)
-    assert(count(url, "t_up") == 4)
+    val e = refusedStart(url, "t_noscope")
+    assert(e.getMessage.contains(
+      "t_noscope_commits holds no app_id column (written before claim scoping)"),
+      e.getMessage)
+    assert(e.getMessage.contains("DROP TABLE t_noscope_commits"), e.getMessage)
+    assert(count(url, "t_noscope") == 1L)
+    assert(count(url, "t_noscope_commits") == 1L)
+  }
+
+  test("claims of the 8-slice build are refused at start, and nothing is written") {
+    val url = Dump1090StreamParser.jdbcUrl(":memory:")
+    val appId = TransactionalJdbcSink.appIdFor("/tmp/ckpt-sliced")
+    // that build died after slices 2 and 5 of batch 3 committed
+    TransactionalJdbcSink.ensureTables(url, "t_sliced", graft.sources.Sbs1.Schema)
+    val conn = TransactionalJdbcSink.connect(url)
+    try {
+      val st = conn.createStatement()
+      st.execute("INSERT INTO t_sliced (session_id, hex_ident) VALUES (-1, 'OLD')")
+      Seq(2, 5).foreach(p =>
+        st.execute(s"INSERT INTO t_sliced_commits VALUES ('$appId', 3, $p)"))
+      st.close()
+    } finally conn.close()
+    val e = refusedStart(url, "t_sliced")
+    assert(e.getMessage.contains("t_sliced_commits holds 2 per-slice claim(s) " +
+      "(partition_id <> -1, written by the 8-slice build)"), e.getMessage)
+    assert(e.getMessage.contains(
+      "DELETE FROM t_sliced_commits WHERE partition_id <> -1"), e.getMessage)
+    assert(count(url, "t_sliced") == 1L)
+    assert(count(url, "t_sliced_commits") == 2L)
   }
 
   test("a checkpoint reset in place (old claims survive at batch_id > 0) " +
@@ -304,46 +286,6 @@ class JdbcSinkSpec extends SparkSpec {
       } finally c.close()
     }
     assert(got.sorted == (0 until 100).toList)
-  }
-
-  test("an upgrade mid-batch writes exactly the rows the old 8-slice claims did not cover") {
-    import spark.implicits._
-    import org.apache.spark.sql.functions.col
-    val url = Dump1090StreamParser.jdbcUrl(":memory:")
-    val batch = spark.createDataset((0 until 200).map(i => (i, s"row$i", i * 0.5)))
-      .toDF("id", "s", "x").repartition(5)
-    // the older build's layout: hash repartition over all columns into 8
-    // slices, one transaction and one claim per slice
-    val slices = batch.repartition(8, batch.columns.map(col): _*).rdd
-      .mapPartitionsWithIndex((pid, it) => it.map(r => r.getInt(0) -> pid))
-      .collect().toMap
-    def ids(table: String): List[Int] = {
-      val c = TransactionalJdbcSink.connect(url)
-      try {
-        val rs = c.createStatement().executeQuery(s"SELECT id FROM $table")
-        Iterator.continually(rs).takeWhile(_.next()).map(_.getInt(1)).toList.sorted
-      } finally c.close()
-    }
-    def plant(table: String, claimed: Set[Int]): Unit = {
-      TransactionalJdbcSink.ensureTables(url, table, batch.schema)
-      val c = TransactionalJdbcSink.connect(url)
-      try claimed.foreach(p => c.createStatement().executeUpdate(
-        s"INSERT INTO ${table}_commits VALUES ('up', 3, $p)"))
-      finally c.close()
-    }
-    // the old process died after slices 2 and 5 of batch 3 committed
-    plant("t_mid", Set(2, 5))
-    TransactionalJdbcSink.writeBatch(batch, 3L, url, "t_mid", 10, appId = "up")
-    val expect = slices.collect { case (id, p) if p != 2 && p != 5 => id }.toList.sorted
-    assert(expect.nonEmpty && expect.size < 200, "fixture must split across slices")
-    assert(ids("t_mid") == expect)
-    // the whole-batch claim now stands: a further replay is a no-op
-    TransactionalJdbcSink.writeBatch(batch, 3L, url, "t_mid", 10, appId = "up")
-    assert(ids("t_mid") == expect)
-    // every slice committed before the upgrade: nothing is left to write
-    plant("t_all", (0 until 8).toSet)
-    TransactionalJdbcSink.writeBatch(batch, 3L, url, "t_all", 10, appId = "up")
-    assert(ids("t_all").isEmpty)
   }
 
   test("the parse compiles once: micro-batches reuse the generated code") {
@@ -542,11 +484,11 @@ class JdbcSinkSpec extends SparkSpec {
       TransactionalJdbcSink.writeBatch(batch, 2L, url, "t_hclaim", 1, appId = "hc")
     }
     assert(count(url, "t_hclaim") == 50000L)
-    // a task retry after the commit gets past the driver-side check; the
-    // writer finds the claim taken, and the task stops pulling rows
+    // a replay after the commit: the writer finds the claim taken, and the
+    // task stops pulling rows
     pulled.reset()
     within(120) {
-      TransactionalJdbcSink.insertClaimed(batch, 2L, url, "t_hclaim", "hc")
+      TransactionalJdbcSink.writeBatch(batch, 2L, url, "t_hclaim", 1, appId = "hc")
     }
     assert(count(url, "t_hclaim") == 50000L)
     assert(count(url, "t_hclaim_commits") == 1L)
@@ -575,8 +517,7 @@ class JdbcSinkSpec extends SparkSpec {
     q.awaitTermination()
     assert(count(url) == 26)
     // and a second ensureTables leaves the function and the tables be
-    TransactionalJdbcSink.ensureTables(url, "squitters", graft.sources.Sbs1.Schema,
-      legacyClaimScope = Some(TransactionalJdbcSink.appIdFor(ckpt)))
+    TransactionalJdbcSink.ensureTables(url, "squitters", graft.sources.Sbs1.Schema)
     assert(count(url) == 26)
   }
 
