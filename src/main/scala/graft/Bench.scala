@@ -68,16 +68,6 @@ object Bench {
     b.toString
   }
 
-  /** The `bench_c<slug>.json` name part for a SPARK_GRAFT_CPUS value:
-    * the text itself when it is plain alphanumeric, otherwise the text
-    * sanitized to [A-Za-z0-9_] plus a digest of the raw text, so two
-    * values that sanitize alike ("8 ", "8_") never share a file. */
-  private[graft] def cpuSlug(cpus: String): String =
-    if (cpus.matches("[A-Za-z0-9]+")) cpus
-    else cpus.replaceAll("[^A-Za-z0-9]+", "_") + "_" + java.util.HexFormat
-      .of().formatHex(java.security.MessageDigest.getInstance("SHA-256")
-        .digest(cpus.getBytes(java.nio.charset.StandardCharsets.UTF_8)), 0, 4)
-
   // Locale.ROOT pins the '.' decimal separator — the f interpolator uses
   // the default locale, which on comma-decimal machines emits invalid JSON
   private def r3(v: Double): String =
@@ -142,7 +132,7 @@ object Bench {
         e.getKey -> e.getValue.path("min").asDouble(0.0)
       }.toMap
     }
-  } catch { case t: Throwable =>
+  } catch { case NonFatal(t) =>
     System.err.println(s"[bench] baseline unreadable ($t) — no tripwire"); Map.empty
   }
 
@@ -171,7 +161,7 @@ object Bench {
       try {
         val (w, c, _, _) = timed(f)
         (name, PhRun(w, c, osBean.getSystemLoadAverage, src(), None))
-      } catch { case t: Throwable =>
+      } catch { case NonFatal(t) =>
         (name, PhRun(0.0, 0.0, osBean.getSystemLoadAverage, "err",
           Some(t.toString.take(300))))
       }
@@ -279,7 +269,7 @@ object Bench {
     } catch {
       // a dead warmup silently shifts JIT + build costs into whichever
       // "warm" query runs first — make it visible, then bench anyway
-      case t: Throwable =>
+      case NonFatal(t) =>
         System.err.println(s"[bench] warmup failed (warm numbers will " +
           s"include JIT/build costs): $t")
     }
@@ -373,7 +363,7 @@ object Bench {
           } catch {
             // record the failure, never a timing — and stop repeating a
             // query that throws (its record is the error, not a number)
-            case t: Throwable => err = Some(t.toString.take(300))
+            case NonFatal(t) => err = Some(t.toString.take(300))
           }
           i += 1
         }
@@ -457,7 +447,7 @@ object Bench {
               } catch {
                 // a throwing re-run never erases the measured record —
                 // keep the original samples and stop retrying
-                case _: Throwable => broken = true
+                case NonFatal(_) => broken = true
               }
               i += 1
             }
@@ -605,7 +595,7 @@ object Bench {
     // run clobbered the 32-core record. One durable file per
     // SPARK_GRAFT_CPUS value keeps both; each write fails on its own.
     val bytes = detail.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-    for (name <- Seq("bench.json", s"bench_c${cpuSlug(cpus.toString)}.json")) try {
+    for (name <- Seq("bench.json", s"bench_c$cpus.json")) try {
       val out = java.nio.file.Paths.get("target", name)
       java.nio.file.Files.createDirectories(out.getParent)
       java.nio.file.Files.write(out, bytes)

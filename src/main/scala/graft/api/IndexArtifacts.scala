@@ -3,597 +3,102 @@ package graft.api
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.DedupQueries
-import graft.sources.BucketedLayout
 import scala.util.control.NonFatal
 
-/** Build-once, append-many index artifacts for the dedup/ANN family. At
-  * 100 TB the shingle index and the IVF assignment are not per-session
-  * caches — they are tables built once, APPENDED as the corpus streams in,
-  * and consumed by every downstream dedup/search job. Persisting them
-  * through [[BucketedLayout]] buys two things:
+/** Persisted artifacts for the dedup/ANN/text-stats family: at 100 TB a
+  * trained model or a derived layer (shingle index, pick sets, verified
+  * pairs, encoded vectors) is built once and SERVED, not rebuilt by every
+  * session. Two kinds, both path-addressed parquet under the warehouse
+  * dir and both keyed on the source's content-digest manifest
+  * ([[fileFingerprintDigest]] / [[sourceManifest]]) plus a build tag:
   *
-  *  1. repeat jobs SKIP THE BUILD — the expensive tokenize→hash→explode
-  *     scan over the corpus (resp. the centroid-assignment projection)
-  *     never reruns; consumers read the parquet artifact;
-  *  2. the bucket layout pre-pays the first shuffle: the table is
-  *     bucketed on its join/aggregation key (`h` for the shingle index,
-  *     `cid` for the IVF assignment), so the bucket-keyed aggregation
-  *     stage — the collect_list feeding pair expansion, per-bucket ANN
-  *     membership — plans with ZERO Exchange nodes in any later session
-  *     (IndexArtifactsSpec pins this). Downstream stages keyed otherwise
-  *     (e.g. the (da, db) pair aggregation after in-bucket expansion)
-  *     still shuffle, as they must — the artifact removes the corpus-
-  *     sized exchange, not every exchange.
+  *  1. MODELS ([[persistModel]] / [[readModel]], and the frozen-model
+  *     pair [[persistModelFrozen]] / [[readModelFrozen]]): bounded rows
+  *     (centroids, codebooks, sketches) read on the driver;
+  *  2. DERIVED LAYERS ([[persistDerived]] / [[readDerived]], and the one
+  *     incremental path [[serveDerivedIncremental]] with
+  *     [[compactDerived]]): corpus-fraction-sized tables read
+  *     distributed. A grown source appends only the new files' rows, a
+  *     shrunken one derives the survivors from the artifact, anything
+  *     else rebuilds exactly; a per-path monitor plus a cross-JVM lease
+  *     serialize the writers.
   *
-  * Incremental maintenance doctrine: the persisted index is the RAW
-  * per-doc distinct shingle set, and the DfCap hot-shingle policy is
-  * applied at READ time ([[pairsFromIndex]]). That split is what makes
-  * appends EXACTLY equivalent to a full rebuild: raw(initial docs) ∪
-  * raw(appended docs) = raw(all docs) for disjoint doc_ids, while a
-  * pre-capped artifact could never be appended correctly (each batch
-  * caps against its own document frequencies, not the global ones). The
-  * read-time cap costs one h-keyed aggregation that rides the bucket
-  * layout with zero Exchange.
-  *
-  * Bucket counts are a layout knob: pick ≈ cluster parallelism at build
-  * time (bucket count bounds the write fan-out and the later scan's
-  * natural task count).
+  * A layer whose output depends on global state (the DfCap hot-shingle
+  * cap, cluster labels) keeps the raw per-row layer as its artifact and
+  * vetoes an append that would move the global state, so every serve
+  * equals a full rebuild.
   */
 object IndexArtifacts {
 
-  /** Write the raw (uncapped, per-doc distinct) (doc_id, h) shingle index
-    * for `docsDir` as a parquet table bucketed + sorted on `h`.
-    */
-  def persistShingleIndex(s: SparkSession, docsDir: String, table: String,
-                          buckets: Int = 32): Unit =
-    BucketedLayout.writeBucketed(
-      DedupQueries.uncappedShingleHashes(s, docsDir), table, "h", buckets)
-
-  /** Incremental maintenance: shingle a batch of NEW documents (doc_id,
-    * text — e.g. one streamed micro-batch) and append into the bucketed
-    * artifact, preserving the layout. No full-corpus rescan: only the
-    * batch is tokenized and hashed. Appended doc_ids are expected to be
-    * new; a replayed batch (foreachBatch is at-least-once) is harmless
-    * because [[pairsFromIndex]] dedups on (h, doc_id) at read.
-    */
-  def appendShingleIndex(s: SparkSession, newDocs: DataFrame, table: String,
-                         buckets: Int = 32): Unit =
-    BucketedLayout.appendBucketed(
-      // fanOut: the shingle+md5 pass is CPU-bound (measured ~6× faster
-      // parallelized even on tiny scans) and a micro-batch often arrives
-      // in one partition; identity on already-parallel input
-      DedupQueries.shinglesOf(
-        graft.Tables.fanOut(newDocs.select(col("doc_id"), col("text")))),
-      table, "h", buckets)
-
-  /** The persisted index, bucket layout intact. The relation cache is
-    * refreshed first: appends land from OTHER sessions (a foreachBatch
-    * micro-batch runs in a clone with its own SessionCatalog), so a
-    * long-lived reader session would otherwise serve the stale file list
-    * it cached before the append. The refresh only drops the cache entry;
-    * the re-listing cost lands on the next query — the price of reading
-    * an append-maintained table correctly.
-    */
-  def shingleIndex(s: SparkSession, table: String): DataFrame = {
-    s.catalog.refreshTable(table)
-    s.table(table)
-  }
-
-  /** Shared-shingle candidate pairs (da, db, shared) over a PERSISTED
-    * index: the (h)-keyed bucket aggregation clusters on the table's
-    * bucket column — no corpus-sized Exchange, no index rebuild.
-    *
-    * Two read-time guards, both riding the bucket layout exchange-free
-    * (hash-partitioning on `h` satisfies clustering on (h, doc_id)):
-    * a (h, doc_id) distinct on the pair-generation side — so an
-    * at-least-once replayed append cannot inflate `shared` counts — and
-    * the DfCap hot-shingle anti-join (see the class doc for why the cap
-    * lives at read time). The hot-set branch computes count_distinct
-    * over the RAW scan rather than reusing the distinct-ed frame: the
-    * exchange-free layout leaves no Exchange node for ReuseExchange to
-    * share between two consumers, so a shared distinct would simply run
-    * twice — this shape is two cheap bucketed scans, one distinct, one
-    * df aggregation, still zero Exchanges.
-    */
-  def pairsFromIndex(s: SparkSession, table: String): DataFrame = {
-    val idx = shingleIndex(s, table)
-    val hot = idx.groupBy("h")
-      .agg(count_distinct(col("doc_id")).as("df"))
-      .filter(col("df") > graft.operators.DedupQueries.DfCapValue)
-      .select("h")
-    DedupQueries.pairsPlan(
-      idx.distinct().join(hot, Seq("h"), "left_anti").select("doc_id", "h"))
-  }
-
-  /** Write the winnowing-fingerprint index — q_text_winnow's pick sets
-    * (doc_id, h) as a table bucketed + sorted on `h`, the MOSS twin of
-    * [[persistShingleIndex]] at ~2/(W+1) the row count. Picks are a pure
-    * per-document function of the text (window minima never cross doc
-    * boundaries), so raw(initial) ∪ raw(appended) = raw(all) for disjoint
-    * doc_ids — appends equal a rebuild exactly, and the DfCap hot-hash
-    * policy stays at read time ([[pairsFromWinnowIndex]]), the shingle
-    * cap-at-read doctrine.
-    */
-  def persistWinnowIndex(s: SparkSession, docs: DataFrame, table: String,
-                         buckets: Int = 32): Unit =
-    BucketedLayout.writeBucketed(
-      graft.operators.TextQueries.winnowPicks(
-        graft.Tables.fanOut(docs.select(col("doc_id"), col("text"))))
-        .select(col("doc_id"), col("h")),
-      table, "h", buckets)
-
-  /** Incremental maintenance: winnow ONLY the new (doc_id, text) batch
-    * and append its picks, preserving the layout. A replayed batch
-    * (foreachBatch is at-least-once) is harmless: the pair reader
-    * distincts (doc_id, h) exchange-free before capping.
-    */
-  def appendWinnowIndex(s: SparkSession, newDocs: DataFrame, table: String,
-                        buckets: Int = 32): Unit =
-    BucketedLayout.appendBucketed(
-      graft.operators.TextQueries.winnowPicks(
-        graft.Tables.fanOut(newDocs.select(col("doc_id"), col("text"))))
-        .select(col("doc_id"), col("h")),
-      table, "h", buckets)
-
-  /** The persisted pick index, bucket layout intact (relation cache
-    * refreshed — see [[shingleIndex]]).
-    */
-  def winnowIndex(s: SparkSession, table: String): DataFrame = {
-    s.catalog.refreshTable(table)
-    s.table(table)
-  }
-
-  /** Winnowed near-dup pairs (da, db, shared, jac_e6 ≥ 0.5) over a
-    * PERSISTED pick index — the exact q_dedup_winnow plan
-    * ([[graft.operators.DedupQueries.winnowPairsPlan]] is the one
-    * definition) with no re-tokenize, no re-winnow, no rebuild: the
-    * replay-guard distinct, the DfCap aggregation, and the (h)-keyed
-    * bucket expansion all satisfy their clustering from the layout.
-    */
-  def pairsFromWinnowIndex(s: SparkSession, table: String): DataFrame =
-    graft.operators.DedupQueries.winnowPairsPlan(winnowIndex(s, table))
-
-  /** Write the SymSpell TYPO-VARIANT index — the entity-resolution member
-    * of the build-once family (VERDICT r11 missing #1): the (blk,
-    * p_partkey) deletion-neighborhood bucket keys of a part catalog
-    * ([[DedupQueries.typoVariants]] — the fused rolling-hash kernel, no
-    * variant strings materialized), bucketed + sorted on `blk`. Variants
-    * are a pure per-row function of (p_name, p_brand, p_type), so
-    * variants(A) ∪ variants(B) = variants(A ∪ B) for disjoint part
-    * batches — appends equal a rebuild exactly, and the TypoVariantCap
-    * stays at read time ([[pairsFromTypoIndex]]) because it ranks
-    * against GLOBAL bucket membership (the shingle cap-at-read
-    * doctrine). `parts` needs (p_partkey, p_name, p_brand, p_type).
-    */
-  def persistTypoIndex(s: SparkSession, parts: DataFrame, table: String,
-                       buckets: Int = 16): Unit =
-    BucketedLayout.writeBucketed(
-      DedupQueries.typoVariants(parts), table, "blk", buckets)
-
-  /** Incremental maintenance: expand ONLY the new part batch's variant
-    * neighborhood and append, preserving the layout. A replayed batch
-    * (foreachBatch is at-least-once) leaves exact-duplicate (blk,
-    * p_partkey) rows; the pair reader distincts them exchange-free.
-    */
-  def appendTypoIndex(s: SparkSession, newParts: DataFrame, table: String,
-                      buckets: Int = 16): Unit =
-    BucketedLayout.appendBucketed(
-      DedupQueries.typoVariants(newParts), table, "blk", buckets)
-
-  /** The persisted variant index, bucket layout intact (relation cache
-    * refreshed — see [[shingleIndex]]).
-    */
-  def typoIndex(s: SparkSession, table: String): DataFrame = {
-    s.catalog.refreshTable(table)
-    s.table(table)
-  }
-
-  /** Typo near-dup pairs (pa, pb, dist ≤ 2) over a PERSISTED variant
-    * index — the exact q_dedup_typos plan
-    * ([[DedupQueries.typoPairsPlan]] is the one definition) with no
-    * variant re-expansion: the replay-guard distinct, the
-    * TypoVariantCap window, and the blk-keyed bucket aggregation all
-    * satisfy their clustering from the layout. `parts` supplies the
-    * (p_partkey, p_name) side for the near-dup-sized Damerau verify.
-    */
-  def pairsFromTypoIndex(s: SparkSession, table: String,
-                         parts: DataFrame): DataFrame =
-    DedupQueries.typoPairsPlan(
-      typoIndex(s, table).distinct(),
-      parts.select(col("p_partkey"), col("p_name")))
-
-  /** Write the TOKEN-COUNT artifact: per-batch PARTIAL counts
-    * (token, batch_id, n) bucketed + sorted on `token` — the text-stats
-    * member of the build-once family. Token counts are the mergeable
-    * summary behind the whole corpus-stats stack (the zipf head, tf-idf
-    * document frequencies, surprisal vocabularies): partials merge by
-    * ONE further sum, so appends ≡ rebuild EXACTLY — counts(A) ⊎
-    * counts(B) summed = counts(A ∪ B) for any batch split. Replay
-    * guard: an at-least-once re-append writes IDENTICAL (token,
-    * batch_id, n) rows, so the reader's per-(token, batch_id) max()
-    * collapses duplicates before the sum — exact idempotence without a
-    * distinct over raw token instances. Both read-side aggregations key
-    * on the bucket-column prefix and plan zero Exchange
-    * (IndexArtifactsSpec pins it).
-    */
-  /** The bootstrap's reserved batch id: foreachBatch ids start at 0 (and
-    * restart at 0 on a fresh checkpoint), so a 0-id bootstrap would share
-    * a (token, batch_id) key with the first streamed batch and the
-    * reader's replay-guard max() would FOLD the two partials instead of
-    * summing them — a silent undercount on every shared token (ADVICE
-    * r10). −1 can never be produced by the streaming engine. */
-  val BootstrapBatchId: Long = -1L
-
-  def persistTokenCounts(s: SparkSession, docs: DataFrame, table: String,
-                         buckets: Int = 32): Unit =
-    BucketedLayout.writeBucketed(
-      batchTokenCounts(graft.Tables.fanOut(docs), BootstrapBatchId),
-      table, "token", buckets)
-
-  /** Incremental maintenance: tokenize ONLY the new (doc_id, text) batch
-    * into partial counts appended under `batchId` (foreachBatch supplies
-    * it — stable across a replay, which is what makes the reader's
-    * max-per-batch replay guard exact).
-    */
-  def appendTokenCounts(s: SparkSession, newDocs: DataFrame, table: String,
-                        batchId: Long, buckets: Int = 32): Unit =
-    BucketedLayout.appendBucketed(
-      batchTokenCounts(graft.Tables.fanOut(newDocs), batchId),
-      table, "token", buckets)
-
-  private def batchTokenCounts(docs: DataFrame, batchId: Long): DataFrame =
-    docs.select(explode(split(col("text"), " ")).as("token"))
-      .groupBy("token").agg(count(lit(1)).as("n"))
-      .select(col("token"), lit(batchId).as("batch_id"), col("n"))
-
-  /** Folded corpus counts (token, n): replay-deduped (max per (token,
-    * batch_id)) then summed — both stages ride the bucket layout with
-    * zero Exchange. Relation cache refreshed (see [[shingleIndex]]).
-    */
-  def tokenCounts(s: SparkSession, table: String): DataFrame = {
-    s.catalog.refreshTable(table)
-    s.table(table)
-      .groupBy("token", "batch_id").agg(max("n").as("n"))
-      .groupBy("token").agg(sum("n").as("n"))
-  }
-
-  /** The q_text_zipf head served from the persisted counts — no corpus
-    * rescan, no re-tokenize (TextQueries.zipfFromCounts is the one
-    * definition with the live query).
-    */
-  def zipfFromTokenCounts(s: SparkSession, table: String): DataFrame =
-    graft.operators.TextQueries.zipfFromCounts(tokenCounts(s, table))
-
-  /** Write the IVF assignment (id, cid — `nProbe` rows per vector) as a
-    * table bucketed + sorted on `cid`, so per-bucket candidate generation
-    * (the ANN join's grouping key) scans shuffle-free. `centroids` is the
-    * bounded (cid, v) model table, e.g. [[KMeans.fit]] output.
-    */
-  def persistIvfAssignment(s: SparkSession, vecs: DataFrame,
-                           centroids: DataFrame, nProbe: Int, table: String,
-                           idCol: String = "vec_id",
-                           buckets: Int = 16): Unit =
-    BucketedLayout.writeBucketed(
-      IvfOps.assign(vecs, IvfOps.centroidBlock(centroids), nProbe)
-        .select(col(idCol), col("cid")),
-      table, "cid", buckets)
-
-  /** Incremental maintenance: assign a batch of NEW vectors against the
-    * SAME centroid model the artifact was built with and append. Because
-    * assignment is a pure per-row function of (vector, centroids), the
-    * appended table equals a full re-assignment of the union — provided
-    * the model is unchanged. Centroid drift (a model retrained on the
-    * grown corpus) requires a rebuild via [[persistIvfAssignment]];
-    * maintenance under a frozen model is the standard IVF posture between
-    * periodic re-trains.
-    */
-  def appendIvfAssignment(s: SparkSession, newVecs: DataFrame,
-                          centroids: DataFrame, nProbe: Int, table: String,
-                          idCol: String = "vec_id",
-                          buckets: Int = 16): Unit =
-    BucketedLayout.appendBucketed(
-      IvfOps.assign(newVecs, IvfOps.centroidBlock(centroids), nProbe)
-        .select(col(idCol), col("cid")),
-      table, "cid", buckets)
-
-  /** The persisted assignment, bucket layout intact (relation cache
-    * refreshed — see [[shingleIndex]]).
-    */
-  def ivfAssignment(s: SparkSession, table: String): DataFrame = {
-    s.catalog.refreshTable(table)
-    s.table(table)
-  }
-
-  /** Replay-safe read of the persisted assignment: an at-least-once
-    * appender ([[graft.streaming.StreamingOps.maintainIvfIndex]]) can land
-    * a micro-batch twice, and assignment under a frozen model is a pure
-    * per-row function — so EXACT-duplicate (id, cid) rows are the only
-    * artifact a replay leaves, and a distinct restores rebuild-equality.
-    * cid (the bucket key) is a subset of the distinct keys, so the
-    * distinct plans exchange-free off the layout — the same replay-dedup
-    * doctrine as [[pairsFromFingerprintIndex]].
-    */
-  def ivfAssignmentDistinct(s: SparkSession, table: String): DataFrame =
-    ivfAssignment(s, table).distinct()
-
-  /** Write a perceptual-fingerprint index — the multimodal twin of
-    * [[persistShingleIndex]]. `fp` is a (doc_id, simhash) table of 60-bit
-    * fingerprints (image ahash60, audio afp60, or the text simhash — the
-    * band machinery is shared); the PERSISTED shape is the 4×15-bit band
-    * expansion (doc_id, simhash, b, bsig), bucketed + sorted on `bsig`,
-    * so every read-side stage of candidate generation — the replay-dedup
-    * distinct, the per-bucket cap window, the bucket aggregation feeding
-    * pair expansion — satisfies its clustering straight from the layout
-    * and plans with ZERO Exchange nodes (bsig is a subset of each stage's
-    * keys; IndexArtifactsSpec pins this).
-    *
-    * Persisting the BANDED rows (not the raw fingerprints) is what buys
-    * the exchange-free read: banding is a pure per-row function of the
-    * fingerprint, so appended band rows equal a rebuild's exactly, while
-    * the bucket cap — which ranks against GLOBAL bucket membership —
-    * stays at read time ([[pairsFromFingerprintIndex]]), the same
-    * cap-at-read doctrine as the shingle DfCap. Keep image and audio
-    * fingerprints in SEPARATE tables: the band join is modality-blind,
-    * and a mixed table would surface spurious cross-modal pairs.
-    */
-  def persistFingerprintIndex(s: SparkSession, fp: DataFrame, table: String,
-                              buckets: Int = 16): Unit =
-    BucketedLayout.writeBucketed(
-      DedupQueries.bandedFingerprints(fp), table, "bsig", buckets)
-
-  /** Incremental maintenance: band a batch of NEW (doc_id, simhash)
-    * fingerprints (e.g. one streamed micro-batch, already decoded +
-    * hashed map-side) and append, preserving the layout. Only the batch
-    * is banded — no corpus re-fingerprint, closing the gap where a
-    * streamed media corpus had to rebuild its perceptual index from
-    * scratch while the text shingle index appended. A replayed batch
-    * (foreachBatch is at-least-once) is harmless: the reader distincts
-    * the exact-duplicate band rows exchange-free before pairing.
-    */
-  def appendFingerprintIndex(s: SparkSession, newFp: DataFrame, table: String,
-                             buckets: Int = 16): Unit =
-    BucketedLayout.appendBucketed(
-      DedupQueries.bandedFingerprints(newFp), table, "bsig", buckets)
-
-  /** The persisted banded fingerprints, bucket layout intact (relation
-    * cache refreshed — see [[shingleIndex]]).
-    */
-  def fingerprintIndex(s: SparkSession, table: String): DataFrame = {
-    s.catalog.refreshTable(table)
-    s.table(table)
-  }
-
-  /** Near-dup candidate pairs (da, db, hamming ≤ `maxHamming`) over a
-    * PERSISTED fingerprint index: distinct (replay guard) → per-bucket
-    * cap → in-bucket expansion, all riding the bucket layout with zero
-    * Exchange — no re-decode, no re-fingerprint, no rebuild. Equals
-    * `simhashBandPairs(fp).filter(hamming ≤ maxHamming)` over the union
-    * of everything persisted + appended (IndexArtifactsSpec).
-    */
-  def pairsFromFingerprintIndex(s: SparkSession, table: String,
-      maxHamming: Int = graft.operators.MultimodalQueries.PhashMaxHamming)
-      : DataFrame =
-    DedupQueries.bandPairsFromBanded(fingerprintIndex(s, table).distinct())
-      .filter(col("hamming") <= maxHamming)
-
-  /** Persisted-Bloom geometry: capacity is a BUILD-TIME layout knob (like
-    * bucket counts) — every appended batch must sketch with the IDENTICAL
-    * (expected, numBits) pair or the OR-merge is meaningless, so both are
-    * module constants, sized for the corpus the artifact is expected to
-    * grow into (2 MiB of bits here; production scales capacity, not the
-    * bits-per-item ratio — and must also raise
+  /** Bloom geometry for every persisted membership sketch (the corpus
+    * gate and the contamination gate): a build-time layout knob, kept as
+    * module constants so a sketch and every probe of it hash alike.
+    * Sized for the corpus the sketch is expected to grow into (2 MiB of
+    * bits here; production scales capacity, not the bits-per-item ratio
+    * — and must also raise
     * spark.sql.optimizer.runtime.bloomFilter.{maxNumItems,maxNumBits},
     * which SILENTLY clamp BloomFilterAggregate's geometry past 4e6
     * items / 67108864 bits). The hash count derives from this geometry,
-    * not from actual insertions, so every batch hashes identically.
+    * not from actual insertions.
     */
   val BloomExpectedItems: Long = 1L << 20
   val BloomNumBits: Long = BloomExpectedItems * DedupQueries.BloomBitsPerItem
 
-  /** Start the membership-sketch artifact: one serialized Bloom row over
-    * `docs`' content hashes. The sketch twin of the shingle/fingerprint/
-    * IVF artifacts, for the cheapest dedup question — "has this content
-    * PROBABLY been ingested already?" — answered with no corpus-sized
-    * join and no corpus rescan.
-    */
-  def persistBloom(s: SparkSession, docs: DataFrame, table: String): Unit =
-    bloomWriteLocked(s, table) { _ =>
-      DedupQueries.bloomAgg(docs, BloomExpectedItems, BloomNumBits)
-        .filter(col("bf").isNotNull)
-        .write.mode("overwrite").saveAsTable(table)
-      true
-    }
-
-  /** Serialize a Bloom-artifact WRITE under the table's monitor + lease —
-    * the single-writer discipline every other artifact family already
-    * uses. Without it a compaction could collect the persisted rows,
-    * lose a row a concurrent [[appendBloom]] lands mid-collect, and
-    * overwrite with the pre-append merge — silently dropping that
-    * batch's bits and breaking the "false negatives impossible"
-    * contract (r18 self-review). Writers RETRY until the lease grants:
-    * an append is at-least-once batch absorption and must not be
-    * dropped (the TTL break bounds the wait against a dead holder).
-    * The body receives the fence and returns whether it committed;
-    * a fence-refused body re-queues like a contended acquire.
-    */
-  private def bloomWriteLocked(s: SparkSession, table: String)
-                              (body: (() => Boolean) => Boolean): Unit = {
-    val path = modelPath(s, table)
-    val monitor = serveLocks.computeIfAbsent(path, _ => new Object)
-    var done = false
-    while (!done) {
-      done = monitor.synchronized {
-        withLease(s, path)(fence => body(fence))
-      }.getOrElse(false)
-      if (!done) Thread.sleep(200)
-    }
-  }
-
-  /** Incremental maintenance: sketch ONLY the new batch and append its
-    * one row; the reader OR-merges. Replays (foreachBatch is
-    * at-least-once) are the cleanest in the family: re-OR-ing an
-    * already-absorbed batch is bit-level idempotent. An EMPTY batch
-    * appends nothing: BloomFilterAggregate evaluates to NULL over zero
-    * rows, and a persisted NULL row would NPE every later read — the
-    * isNotNull filter (also belt-and-braces in [[bloomBytes]]) keeps an
-    * empty micro-batch from poisoning the artifact.
-    */
-  def appendBloom(s: SparkSession, newDocs: DataFrame, table: String): Unit =
-    bloomWriteLocked(s, table) { _ =>
-      DedupQueries.bloomAgg(newDocs, BloomExpectedItems, BloomNumBits)
-        .filter(col("bf").isNotNull)
-        .write.mode("append").saveAsTable(table)
-      true
-    }
-
-  /** The artifact's merged sketch bytes: OR of every persisted row (row
-    * count = append count — compact periodically via [[compactBloom]];
-    * each row is [[BloomNumBits]]/8 bytes, bounded model state).
-    * Identical geometry makes the merge exact: bytes equal a one-shot
-    * sketch over the union of every batch (IndexArtifactsSpec pins
-    * bit-for-bit equality).
-    */
-  def bloomBytes(s: SparkSession, table: String): Array[Byte] = {
-    import org.apache.spark.util.sketch.BloomFilter
-    s.catalog.refreshTable(table)
-    // bounded sketch rows (BloomNumBits/8 bytes each) — driver-side read
-    // (r19), with the catalog read as fallback. The refreshTable above
-    // stays: Spark-read consumers elsewhere must not see a stale listing.
-    val rows = LocalParquet.readRows(s, tablePath(s, table)).map(_._2)
-      .getOrElse(s.table(table).collect().toSeq)
-      .map(_.getAs[Array[Byte]]("bf"))
-      .filter(_ != null) // a legacy null row (pre-guard append) is inert
-    require(rows.nonEmpty, s"empty bloom artifact $table")
-    val merged = BloomFilter.readFrom(new java.io.ByteArrayInputStream(rows.head))
-    rows.tail.foreach(b =>
-      merged.mergeInPlace(BloomFilter.readFrom(new java.io.ByteArrayInputStream(b))))
-    val out = new java.io.ByteArrayOutputStream()
-    merged.writeTo(out)
-    out.toByteArray
-  }
-
-  /** Rewrite the artifact as its single merged row, bounding the reader's
-    * merge work after many appends. */
-  def compactBloom(s: SparkSession, table: String): Unit = {
-    val path = modelPath(s, table)
-    val monitor = serveLocks.computeIfAbsent(path, _ => new Object)
-    // single attempt, unlike the append retry: compaction is OPTIONAL
-    // maintenance — contended or fence-lost just leaves the (valid)
-    // multi-row layout for a later pass
-    monitor.synchronized {
-      withLease(s, path) { fence =>
-        val bytes = bloomBytes(s, table)
-        // re-verify after the collect: a TTL-broken lease means a
-        // foreign appender may be landing a row this merge didn't see
-        if (fence()) {
-          import s.implicits._
-          Seq(bytes).toDF("bf").write.mode("overwrite").saveAsTable(table)
-        }
-      }
-    }: Unit
-  }
-
-  /** Probe a batch against the persisted sketch: merged bytes inline as a
-    * foldable literal, the probe is pure map-side — (doc_id, maybe_seen)
-    * with false positives tunable by geometry and false negatives
-    * impossible.
-    */
-  def probeBloom(s: SparkSession, batch: DataFrame, table: String): DataFrame =
-    DedupQueries.bloomProbeBytes(batch, bloomBytes(s, table))
-
-  /** Fingerprint of the INPUT a model was trained on: the source parquet
-    * file listing (name:size:mtime, sorted) hashed — a driver-side
-    * filesystem stat, no Spark job. Changes whenever the fixture is
-    * regenerated, so a stale persisted model can never serve for a new
-    * corpus; identical bytes re-listed yield the same print.
-    *
-    * Listed through the Hadoop FileSystem API, not java.io.File, so
-    * non-local paths (hdfs://, s3a://) fingerprint their REAL file
-    * status — a java.io listing silently returned empty there, giving
-    * every distributed path one constant fingerprint and letting
-    * readModel serve a stale model after an in-place regeneration
-    * (ADVICE r11). An unlistable path (absent dir, bad URI) yields the
-    * empty-listing fingerprint, which never matches a real one.
-    *
-    * LEGACY PRIMITIVE as of r17: no persisted family keys on this form
-    * anymore (all migrated to [[fileFingerprintDigest]], which also
-    * catches same-size-same-mtime in-place rewrites) — new persisted
-    * state must use the digest form.
-    */
-  def fileFingerprint(path: String): String =
-    fileFingerprintIn(activeHadoopConf, path)
-
-  /** [[fileFingerprint]] over the DIGESTED dataOnly manifest, so an
-    * in-place same-size-same-mtime source rewrite invalidates it exactly
-    * like any `__mf` layer (the r16 content-digest rule). As of r17 this
-    * is the fingerprint EVERY persisted model/derived family keys on
-    * (VERDICT r16 #3 — each family bumped its version tag once to
-    * migrate); the undigested [[fileFingerprint]] remains only as the
-    * legacy primitive. */
+  /** Fingerprint of the INPUT an artifact was built from: the digest of
+    * its [[sourceManifest]] — a driver-side filesystem stat plus a
+    * bounded head/tail CRC per file, no Spark job. Changes whenever the
+    * source is regenerated, grown, shrunk or rewritten in place (even
+    * with its size and mtime preserved), so a stale persisted artifact
+    * can never serve for a new corpus; identical bytes re-listed yield
+    * the same print. Every persisted model/derived family keys on it. */
   def fileFingerprintDigest(path: String): String =
-    java.util.UUID.nameUUIDFromBytes(
-      ("crc|" + sourceManifest(path)).getBytes("UTF-8")).toString
+    manifestDigest(sourceManifest(path))
 
   private def activeHadoopConf: org.apache.hadoop.conf.Configuration =
     SparkSession.getActiveSession
       .map(_.sparkContext.hadoopConfiguration)
       .getOrElse(new org.apache.hadoop.conf.Configuration())
 
-  private[graft] def fileFingerprintIn(
-      conf: org.apache.hadoop.conf.Configuration, path: String): String =
-    java.util.UUID.nameUUIDFromBytes(
-      sourceManifestIn(conf, path, dataOnly = false).getBytes("UTF-8")).toString
-
-  /** The raw listing [[fileFingerprint]] hashes — one `name:size:mtime`
-    * line per file, sorted by name — exposed unhashed so the incremental
-    * serve ([[serveDerivedIncremental]]) can DIFF two listings instead of
-    * only equality-testing their hashes: a grown listing whose old lines
-    * are untouched means "new partitions appended", the one source
-    * mutation a per-row-exact derived layer can absorb without a corpus
-    * rebuild. DATA FILES ONLY: Spark rewrites `_SUCCESS` on every append,
-    * so commit markers / hidden files (`_`/`.`-prefixed — exactly the
-    * files Spark readers skip) would turn every append into a phantom
-    * mutation. The fingerprint keeps the unfiltered listing (dataOnly =
-    * false) so existing persisted artifacts stay valid. (At manifest
-    * sizes where one sidecar row gets heavy — 10⁶+ source files —
-    * production promotes this to a manifest TABLE; the diff logic is
-    * unchanged.)
+  /** The raw listing [[fileFingerprintDigest]] hashes — one
+    * `name:size:mtime:crc` line per data file, sorted by name — exposed
+    * unhashed so the incremental serve ([[serveDerivedIncremental]]) can
+    * DIFF two listings instead of only equality-testing their hashes: a
+    * grown listing whose old lines are untouched means "new partitions
+    * appended", the one source mutation a per-row-exact derived layer can
+    * absorb without a corpus rebuild.
+    *
+    * DATA FILES ONLY: Spark rewrites `_SUCCESS` on every append, so
+    * commit markers / hidden files (`_`/`.`-prefixed — exactly the files
+    * Spark readers skip) would turn every append into a phantom mutation.
+    * The 4th field is a CONTENT DIGEST ([[edgeCrc]]), so a file
+    * rewritten in place with its size and mtime preserved (rsync-style
+    * restores, object-store overwrite with clock skew) still reads as a
+    * mutation → rebuild, never a stale serve.
+    *
+    * Listed through the Hadoop FileSystem API, not java.io.File, so
+    * non-local paths (hdfs://, s3a://) list their REAL file status. An
+    * unlistable path (absent dir, bad URI) yields the empty manifest,
+    * which never matches a real one. (At 10⁶+ source files production
+    * promotes the manifest to a TABLE and digests at ingest; the diff
+    * logic is unchanged.)
     */
-  private[graft] def sourceManifest(path: String): String =
-    sourceManifestIn(activeHadoopConf, path, dataOnly = true)
-
-  /** Manifest lines are `name:size:mtime` — plus, on the dataOnly (serve)
-    * path, a CONTENT DIGEST 4th field (VERDICT r15 #6): CRC32 over the
-    * first and last 4 KiB + the length, so a file rewritten in place with
-    * its size and mtime preserved (rsync-style restores, object-store
-    * overwrite with clock skew) still reads as a mutation → rebuild,
-    * never a stale serve. Head+tail covers the parquet footer (schema,
-    * row-group offsets — any structural rewrite moves it) at a fixed
-    * 8 KiB read per file, independent of file size; at 10⁶+ source files
-    * production promotes the manifest to a TABLE and digests at ingest.
-    * As of r17 every persisted family keys on the digested form (the
-    * fpv2 migration — each bumped its version tag once); the hash-only
-    * [[fileFingerprint]] remains only as the legacy primitive.
-    */
-  private[graft] def sourceManifestIn(
-      conf: org.apache.hadoop.conf.Configuration, path: String,
-      dataOnly: Boolean): String = {
+  private[graft] def sourceManifest(path: String): String = {
     import org.apache.hadoop.fs.Path
     try {
       val p = new Path(path)
-      val fs = p.getFileSystem(conf)
+      val fs = p.getFileSystem(activeHadoopConf)
       val st = fs.getFileStatus(p)
       val files =
         if (st.isFile) Array(st)
         else fs.listStatus(p).filter(_.isFile)
-          .filter(x => !dataOnly || {
+          .filter { x =>
             val n = x.getPath.getName
             !n.startsWith("_") && !n.startsWith(".")
-          })
+          }
           .sortBy(_.getPath.getName)
       files.map { x =>
-        val base = s"${x.getPath.getName}:${x.getLen}:${x.getModificationTime}"
-        if (dataOnly) base + ":" + edgeCrc(fs, x) else base
+        s"${x.getPath.getName}:${x.getLen}:${x.getModificationTime}:" +
+          edgeCrc(fs, x)
       }.mkString("\n")
     } catch { case _: Exception => "" }
   }
@@ -686,18 +191,6 @@ object IndexArtifacts {
     s"${wh.stripSuffix("/")}/$table"
   }
 
-  /** A CATALOG table's data location (the Bloom artifacts are
-    * `saveAsTable`-managed, unlike the path-addressed model/derived
-    * families) — from the catalog metadata, falling back to the
-    * warehouse-dir convention when the lookup fails. Only used to route
-    * the driver-side read; a wrong path just means the Spark-read
-    * fallback runs, exactly the old behaviour. */
-  private def tablePath(s: SparkSession, table: String): String =
-    try s.sessionState.catalog.getTableMetadata(
-      org.apache.spark.sql.catalyst.TableIdentifier(table))
-      .location.toString
-    catch { case _: Exception => modelPath(s, table) }
-
   /** The digest fingerprint of a RAW manifest string — the exact value
     * [[fileFingerprintDigest]] yields for the source that listing came
     * from, factored out so the frozen-model read can reconstruct the
@@ -710,9 +203,10 @@ object IndexArtifacts {
     * plus a MANIFEST sidecar (`table__mmf`) recording what the model was
     * fit on — the FROZEN-MODEL posture (VERDICT r16 #2): between
     * periodic retrains, production serves the model fit on the base
-    * corpus even as the corpus GROWS (the standard IVF discipline —
-    * [[appendIvfAssignment]]), which is exactly what lets corpus-linear
-    * encoded indexes append instead of rebuilding. The sidecar writes
+    * corpus even as the corpus GROWS (the standard IVF discipline of
+    * assigning new vectors against a frozen model between retrains),
+    * which is exactly what lets corpus-linear encoded indexes append
+    * instead of rebuilding. The sidecar writes
     * AFTER the model (commit-marker ordering); a torn write reads as
     * "no freeze evidence" and only disables the frozen path, never
     * serves a wrong model (the model rows still carry their own `__fp`).
@@ -834,15 +328,16 @@ object IndexArtifacts {
     * written AFTER the data, so the sidecar is the commit marker — a
     * torn write leaves a mismatched sidecar, which reads as "absent →
     * rebuild", never as a stale serve. Callers combine the INPUT
-    * listing ([[fileFingerprint]]) with a build-version tag in the
+    * listing ([[fileFingerprintDigest]]) with a build-version tag in the
     * fingerprint, so a changed build kernel in a later code drop
     * invalidates every artifact the old kernel wrote.
     *
     * This is the session-memo → cross-session bridge the trained
     * models already ride (VERDICT r10 #6): at data scale a shingle /
-    * winnow / typo-variant layer is MAINTAINED (the append/maintain
-    * family above), never rebuilt per session — a fresh session pays
-    * one parquet read for a build that cost minutes of cluster CPU.
+    * winnow / typo-variant layer is MAINTAINED
+    * ([[serveDerivedIncremental]]), never rebuilt per session — a fresh
+    * session pays one parquet read for a build that cost minutes of
+    * cluster CPU.
     */
   def persistDerived(s: SparkSession, df: DataFrame, table: String,
                      fingerprint: String): Unit = {

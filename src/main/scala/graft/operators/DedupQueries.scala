@@ -46,9 +46,8 @@ object DedupQueries {
     */
   private val DfCap = 100
 
-  /** The DfCap constant for read-time cappers outside this module (the
-    * persisted-artifact path builds its own hot set over the raw scan —
-    * see IndexArtifacts.pairsFromIndex).
+  /** The DfCap constant for callers outside this module (the
+    * ScaleStress bounds record, the cap property spec).
     */
   private[graft] def DfCapValue: Int = DfCap
 
@@ -66,9 +65,9 @@ object DedupQueries {
     shinglesOf(fanOut(documents(s, d)))
 
   /** The shingle pass over an arbitrary (doc_id, text) table — the same
-    * arithmetic as the per-dir memoized index, exposed so incremental
-    * index maintenance ([[graft.api.IndexArtifacts.appendShingleIndex]])
-    * can shingle a streamed micro-batch without a corpus dir.
+    * arithmetic as the per-dir memoized index, exposed so the raw layer's
+    * append delta (only the new source files) and every live-plan
+    * rebuild check shingle through the one definition.
     */
   private[graft] def shinglesOf(docs: DataFrame): DataFrame =
     docs
@@ -97,9 +96,10 @@ object DedupQueries {
   /** DfCap policy over an arbitrary raw (doc_id, h) index: anti-join away
     * the shingles present in more than DfCap documents. The hot set is
     * tiny by construction (heavy tail), so AQE broadcasts it and the cap
-    * costs one aggregation, not a shuffle of the index. Applied at READ
-    * time by the persisted-artifact path so appended batches (which can't
-    * see the global df) keep exact batch-rebuild semantics.
+    * costs one aggregation, not a shuffle of the index. Applied OVER the
+    * raw layer, never inside it, so an appended delta (which can't see
+    * the global df) keeps the raw layer exact; the capped layer vetoes
+    * an append that would promote a shingle across the cap.
     */
   private[graft] def capIndex(raw: DataFrame): DataFrame = {
     val hot = raw.groupBy("h").agg(count(lit(1)).as("df"))
@@ -126,34 +126,10 @@ object DedupQueries {
     * oracle applies the same QUALIFY row_number cap.
     */
   private[graft] def simhashBandPairs(
-      sim: DataFrame, cap: Int = IvfOps.BucketCap): DataFrame =
-    bandPairsFromBanded(bandedFingerprints(sim), cap)
-
-  /** The 4×15-bit band expansion of a (doc_id, simhash) fingerprint
-    * table → (doc_id, simhash, b, bsig). Split out of
-    * [[simhashBandPairs]] because this is also the PERSISTED shape of
-    * the perceptual index (graft.api.IndexArtifacts): banding is a pure
-    * per-row function of the fingerprint, so appended band rows are
-    * exactly the band rows a full rebuild would produce — the property
-    * that makes incremental maintenance sound. The cap stays at read
-    * time ([[bandPairsFromBanded]]) for the same reason the shingle
-    * DfCap does: a per-batch cap ranks against batch-local bucket
-    * membership, not the global one.
-    */
-  private[graft] def bandedFingerprints(sim: DataFrame): DataFrame =
-    sim.select(col("doc_id"), col("simhash"),
+      sim: DataFrame, cap: Int = IvfOps.BucketCap): DataFrame = {
+    val banded = sim.select(col("doc_id"), col("simhash"),
         explode(sequence(lit(0), lit(3))).as("b"))
       .withColumn("bsig", expr("(simhash >> (15 * b)) & 32767"))
-
-  /** Cap + in-bucket pair expansion over an already-banded table (see
-    * [[simhashBandPairs]] for the rationale of each guard). On a table
-    * bucketed on `bsig` the cap window, the bucket aggregation, and a
-    * replay-dedup distinct all satisfy their clustering from the layout
-    * (bsig ⊆ every grouping key here) — zero Exchange nodes
-    * (IndexArtifactsSpec pins this).
-    */
-  private[graft] def bandPairsFromBanded(
-      banded: DataFrame, cap: Int = IvfOps.BucketCap): DataFrame = {
     val byBucket = Window.partitionBy("b", "bsig").orderBy("doc_id")
     val buckets = banded
       .withColumn("__brn", row_number().over(byBucket))
@@ -182,8 +158,8 @@ object DedupQueries {
     * fingerprint: bump whenever a layer's BUILD ALGORITHM changes
     * (shingle hash arithmetic, winnow pick rule, typo variant scheme),
     * so an artifact a previous code drop wrote can never serve under
-    * new semantics — the input fileFingerprint alone only guards DATA
-    * staleness, not code staleness. The tunable CONSTANTS (caps, K,
+    * new semantics — the input fileFingerprintDigest alone only guards
+    * DATA staleness, not code staleness. The tunable CONSTANTS (caps, K,
     * band geometry, thresholds) are folded in mechanically per call
     * site via the `tag` argument, so a constant change self-invalidates
     * without anyone remembering this string exists; only a
@@ -436,11 +412,10 @@ object DedupQueries {
     holderFor(s, d).clusters
 
   /** q_dedup_winnow's pair tail over a raw winnow pick set (doc_id, h —
-    * duplicates tolerated: the leading distinct is the replay guard, so
-    * the same plan serves the live query and the persisted artifact,
-    * [[graft.api.IndexArtifacts.pairsFromWinnowIndex]]): DfCap the hot
-    * hashes, expand in-bucket pairs via the (h)-keyed aggregation, score
-    * exact winnowed Jaccard ≥ 0.5 with sizes joined back.
+    * duplicates tolerated: the leading distinct collapses them): DfCap
+    * the hot hashes, expand in-bucket pairs via the (h)-keyed
+    * aggregation, score exact winnowed Jaccard ≥ 0.5 with sizes joined
+    * back.
     */
   private[graft] def winnowPairsPlan(rawFp: DataFrame,
                                      minJacE6: Long = 500000L): DataFrame =
@@ -465,8 +440,8 @@ object DedupQueries {
     // branch loses ReuseExchange entirely — measured as a full second
     // pick build). Deriving sizes from the bucket table keeps every
     // downstream consumer above the one h exchange; over the session
-    // memo's cache or the artifact's bucket layout the extra
-    // singleton-bucket collect_list churn is linear and partial-combined.
+    // memo's cache the extra singleton-bucket collect_list churn is
+    // linear and partial-combined.
     val buckets = kept.groupBy("h")
       .agg(sort_array(collect_list(col("doc_id"))).as("ids"))
     val sizes = buckets
@@ -528,9 +503,9 @@ object DedupQueries {
       val natural = documents(s, d).rdd.getNumPartitions
       // MANIFEST-INCREMENTAL (r16, extending r15 #3 to the winnow family):
       // picks are a pure per-document function (window minima never cross
-      // doc boundaries — the persistWinnowIndex lemma), so a grown corpus
-      // winnows ONLY the new files; the Rabin-Karp pass, the expensive
-      // step, never re-runs over indexed partitions.
+      // doc boundaries), so a grown corpus winnows ONLY the new files; the
+      // Rabin-Karp pass, the expensive step, never re-runs over indexed
+      // partitions.
       val slug = d.replaceAll("[^A-Za-z0-9]+", "_")
       val (df, src) = graft.api.IndexArtifacts.serveDerivedIncremental(
         s, s"g_drv_winpicks_$slug", s"$d/documents.parquet",
@@ -1027,9 +1002,8 @@ object DedupQueries {
   }
 
   /** The pair PLAN over any capped (doc_id, h) index — shared by the
-    * session memo above and by [[graft.api.IndexArtifacts]], where the
-    * index comes from a persisted h-bucketed table and the groupBy
-    * clusters on the bucket column with no Exchange.
+    * session memo above and by the live-plan rebuild checks
+    * (LifecycleFuzz, the derived-layer specs).
     */
   private[graft] def pairsPlan(sh: DataFrame): DataFrame = {
     val buckets = sh.groupBy("h")
@@ -1043,9 +1017,8 @@ object DedupQueries {
       .agg(count(lit(1)).as("shared"))
   }
 
-  /** Public handle on the memoized DfCap'd (doc_id, h) index — the
-    * build-once artifact [[graft.api.IndexArtifacts.persistShingleIndex]]
-    * writes through [[graft.sources.BucketedLayout]].
+  /** Public handle on the memoized DfCap'd (doc_id, h) index — served
+    * from the manifest-incremental `g_drv_shcap_*` layer.
     */
   def cappedShingleIndex(s: SparkSession, d: String): DataFrame =
     shingleHashes(s, d)
@@ -1411,9 +1384,9 @@ object DedupQueries {
 
   /** One-row Bloom sketch over `docs`' xxhash64(text). The (expected,
     * numBits) pair fixes the sketch GEOMETRY (bit width + hash count) —
-    * two sketches OR-merge iff built with identical geometry, which is
-    * why the persisted-artifact path (graft.api.IndexArtifacts) pins
-    * both as build-time constants.
+    * a sketch and its probes agree only under identical geometry, which
+    * is why the persisted gate sketches pin both as build-time constants
+    * ([[graft.api.IndexArtifacts.BloomExpectedItems]]).
     */
   private[graft] def bloomAgg(docs: DataFrame, expected: Long,
                               numBits: Long): DataFrame =
@@ -1468,11 +1441,6 @@ object DedupQueries {
       Literal(bytes, org.apache.spark.sql.types.BinaryType),
       GraftSqlBridge.toExpression(h)))
   }
-
-  /** [[bloomGateRows]] with the batch-twin presentation sort. */
-  private[graft] def bloomProbeBytes(batch: DataFrame,
-                                     bytes: Array[Byte]): DataFrame =
-    bloomGateRows(batch, bytes).orderBy("doc_id")
 
   /** The corpus-membership sketch for s_dedup_gate, as serialized bytes —
     * session-memoized and artifact-served (fingerprint on
@@ -1807,8 +1775,9 @@ object DedupQueries {
       // (util.sketch Murmur3) — the spec contract is zero false
       // negatives vs the exact semi-join + determinism. At 100 TB the
       // stream probe is O(batch) with the corpus compressed to
-      // [[graft.api.IndexArtifacts.BloomNumBits]] bits of task state,
-      // maintained incrementally by appendBloom — no corpus rescan.
+      // [[graft.api.IndexArtifacts.BloomNumBits]] bits of task state: a
+      // one-shot sketch persisted as a model (readModel/persistModel),
+      // rebuilt only when documents.parquet's digest changes.
       val batch = documents(s, d).filter(col("doc_id") % 10 === 0)
       bloomGateRows(batch, corpusBloomBytes(s, d)).orderBy("doc_id")
     }),
@@ -2291,8 +2260,7 @@ object DedupQueries {
       // q_dedup_ngram over the shingle memo. The uncached one-shot plan
       // (GraftOps.winnowPairs) keeps the h-repartition trick so BOTH
       // branches reuse one exchange (PlanSpec pins the generator count +
-      // ReusedExchange there); the artifact path (pairsFromWinnowIndex)
-      // instead rides its persisted bucket layout with zero exchanges.
+      // ReusedExchange there).
       winnowScoredPairs(s, d)
         .filter(col("jac_e6") >= 500000L)
         .orderBy("da", "db")
@@ -2568,12 +2536,10 @@ object DedupQueries {
     * could a merged pathological bucket drop differently than the
     * oracle, at ~2⁻⁶¹ odds per bucket pair.
     *
-    * A pure per-row function of (p_name, p_brand, p_type) — which is
-    * what makes the PERSISTED artifact appendable exactly
-    * ([[graft.api.IndexArtifacts.persistTypoIndex]]): variants(A) ∪
-    * variants(B) = variants(A ∪ B) for disjoint part batches, with the
-    * TypoVariantCap staying at read time (it ranks against GLOBAL
-    * bucket membership — the shingle cap-at-read doctrine).
+    * A pure per-row function of (p_name, p_brand, p_type):
+    * variants(A) ∪ variants(B) = variants(A ∪ B) for disjoint part
+    * batches, with the TypoVariantCap applied after the union (it ranks
+    * against GLOBAL bucket membership — the shingle cap-over-raw rule).
     */
   private[graft] def typoVariants(parts: DataFrame): DataFrame = {
     import graft.functions.expressions.StringFunctions.deletion_variant_hashes
@@ -2584,10 +2550,9 @@ object DedupQueries {
   }
 
   /** Cap + pair expansion + exact-DL verify over ANY (blk, p_partkey)
-    * variant index with a (p_partkey, p_name) side table — shared by the
-    * live memo below and the persisted-artifact read path
-    * ([[graft.api.IndexArtifacts.pairsFromTypoIndex]]), where every
-    * blk-keyed stage rides the bucket layout exchange-free.
+    * variant index with a (p_partkey, p_name) side table — the one
+    * definition behind the typo-pair layer below and the specs' live-plan
+    * checks.
     *
     * Almost every variant bucket is a singleton (a bucket only fills
     * when names are genuinely ≤2-edits close): minMembers=2 drops the

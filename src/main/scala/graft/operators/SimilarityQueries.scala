@@ -149,11 +149,11 @@ object SimilarityQueries {
       (SparkSession, String, String), Option[String]]()
 
   /** Fingerprint-scheme version: folded into every model tag so the r17
-    * migration from the undigested [[graft.api.IndexArtifacts
-    * .fileFingerprint]] to the CONTENT-DIGEST manifest fingerprint
-    * (VERDICT r16 #3 — closes the same-size-same-mtime stale-restore
-    * hole for the model family) invalidates pre-migration artifacts
-    * exactly once. */
+    * migration from an undigested file-listing fingerprint to the
+    * CONTENT-DIGEST manifest fingerprint
+    * ([[graft.api.IndexArtifacts.fileFingerprintDigest]]; VERDICT r16 #3
+    * — closes the same-size-same-mtime stale-restore hole for the model
+    * family) invalidates pre-migration artifacts exactly once. */
   private val ModelFpVersion = ":fpv2"
 
   private def memoModel(s: SparkSession, kind: String, d: String,

@@ -2251,10 +2251,9 @@ object TextQueries {
       .select(explode(split(col("text"), " ")).as("token"))
       .groupBy("token").agg(count(lit(1)).as("n")))
 
-  /** q_text_zipf's head over a PREBUILT (token, n) count table — the
-    * artifact-reader entry (IndexArtifacts.zipfFromTokenCounts serves
-    * the same head with no corpus rescan). One definition with the live
-    * query. */
+  /** q_text_zipf's head over a PREBUILT (token, n) count table — one
+    * definition for the live query ([[zipfHead]]) and the token-layer
+    * read. */
   private[graft] def zipfFromCounts(vocab: DataFrame): DataFrame =
     vocab.orderBy(col("n").desc, col("token")).limit(50)
       .withColumn("rank",

@@ -128,200 +128,4 @@ object StreamingOps {
       .withColumn("content_md5", md5(col(textCol).cast("binary")))
       .withWatermark(tsCol, watermark)
       .dropDuplicatesWithinWatermark("content_md5")
-
-  /** Incremental shingle-index maintenance: each micro-batch of (doc_id,
-    * text) docs is shingled and APPENDED into the persisted bucketed
-    * artifact (graft.api.IndexArtifacts) — so a streamed corpus is
-    * near-dup-searchable via `pairsFromIndex` without ever rebuilding the
-    * index over the full corpus. Only the batch is tokenized/hashed;
-    * foreachBatch is at-least-once, which is safe here because the
-    * artifact reader dedups on (h, doc_id) exchange-free.
-    *
-    * Pairs with [[corpusIngest]]: gate + exact-dedup the stream, sink the
-    * survivors, and feed the same survivors through this maintenance
-    * query; periodic compaction (full `corpusPipeline`) stays the
-    * escape hatch for centroid/model drift, not for index freshness.
-    */
-  def maintainShingleIndex(docs: DataFrame, table: String, checkpoint: String,
-                           buckets: Int = 32,
-                           trigger: Trigger = Trigger.ProcessingTime("0 seconds")): StreamingQuery = {
-    val append: (DataFrame, Long) => Unit = (batch, _) =>
-      graft.api.IndexArtifacts.appendShingleIndex(
-        batch.sparkSession, batch, table, buckets)
-    docs.writeStream
-      .foreachBatch(append)
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .start()
-  }
-
-  /** Incremental TOKEN-COUNT maintenance — the text-stats member of the
-    * artifact family: each micro-batch of (doc_id, text) docs tokenizes
-    * to PARTIAL counts appended under the batch's foreachBatch id, and
-    * `IndexArtifacts.tokenCounts` folds them (max per batch — the
-    * replay guard — then sum), so a streamed corpus serves zipf / df /
-    * surprisal-style statistics with no rescan and at-least-once
-    * replays are exactly idempotent.
-    */
-  def maintainTokenCounts(docs: DataFrame, table: String, checkpoint: String,
-                          buckets: Int = 32,
-                          trigger: Trigger = Trigger.ProcessingTime("0 seconds")): StreamingQuery = {
-    val append: (DataFrame, Long) => Unit = (batch, id) =>
-      graft.api.IndexArtifacts.appendTokenCounts(
-        batch.sparkSession, batch, table, id, buckets)
-    docs.writeStream
-      .foreachBatch(append)
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .start()
-  }
-
-  /** Incremental WINNOW-index maintenance — [[maintainShingleIndex]]'s
-    * MOSS twin: each micro-batch of (doc_id, text) docs is winnowed
-    * (window-min fingerprint selection, a pure per-document function) and
-    * its picks APPENDED into the persisted bucketed artifact, so a
-    * streamed corpus stays fingerprint-searchable via
-    * `IndexArtifacts.pairsFromWinnowIndex` at ~2/(W+1) the index volume
-    * of the full shingle path. At-least-once replays are safe: the pair
-    * reader distincts (doc_id, h) exchange-free before capping.
-    */
-  def maintainWinnowIndex(docs: DataFrame, table: String, checkpoint: String,
-                          buckets: Int = 32,
-                          trigger: Trigger = Trigger.ProcessingTime("0 seconds")): StreamingQuery = {
-    val append: (DataFrame, Long) => Unit = (batch, _) =>
-      graft.api.IndexArtifacts.appendWinnowIndex(
-        batch.sparkSession, batch, table, buckets)
-    docs.writeStream
-      .foreachBatch(append)
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .start()
-  }
-
-  /** Incremental PERCEPTUAL-index maintenance — [[maintainShingleIndex]]'s
-    * multimodal twin: each micro-batch of (media_id, container) rows is
-    * decoded + fingerprinted MAP-SIDE (ahash60 for `modality = "image"`,
-    * afp60 for `"audio"` — containers of the other modality drop at the
-    * magic sniff, so one mixed stream can feed two maintenance queries
-    * writing two tables) and the banded fingerprints are APPENDED into the
-    * persisted bucketed artifact. A streamed media corpus is then
-    * near-dup-searchable via `IndexArtifacts.pairsFromFingerprintIndex`
-    * without ever re-decoding or re-fingerprinting what already landed —
-    * only the batch pays codec + hash cost. At-least-once replays are
-    * safe: the artifact reader distincts exact-duplicate band rows
-    * exchange-free before pairing.
-    */
-  def maintainFingerprintIndex(containers: DataFrame, table: String,
-                               checkpoint: String, modality: String = "image",
-                               buckets: Int = 16,
-                               trigger: Trigger = Trigger.ProcessingTime("0 seconds")): StreamingQuery = {
-    import graft.operators.MultimodalQueries
-    val fingerprint: DataFrame => DataFrame = modality match {
-      case "image" => b => MultimodalQueries.phashMedia(b)
-        .select(col("media_id").as("doc_id"), col("phash").as("simhash"))
-      case "audio" => b => MultimodalQueries.afpMedia(b)
-        .select(col("media_id").as("doc_id"), col("afp").as("simhash"))
-      case other => throw new IllegalArgumentException(
-        s"modality must be \"image\" or \"audio\", got \"$other\"")
-    }
-    val append: (DataFrame, Long) => Unit = (batch, _) =>
-      graft.api.IndexArtifacts.appendFingerprintIndex(
-        batch.sparkSession, fingerprint(batch), table, buckets)
-    containers.writeStream
-      .foreachBatch(append)
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .start()
-  }
-
-  /** Incremental TYPO-VARIANT-index maintenance — the entity-resolution
-    * member of the incremental-index family: each micro-batch of
-    * (p_partkey, p_name, p_brand, p_type) catalog rows expands its own
-    * SymSpell deletion neighborhood (the fused rolling-hash kernel, pure
-    * per-row — no catalog rescan) and appends the (blk, p_partkey) keys
-    * into the bucketed artifact, so a streamed catalog stays
-    * typo-searchable via `IndexArtifacts.pairsFromTypoIndex` with only
-    * the batch paying variant cost. At-least-once replays are safe: the
-    * pair reader distincts the exact-duplicate key rows exchange-free
-    * before capping.
-    */
-  def maintainTypoIndex(parts: DataFrame, table: String, checkpoint: String,
-                        buckets: Int = 16,
-                        trigger: Trigger = Trigger.ProcessingTime("0 seconds")): StreamingQuery = {
-    val append: (DataFrame, Long) => Unit = (batch, _) =>
-      graft.api.IndexArtifacts.appendTypoIndex(
-        batch.sparkSession, batch, table, buckets)
-    parts.writeStream
-      .foreachBatch(append)
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .start()
-  }
-
-  /** Incremental IVF-assignment maintenance — the embedding-space member
-    * of the incremental-index family ([[maintainShingleIndex]] → text,
-    * [[maintainFingerprintIndex]] → media, this → vectors): each
-    * micro-batch of (`idCol`, v) vectors is assigned against a FROZEN
-    * centroid model (pure per-row map-side function, `nProbe` rows per
-    * vector) and appended into the bucketed artifact, so a streamed
-    * embedding corpus stays ANN-searchable through the persisted path
-    * without ever re-assigning what already landed.
-    *
-    * The model is collected ONCE at maintainer start (bounded k×dim rows —
-    * the KMeans.fit model-state posture) and rebuilt inside each
-    * micro-batch's own session: the freeze is explicit, every batch
-    * assigns against byte-identical centroids, and no outer-session frame
-    * leaks into foreachBatch. Appends under the frozen model equal a full
-    * re-assignment (IndexArtifactsSpec); centroid DRIFT — a model
-    * retrained on the grown corpus — requires the periodic
-    * [[graft.api.IndexArtifacts.persistIvfAssignment]] rebuild, the
-    * standard IVF posture between re-trains. foreachBatch is
-    * at-least-once: replays land exact-duplicate rows, and
-    * [[graft.api.IndexArtifacts.ivfAssignmentDistinct]]'s bucket-aligned
-    * distinct restores rebuild-equality exchange-free.
-    */
-  def maintainIvfIndex(vecs: DataFrame, centroids: DataFrame, table: String,
-                       checkpoint: String, nProbe: Int = 2,
-                       idCol: String = "vec_id", buckets: Int = 16,
-                       trigger: Trigger = Trigger.ProcessingTime("0 seconds")): StreamingQuery = {
-    val model = centroids.select(col("cid").cast("long"), col("v"))
-      .collect()
-      .map(r => (r.getLong(0), r.getSeq[Double](1)))
-      .toSeq
-    val append: (DataFrame, Long) => Unit = (batch, _) => {
-      val s = batch.sparkSession
-      import s.implicits._
-      val cents = model.toDF("cid", "v")
-      graft.api.IndexArtifacts.appendIvfAssignment(
-        s, batch, cents, nProbe, table, idCol, buckets)
-    }
-    vecs.writeStream
-      .foreachBatch(append)
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .start()
-  }
-
-  /** Incremental membership-sketch maintenance — the cheapest member of
-    * the incremental-index family ([[maintainShingleIndex]] → near-dup
-    * text, [[maintainFingerprintIndex]] → media, [[maintainIvfIndex]] →
-    * vectors, this → exact-membership): each micro-batch of (doc_id,
-    * text) docs is hashed and sketched MAP-SIDE into one Bloom row,
-    * appended to the persisted artifact
-    * ([[graft.api.IndexArtifacts.appendBloom]]). A streamed corpus then
-    * answers "was this content probably ingested already?" via
-    * `IndexArtifacts.probeBloom` with no corpus rescan and no join.
-    * at-least-once replays are bit-level idempotent (OR of already-set
-    * bits); `compactBloom` periodically folds the append rows into one.
-    */
-  def maintainBloom(docs: DataFrame, table: String, checkpoint: String,
-                    trigger: Trigger = Trigger.ProcessingTime("0 seconds")): StreamingQuery = {
-    val append: (DataFrame, Long) => Unit = (batch, _) =>
-      graft.api.IndexArtifacts.appendBloom(batch.sparkSession, batch, table)
-    docs.writeStream
-      .foreachBatch(append)
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .start()
-  }
 }

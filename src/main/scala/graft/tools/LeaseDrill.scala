@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.GraftSession
 import graft.api.IndexArtifacts
+import scala.util.control.NonFatal
 
 /** TWO-PROCESS lease contention drill (VERDICT r17 #3): the cross-JVM
   * filesystem lease, its TTL break, the token-less grace, and the
@@ -279,7 +280,7 @@ object LeaseDrill {
       val p = java.nio.file.Paths.get("target", "lease_drill.json")
       java.nio.file.Files.createDirectories(p.getParent)
       java.nio.file.Files.write(p, (line + "\n").getBytes("UTF-8"))
-    } catch { case t: Throwable =>
+    } catch { case NonFatal(t) =>
       System.err.println(s"[lease-drill] write failed: $t")
     }
     s.stop()

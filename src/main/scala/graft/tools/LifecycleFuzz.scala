@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.GraftSession
 import graft.api.{GraftOps, IndexArtifacts}
 import graft.operators.{DedupQueries, SimilarityQueries}
+import scala.util.control.NonFatal
 
 /** Randomized maintenance-lifecycle driver (VERDICT r17 #2): the serve
   * state machine (append / shrink / compact / freeze-grow / retrain /
@@ -336,7 +337,7 @@ object LifecycleFuzz {
       val p = java.nio.file.Paths.get("target", "lifecycle_property.json")
       java.nio.file.Files.createDirectories(p.getParent)
       java.nio.file.Files.write(p, (line + "\n").getBytes("UTF-8"))
-    } catch { case t: Throwable =>
+    } catch { case NonFatal(t) =>
       System.err.println(s"[lifecycle-fuzz] write failed: $t")
     }
     spark.stop()

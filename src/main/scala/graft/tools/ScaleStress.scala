@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted, SparkListenerTaskEnd}
 import java.util.concurrent.atomic.AtomicLong
 import graft.GraftSession
+import scala.util.control.NonFatal
 
 /** Scale-stress EVIDENCE for the capped-bucket claims (VERDICT r16 #6):
   * every 100 TB argument in SURVEY §2.6 is analytic — this harness makes
@@ -205,7 +206,7 @@ object ScaleStress {
       java.nio.file.Files.createDirectories(out.getParent)
       java.nio.file.Files.write(out,
         (line + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    } catch { case t: Throwable =>
+    } catch { case NonFatal(t) =>
       System.err.println(s"[scale-stress] write failed: $t")
     }
     spark.stop()

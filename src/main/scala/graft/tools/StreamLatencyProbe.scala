@@ -3,6 +3,7 @@ package graft.tools
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import graft.GraftSession
+import scala.util.control.NonFatal
 
 /** Per-micro-batch LATENCY evidence for the streaming serving family
   * (VERDICT r15 #5): the gates are bit-equal to their batch twins
@@ -224,7 +225,7 @@ object StreamLatencyProbe {
       java.nio.file.Files.createDirectories(out.getParent)
       java.nio.file.Files.write(out,
         (line + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    } catch { case t: Throwable =>
+    } catch { case NonFatal(t) =>
       System.err.println(s"[stream-latency] write failed: $t")
     }
     spark.stop()

@@ -27,7 +27,7 @@ class DerivedArtifactsSpec extends SparkSpec {
     assert(back.isDefined)
     assert(back.get.collect().map(r => (r.getLong(0), r.getString(1))).toSet ==
       (1 to 100).map(i => (i.toLong, s"v$i")).toSet)
-    // a regenerated input (new fileFingerprint) or a bumped build
+    // a regenerated input (new fileFingerprintDigest) or a bumped build
     // version must refuse to serve
     assert(IndexArtifacts.readDerived(spark, table, "fp2:v1").isEmpty)
     assert(IndexArtifacts.readDerived(spark, table, "fp1:v2").isEmpty)
@@ -282,6 +282,52 @@ class DerivedArtifactsSpec extends SparkSpec {
     val full = DedupQueries.shinglesOf(
       spark.read.parquet(docsPath)).collect().map(_.toSeq).toSet
     assert(appended == full)
+    assert(first.subsetOf(appended) && appended.size > first.size)
+    DedupQueries.releaseShingleIndex(spark)
+  }
+
+  test("a docs dir written by StreamingOps.writeParquet (_spark_metadata " +
+       "present from the first serve): a second AvailableNow run on the " +
+       "same checkpoint serves the raw shingle layer as APPEND == rebuild") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("mfstream").toString
+    val docsPath = s"$dir/documents.parquet"
+    val staging = s"$dir/staging"
+    val ckpt = s"$dir/ckpt"
+    def doc(i: Long) = (i, "src", (1 to 12).map(t => s"w${(i + t) % 7}")
+      .mkString(" "))
+    def land(ids: Seq[Long]): Unit =
+      ids.map(doc).toDF("doc_id", "source", "text")
+        .coalesce(1).write.mode("append").parquet(staging)
+    def run(): Unit = {
+      val in = spark.readStream
+        .schema("doc_id LONG, source STRING, text STRING").parquet(staging)
+      graft.streaming.StreamingOps.writeParquet(in, docsPath, ckpt)
+        .awaitTermination()
+    }
+    land(1L to 20L)
+    run()
+    assert(new java.io.File(s"$docsPath/_spark_metadata").isDirectory)
+    Tables.invalidate(spark, docsPath)
+    DedupQueries.releaseShingleIndex(spark)
+    val first = DedupQueries.uncappedShingleHashes(spark, dir)
+      .collect().map(_.toSeq).toSet
+    assert(DedupQueries.derivedSourceOf(spark, "shingle_raw") == "rebuild",
+      DedupQueries.derivedSourceOf(spark, "shingle_raw"))
+    // the second run picks up only the new staging file and commits its
+    // part beside the first run's; the serve reads it as growth
+    land(21L to 28L)
+    run()
+    Tables.invalidate(spark, docsPath)
+    DedupQueries.releaseShingleIndex(spark)
+    val appended = DedupQueries.uncappedShingleHashes(spark, dir)
+      .collect().map(_.toSeq).toSet
+    assert(DedupQueries.derivedSourceOf(spark, "shingle_raw") == "append",
+      DedupQueries.derivedSourceOf(spark, "shingle_raw"))
+    val grown = spark.read.parquet(docsPath)
+    assert(grown.count() == 28)
+    assert(appended == DedupQueries.shinglesOf(grown)
+      .collect().map(_.toSeq).toSet)
     assert(first.subsetOf(appended) && appended.size > first.size)
     DedupQueries.releaseShingleIndex(spark)
   }
