@@ -172,15 +172,7 @@ object Bench {
     * instead of a memo hit. The artifacts themselves stay — this releases
     * session state only, exactly what a fresh Bench JVM starts without. */
   private def releasePhaseState(spark: SparkSession, sfDir: String): Unit = {
-    operators.DedupQueries.releaseShingleIndex(spark) // + band sigs + hot set
-    operators.DedupQueries.releaseWinnowPicks(spark)
-    operators.DedupQueries.releaseTypoPairs(spark)
-    operators.DedupQueries.releaseGateModels(spark)
-    operators.TextQueries.releaseTokenLayer(spark)
-    operators.TextQueries.releaseTextModels(spark)
-    operators.EventTimeQueries.releaseFunnelLags(spark)
-    operators.SimilarityQueries.releaseTrainedModels(spark)
-    operators.StatsQueries.releaseQuartiles(spark)
+    api.SessionMemo.releaseAll(spark)
     // catalog registration + the memoized readers too (r19): without
     // these, a catalog_analyze re-measure hits registerParquet's
     // tableExists short-circuit and times a near-no-op (~0.1 s vs the

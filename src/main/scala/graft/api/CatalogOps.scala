@@ -171,10 +171,20 @@ object CatalogOps {
           scala.concurrent.ExecutionContext.fromExecutor(pool)
         names.map { n =>
           n -> scala.concurrent.Future {
-            (graft.Tables.t(s, dir, n).schema,
-             // digested fingerprint (r16 review): a same-size-same-mtime
-             // in-place rewrite must re-analyze, not restore stale stats
-             IndexArtifacts.fileFingerprintDigest(s"$dir/$n.parquet"))
+            // digested fingerprint (r16 review): a same-size-same-mtime
+            // in-place rewrite must re-analyze, not restore stale stats
+            val path = s"$dir/$n.parquet"
+            val fp = IndexArtifacts.fileFingerprintDigest(path)
+            // an observed REWRITE (a persisted fingerprint exists and no
+            // longer matches) releases the session's memoized reader
+            // snapshot AND the fixture-derived memos (centroid Seqs, the
+            // vec-0 query row — ADVICE r18) BEFORE the reader is warmed:
+            // the old snapshot would hand back the pre-rewrite schema
+            // and file listing. A merely-absent sidecar is the normal
+            // cold path and must not thrash warm state
+            if (persisted.get(n).exists(_._1 != fp))
+              graft.Tables.invalidate(s, path)
+            (graft.Tables.t(s, dir, n).schema, fp)
           }
         }.map { case (n, f) =>
           n -> scala.concurrent.Await.result(
@@ -194,14 +204,10 @@ object CatalogOps {
           restoreStats(s, t, size, rows)
           fresh(n) = (fp, size, rows)
         case None =>
-          // an observed REWRITE (a persisted fingerprint exists and no
-          // longer matches) releases the session's memoized reader
-          // snapshot AND the fixture-derived memos (centroid Seqs, the
-          // vec-0 query row — ADVICE r18) before the re-analyze; a
-          // merely-absent sidecar is the normal cold path and must not
-          // thrash warm state
-          if (persisted.contains(n))
-            graft.Tables.invalidate(s, s"$dir/$n.parquet")
+          // a table registered before the rewrite keeps its cached file
+          // listing (registerParquet never re-registers), so ANALYZE
+          // would scan deleted files: refresh it first
+          if (persisted.contains(n)) s.catalog.refreshTable(t)
           analyze(s, t)
           analyzed += 1
           val meta = s.sessionState.catalog.getTableMetadata(

@@ -26,8 +26,13 @@ import org.apache.spark.sql.SparkSession
   * because a group's variants are alternative fixture dirs, and only
   * one dir is ever live per session outside the bench-warmup handoff.
   * A double-unpersist in onEvict remains a harmless no-op.
+  *
+  * Every instance registers with the companion, so
+  * [[SessionMemo.releaseAll]] drops a session's entries from every memo
+  * that exists — no hand-kept list of per-module release hooks to drift.
   */
 final class SessionMemo[V <: AnyRef](onEvict: V => Unit = (_: V) => ()) {
+  SessionMemo.all.add(this)
 
   private val m =
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), V]()
@@ -67,6 +72,11 @@ final class SessionMemo[V <: AnyRef](onEvict: V => Unit = (_: V) => ()) {
     throw new IllegalStateException("unreachable")
   }
 
+  /** The resident entry for (s, group, variant), if any — never builds
+    * and never evicts (what a fill recorded, read without filling). */
+  def peek(s: SparkSession, group: String, variant: String): Option[V] =
+    Option(m.get((s, group, variant)))
+
   /** Drop every entry of `s` (optionally only `group`'s) — the
     * plan-inspection / artifact-round-trip escape hatch. Also prunes the
     * session's lock objects: the lock map strongly references its
@@ -101,4 +111,17 @@ final class SessionMemo[V <: AnyRef](onEvict: V => Unit = (_: V) => ()) {
                    !locks.containsKey((k._1, k._2)))
       .toSeq.foreach(k => Option(m.remove(k)).foreach(onEvict))
   }
+}
+
+object SessionMemo {
+  // weak: a memo that is no longer reachable holds nothing to release
+  private val all = java.util.Collections.synchronizedSet(
+    java.util.Collections.newSetFromMap(
+      new java.util.WeakHashMap[SessionMemo[_], java.lang.Boolean]()))
+
+  /** [[SessionMemo.release]] of `s` on every memo constructed so far. A
+    * module whose memos were never constructed (its object never
+    * initialized) has no entries to release. */
+  def releaseAll(s: SparkSession): Unit =
+    all.toArray(new Array[SessionMemo[_]](0)).foreach(_.release(s))
 }

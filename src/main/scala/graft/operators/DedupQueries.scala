@@ -240,118 +240,39 @@ object DedupQueries {
   // — the manifest-incremental family with append/shrink/compact — and
   // dead serve machinery drifts from the live semantics)
 
-  /** One memoized index entry. Each layer is built on FIRST ACCESS (lazy
-    * val — contention serializes per key, not globally), so the cache's
-    * monitor is held only for map bookkeeping, never across a multi-job
-    * build: one session's build can no longer stall every other session's
-    * dedup queries (or releaseShingleIndex). An entry evicted mid-build
-    * unpersists itself when the build completes (double-unpersist in the
-    * race is a harmless no-op).
+  /** The shingle index's memo layers — raw, capped, pairs, clusters —
+    * one group each, the fixture dir as the variant. Each build fetches
+    * the layer below it through this memo, so the group monitors are
+    * always taken clusters → pairs → capped → raw ([[bandSigTable]] and
+    * [[corpusRouteLabels]] hold their own and descend the same way): no
+    * two builds can wait on each other.
     */
-  private final class IndexHolder(mkRaw: () => DataFrame,
-                                  mkCapped: DataFrame => DataFrame,
-                                  mkPairs: DataFrame => DataFrame,
-                                  mkClusters: (DataFrame, DataFrame) => DataFrame) {
-    @volatile private var doomed = false
-    @volatile private var rawRef: DataFrame = null
-    @volatile private var builtRef: DataFrame = null
-    @volatile private var pairsRef: DataFrame = null
-    @volatile private var clustersRef: DataFrame = null
-    def doom(): Unit = {
-      doomed = true
-      Seq(rawRef, builtRef, pairsRef, clustersRef)
-        .foreach(df => if (df != null) df.unpersist(blocking = true))
-    }
-    /** UNCAPPED (doc_id, h) — the raw hashed-shingle pass, kept pinned as
-      * its own layer: q_text_contamination probes the benchmark's DISTINCT
-      * shingle set, so its per-row join fan-out is ≤ 1 by construction and
-      * it needs the uncapped universe (no hot-key risk to cap away).
-      * Sharing the layer removes the second interpreted shingle+md5 pass
-      * the round-5 bench paid (4.5 s rebuilt per call).
-      */
-    lazy val raw: DataFrame = {
-      val built = mkRaw()
-      rawRef = built
-      if (doomed) built.unpersist(blocking = true)
-      built
-    }
-    /** DfCap-capped index over [[raw]] — what every pair-enumerating dedup
-      * query joins on.
-      */
-    lazy val df: DataFrame = {
-      val built = mkCapped(raw)
-      builtRef = built
-      if (doomed) built.unpersist(blocking = true)
-      built
-    }
-    /** Shared-shingle pair counts (da < db, count) over [[df]] — the
-      * second memo layer: q_dedup_fuzzy and q_dedup_ngram both aggregate
-      * the identical inverted-index self-join, so the pair table is built
-      * once and reused (evicted together with the index).
-      */
-    lazy val pairs: DataFrame = {
-      val built = mkPairs(df)
-      pairsRef = built
-      if (doomed) built.unpersist(blocking = true)
-      built
-    }
-    /** Connected-component labels over the verified near-dup pairs — the
-      * third memo layer (built from [[pairs]], evicted with the index).
-      * Cached by construction: connectedComponents returns its final
-      * materialized round.
-      */
-    lazy val clusters: DataFrame = {
-      val built = mkClusters(df, pairs)
-      clustersRef = built
-      if (doomed) built.unpersist(blocking = true)
-      built
-    }
-  }
+  private val shingleMemo =
+    new graft.api.SessionMemo[DataFrame](_.unpersist(blocking = true))
 
-  private val shCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), IndexHolder]
-
-  /** The ONLY way to a holder: evict-then-computeIfAbsent under the map
-    * monitor, so every caller gets a tracked entry (a racing eviction
-    * dooms the entry, whose layers then self-unpersist on build
-    * completion — no untracked throwaway caches can leak).
+  /** DfCap-capped index over the raw layer — what every pair-enumerating
+    * dedup query joins on.
     */
-  private def holderFor(s: SparkSession, d: String): IndexHolder = {
-    // fast path: steady-state repeat access (every query of a Bench/Verify
-    // sweep after the first) — no eviction scan, no work under the monitor
-    // beyond the map read
-    val hit = shCache.get((s, d))
-    if (hit != null) return hit
-    shCache.synchronized {
-      // at most ONE pinned index per session: callers sweep dirs serially
-      // (Bench/Verify across scale factors), and keeping every dir's index
-      // cached for the session's life accumulates pinned storage without
-      // bound. Evict before building so the old index's blocks don't
-      // coexist with the new build.
-      import scala.jdk.CollectionConverters._
-      shCache.keySet.asScala.filter(k => k._1 == s && k._2 != d)
-        .toSeq.foreach(k => Option(shCache.remove(k)).foreach(_.doom()))
-      shCache.computeIfAbsent((s, d),
-        _ => new IndexHolder(() => buildRaw(s, d), raw => buildCapped(s, d, raw),
-                             sh => buildPairs(s, d, sh),
-                             (sh, p) => buildClusters(s, d, sh, p)))
-    }
-  }
-
-  // builds (if needed) run OUTSIDE the cache monitor (lazy vals)
   private[operators] def shingleHashes(s: SparkSession, d: String): DataFrame =
-    holderFor(s, d).df
+    shingleMemo.get(s, "capped", d)(
+      buildCapped(s, d, uncappedShingleHashes(s, d)))
 
-  /** Memoized UNCAPPED (doc_id, h) — shared with TextQueries'
-    * decontamination probe (same arithmetic as the dedup index before the
-    * DfCap anti-join).
+  /** Memoized UNCAPPED (doc_id, h) — the raw hashed-shingle pass, kept as
+    * its own layer: q_text_contamination probes the benchmark's DISTINCT
+    * shingle set, so its per-row join fan-out is ≤ 1 by construction and
+    * it needs the uncapped universe (no hot-key risk to cap away). Shared
+    * with TextQueries' decontamination probe (same arithmetic as the
+    * dedup index before the DfCap anti-join).
     */
   private[graft] def uncappedShingleHashes(s: SparkSession, d: String): DataFrame =
-    holderFor(s, d).raw
+    shingleMemo.get(s, "raw", d)(buildRaw(s, d))
 
-  /** Memoized (da, db, shared) counts for docs sharing ≥ 1 kept shingle. */
+  /** Memoized (da, db, shared) counts for docs sharing ≥ 1 kept shingle:
+    * q_dedup_fuzzy and q_dedup_ngram both aggregate the identical
+    * inverted-index self-join, so the pair table is built once and reused.
+    */
   private[graft] def sharedShinglePairs(s: SparkSession, d: String): DataFrame =
-    holderFor(s, d).pairs
+    shingleMemo.get(s, "pairs", d)(buildPairs(s, d, shingleHashes(s, d)))
 
   /** The ONE definition of the exact pair-level Jaccard (ppm floor):
     * |A∩B| / (|A| + |B| − |A∩B|) · 10⁶. Every verified-pair consumer
@@ -407,9 +328,15 @@ object DedupQueries {
         jacE6Col(col("shared"), col("spa.n"), col("spb.n")).as("jac_e6"))
   }
 
-  /** Memoized connected-component labels over the ≥0.8-Jaccard pair graph. */
+  /** Memoized connected-component labels over the ≥0.8-Jaccard pair graph
+    * (cached by construction: connectedComponents returns its final
+    * materialized round).
+    */
   private[graft] def clusterLabels(s: SparkSession, d: String): DataFrame =
-    holderFor(s, d).clusters
+    shingleMemo.get(s, "clusters", d) {
+      val pairs = sharedShinglePairs(s, d)
+      buildClusters(s, d, shingleHashes(s, d), pairs)
+    }
 
   /** q_dedup_winnow's pair tail over a raw winnow pick set (doc_id, h —
     * duplicates tolerated: the leading distinct collapses them): DfCap
@@ -477,7 +404,7 @@ object DedupQueries {
     new graft.api.SessionMemo[DataFrame](_.unpersist(blocking = false))
 
   /** Memoized SCORED winnow pairs (da, db, shared, jac_e6 — no
-    * threshold): the shingle holder's `pairs` layer for the winnow
+    * threshold): the shingle memo's `pairs` layer for the winnow
     * family. q_dedup_winnow is then a filter + sort over this table —
     * query-only cost — with the build attributed as the `winnow_pairs`
     * bench phase.
@@ -685,7 +612,7 @@ object DedupQueries {
     * the raw layer's per-doc-distinct rows, the capped layer's DfCap
     * bound, signature/pair/label uniqueness, the token layer's
     * (token, batch) key. Content and sidecar are untouched — the next
-    * serve still reads `artifact`. Session memos for the dir are
+    * serve still reads `artifact`. Every session memo of `s` is
     * released afterward: a cached frame pinned over the pre-compaction
     * file list must not lazily recompute against deleted files.
     * Returns (table, compacted?) per layer — false = skipped (absent,
@@ -732,12 +659,7 @@ object DedupQueries {
       s"g_drv_ivfpqidx_$slug" -> uniqueInvariant("vec_id"),
       s"g_drv_ivfpqidxfx_$slug" -> uniqueInvariant("vec_id"))
     val out = layers.map { case (t, inv) => (t, compactDerived(s, t, inv)) }
-    releaseShingleIndex(s)
-    releaseWinnowPicks(s)
-    TextQueries.releaseTokenLayer(s)
-    releaseTypoPairs(s)
-    EventTimeQueries.releaseFunnelLags(s)
-    SimilarityQueries.releaseIvfpqIndex(s)
+    graft.api.SessionMemo.releaseAll(s)
     out
   }
 
@@ -1027,7 +949,7 @@ object DedupQueries {
     * cached. The BUILD runs fanned out (shingles()
     * — the interpreted shingle transform + md5 is the one genuinely
     * CPU-bound pass, ~6× faster parallelized even on a tiny scan). This
-    * layer stays pinned for the holder's lifetime: it IS the uncapped
+    * layer stays pinned while its dir is the session's: it IS the uncapped
     * shingle universe the decontamination probe needs, and the capped
     * index derives from it with one aggregation instead of a second
     * md5-explode pass.
@@ -1193,21 +1115,19 @@ object DedupQueries {
     (promoted, dfTot)
   }
 
-  /** Drop this session's memoized shingle index(es) and their pinned
-    * storage — for long-lived sessions done with dedup work. Safe to call
-    * any time (even mid-build — the build self-unpersists on completion);
-    * the next dedup query rebuilds.
+  /** Drop this session's memoized shingle index layers and their pinned
+    * storage — for long-lived sessions done with dedup work. A release
+    * that meets a build in progress waits for it, then drops it; the next
+    * dedup query rebuilds.
     */
-  def releaseShingleIndex(s: SparkSession): Unit = shCache.synchronized {
-    import scala.jdk.CollectionConverters._
+  def releaseShingleIndex(s: SparkSession): Unit = {
     // the band-signature memo derives from this index — a release that
     // left it behind would serve signatures of the RELEASED index beside
     // freshly rebuilt pair tables (and leak its pinned cache)
     releaseBandSignatures(s)
     // the routing labels derive from the pair layer (same rationale)
-    releaseRouteLabels(s)
-    shCache.keySet.asScala.filter(_._1 == s)
-      .toSeq.foreach(k => Option(shCache.remove(k)).foreach(_.doom()))
+    routeLabelMemo.release(s)
+    shingleMemo.release(s)
   }
 
   /** Banded MinHash signatures (doc_id, sig) over a capped index: k
@@ -1453,12 +1373,6 @@ object DedupQueries {
     */
   private val bloomGateCache = new graft.api.SessionMemo[Array[Byte]]()
 
-  /** Release the memoized gate models (corpus Bloom bytes; the fuzzy
-    * hot set rides [[releaseBandSignatures]]) — the bench phase
-    * re-measure hook (r16). */
-  private[graft] def releaseGateModels(s: SparkSession): Unit =
-    bloomGateCache.release(s)
-
   private[graft] def corpusBloomBytes(s: SparkSession, d: String): Array[Byte] =
     bloomGateCache.get(s, "bloomgate", d) {
       // v2 = the digest-fingerprint migration (VERDICT r16 #3)
@@ -1677,15 +1591,11 @@ object DedupQueries {
 
   private[graft] def corpusRouteLabels(s: SparkSession, d: String): DataFrame =
     routeLabelMemo.get(s, "", d) {
-      val sh = shingleHashes(s, d)
       val corpusPairs = sharedShinglePairs(s, d)
         .filter(col("da") % 50 =!= 0 && col("db") % 50 =!= 0)
-      val edges = verifiedNearDupEdges(sh, corpusPairs)
+      val edges = verifiedNearDupEdges(shingleHashes(s, d), corpusPairs)
       graft.api.GraftOps.connectedComponents(edges, "da", "db")
     }
-
-  private[graft] def releaseRouteLabels(s: SparkSession): Unit =
-    routeLabelMemo.release(s)
 
   /** STREAMING cluster ROUTE (r16) — [[fuzzyAttachRows]] composed with
     * the corpus cluster table: each incoming doc's `route_doc` is the
@@ -2255,7 +2165,7 @@ object DedupQueries {
       // ([[winnowScoredPairs]], itself over the h-partitioned
       // [[winnowPickSet]] cache — both built once per (session, dir) and
       // attributed as the bench's `winnow_picks`/`winnow_pairs` phases,
-      // the shingle-holder layering), so the timed query is a filter +
+      // the shingle-memo layering), so the timed query is a filter +
       // sort over the cached pairs: query-only cost, the same posture as
       // q_dedup_ngram over the shingle memo. The uncached one-shot plan
       // (GraftOps.winnowPairs) keeps the h-repartition trick so BOTH

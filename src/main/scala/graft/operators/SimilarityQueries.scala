@@ -121,32 +121,25 @@ object SimilarityQueries {
     * rows), so memoizing the result frame skips retraining entirely.
     * Same immutable-fixture-dir convention as Tables' reader memo.
     */
-  private val modelCache = new graft.api.SessionMemo[DataFrame]()
+  private val modelCache = new graft.api.SessionMemo[ModelFill]()
 
-  /** How each memoized model was obtained — "artifact" (fingerprint-hit
-    * read of the persisted model) or "fit" (cold Lloyd's run) — so the
-    * bench artifact can say whether a train phase was artifact-warm
-    * (VERDICT r11 #5). Keyed like [[modelCache]]; absent = not built
-    * this session.
-    */
-  private val modelSource =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String),
-                                               String]()
+  /** One memoized model with what its fill observed: `source` is how it
+    * was obtained — "artifact" (fingerprint-hit read of the persisted
+    * model) or "fit" (cold Lloyd's run) — so the bench artifact can say
+    * whether a train phase was artifact-warm (VERDICT r11 #5). `epoch`
+    * is the model ARTIFACT's file-manifest epoch as observed at fill:
+    * downstream encoded-index tags read THIS, never a fresh disk stat,
+    * since the tag must describe the model frames the encode actually
+    * used. None = the artifact was absent at fill (unwritable warehouse)
+    * — the caller falls back to digesting the in-memory rows. Both live
+    * and die with the entry they describe. */
+  private final case class ModelFill(df: DataFrame, source: String,
+                                     epoch: Option[String])
 
   /** The recorded source for a (kind, dir) model this session, if any. */
   private[graft] def trainSource(s: SparkSession, kind: String,
                                  d: String): String =
-    Option(modelSource.get((s, kind, d))).getOrElse("unbuilt")
-
-  /** The model ARTIFACT's file-manifest epoch as observed when the
-    * session memo filled — keyed like [[modelCache]], cleared with it.
-    * Downstream encoded-index tags read THIS, never a fresh disk stat:
-    * the tag must describe the model frames the encode actually used.
-    * None = the artifact was absent at fill (unwritable warehouse) —
-    * the caller falls back to digesting the in-memory rows. */
-  private val modelEpochAtLoad =
-    new java.util.concurrent.ConcurrentHashMap[
-      (SparkSession, String, String), Option[String]]()
+    modelCache.peek(s, kind, d).fold("unbuilt")(_.source)
 
   /** Fingerprint-scheme version: folded into every model tag so the r17
     * migration from an undigested file-listing fingerprint to the
@@ -193,25 +186,20 @@ object SimilarityQueries {
       val preEpoch = graft.api.IndexArtifacts.modelArtifactEpoch(s, table)
       graft.api.IndexArtifacts
         .readModelFrozen(s, table, src, tag + ModelFpVersion) match {
-        case Some((m, how)) =>
-          modelSource.put((s, kind, d), how)
-          modelEpochAtLoad.put((s, kind, d), preEpoch)
-          m
+        case Some((m, how)) => ModelFill(m, how, preEpoch)
         case None =>
           val m = build
           graft.api.IndexArtifacts
             .persistModelFrozen(s, m, table, src, tag + ModelFpVersion)
-          modelSource.put((s, kind, d), "fit")
           // the fit branch must describe the files it JUST wrote, so it
           // re-stats after the persist. A foreign retrain inside that
           // window refits deterministically on the same corpus — frames
           // can only differ if the corpus changed, and a corpus change
           // also changes the index tag's own source fingerprint.
-          modelEpochAtLoad.put((s, kind, d),
+          ModelFill(m, "fit",
             graft.api.IndexArtifacts.modelArtifactEpoch(s, table))
-          m
       }
-    }
+    }.df
 
   /** Periodic retrain: drop the dir's persisted model artifacts and the
     * session memos, so the next access REFITS on the current corpus —
@@ -586,7 +574,7 @@ object SimilarityQueries {
   /** The "models unchanged" epoch component of the encoded-index tag —
     * by preference the model ARTIFACTS' file-manifest digest
     * ([[graft.api.IndexArtifacts.modelArtifactEpoch]]) as RECORDED when
-    * the session memo filled ([[modelEpochAtLoad]]): a driver-side
+    * the session memo filled ([[ModelFill]]`.epoch`): a driver-side
     * stat + bounded CRC that changes exactly at refit, so the per-serve
     * cost is zero Spark jobs where the r17 form collected the model
     * frames every session (VERDICT r17 #4 — the ~0.5 s/session floor
@@ -604,8 +592,7 @@ object SimilarityQueries {
   private def trainedModelEpoch(s: SparkSession, d: String,
                                 kinds: Seq[String],
                                 fallback: => Seq[DataFrame]): String = {
-    val eps = kinds.map(kind =>
-      modelEpochAtLoad.getOrDefault((s, kind, d), None))
+    val eps = kinds.map(kind => modelCache.peek(s, kind, d).flatMap(_.epoch))
     if (eps.forall(_.isDefined)) "fpe:" + eps.flatten.mkString("+")
     else "rows:" + modelRowsDigest(fallback: _*)
   }
@@ -716,9 +703,6 @@ object SimilarityQueries {
     modelCache.release(s)
     centroidSeqMemo.release(s) // plain driver Seqs — re-collected on next use
     qv0Memo.release(s)
-    // the at-load epochs describe the released frames — drop them so the
-    // next fill re-observes (a foreign refit then reads as a new epoch)
-    modelEpochAtLoad.keySet.removeIf(_._1 eq s)
     releaseIvfpqIndex(s)
   }
 

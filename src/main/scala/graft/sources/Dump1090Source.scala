@@ -11,8 +11,8 @@ import scala.util.control.NonFatal
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.connector.read.streaming.{CompositeReadLimit, MicroBatchStream, Offset,
-  ReadLimit, ReadMaxRows, ReadMinRows, ReportsSourceMetrics, SupportsTriggerAvailableNow}
+import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset,
+  ReadLimit, ReadMinRows, ReportsSourceMetrics, SupportsTriggerAvailableNow}
 import org.apache.spark.sql.GraftSqlBridge
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
@@ -61,10 +61,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * cores instead of one.
   *
   * Admission: a micro-batch starts as soon as one partition's worth of
-  * lines (`maxLinesPerPartition`, or `maxLinesPerTrigger` if smaller) is
-  * framed past the last issued offset, or [[Dump1090Source.MaxTriggerDelayMs]]
-  * after the previous `latestOffset` returned if at least one line is
-  * waiting (Spark's `ReadLimit.minRows`, the Kafka source's
+  * lines (`maxLinesPerPartition`) is framed past the last issued offset,
+  * or [[Dump1090Source.MaxTriggerDelayMs]] after the previous
+  * `latestOffset` returned if at least one line is waiting (Spark's
+  * `ReadLimit.minRows`, the Kafka source's
   * `minOffsetsPerTrigger`/`maxTriggerDelay` rule). `latestOffset` blocks
   * on the buffer's monitor until the rule holds, so run the query with a
   * 0 ms processing-time trigger: the stream thread then sleeps instead of
@@ -121,8 +121,6 @@ class Dump1090Table extends Table with SupportsRead {
             (options.getDouble("connectAttemptDelay", 5.14) * 1000).toLong,
           maxLinesPerPartition = options.getInt("maxLinesPerPartition", 5000),
           maxBufferedLines = options.getInt("maxBufferedLines", 1000000),
-          maxLinesPerTrigger =
-            Option(options.get("maxLinesPerTrigger")).map(_.toLong),
           // the per-source checkpoint slot Spark hands this stream — the
           // spill log lives inside it, so replayability travels with the
           // checkpoint (and dies with it, like the offset log)
@@ -140,7 +138,6 @@ class Dump1090MicroBatchStream(
     connectAttemptLimit: Int, connectAttemptDelayMs: Long,
     maxLinesPerPartition: Int = 5000,
     maxBufferedLines: Int = 1000000,
-    maxLinesPerTrigger: Option[Long] = None,
     spillDir: Option[String] = None)
   extends MicroBatchStream with SupportsTriggerAvailableNow with ReportsSourceMetrics {
 
@@ -417,22 +414,14 @@ class Dump1090MicroBatchStream(
     LineOffset(trimOffset + lines.length)
   }
 
-  /** Admission and rate limiting. `minRows`: a batch starts once a full
-    * partition of lines is framed, or [[Dump1090Source.MaxTriggerDelayMs]]
-    * after the previous range was issued with at least one line waiting
-    * (the minOffsetsPerTrigger/maxTriggerDelay analog). `maxRows`
-    * (maxLinesPerTrigger) bounds each micro-batch so a catch-up backlog
-    * drains in sized epochs instead of one giant batch (the
-    * maxOffsetsPerTrigger analog); a batch capped below a partition starts
-    * once the cap is framed.
+  /** Admission: a batch starts once a full partition of lines is
+    * framed, or [[Dump1090Source.MaxTriggerDelayMs]] after the previous
+    * range was issued with at least one line waiting (the
+    * minOffsetsPerTrigger/maxTriggerDelay analog). A batch takes every
+    * framed line; `maxLinesPerPartition` splits a large one across cores.
     */
-  override def getDefaultReadLimit: ReadLimit = {
-    val partition = maxLinesPerTrigger.fold(maxLinesPerPartition.toLong)(
-      math.min(_, maxLinesPerPartition.toLong))
-    val minRows = ReadLimit.minRows(partition, Dump1090Source.MaxTriggerDelayMs)
-    maxLinesPerTrigger.fold(minRows)(n =>
-      ReadLimit.compositeLimit(Array(minRows, ReadLimit.maxRows(n))))
-  }
+  override def getDefaultReadLimit: ReadLimit =
+    ReadLimit.minRows(maxLinesPerPartition.toLong, Dump1090Source.MaxTriggerDelayMs)
 
   /** Trigger.AvailableNow: serve what is framed now, then end the query. */
   override def prepareForTriggerAvailableNow(): Unit = lock.synchronized {
@@ -465,10 +454,6 @@ class Dump1090MicroBatchStream(
   override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
     checkFatal()
     val s = start.asInstanceOf[LineOffset].offset
-    val limits = limit match {
-      case c: CompositeReadLimit => c.getReadLimits.toSeq
-      case l => Seq(l)
-    }
     lock.synchronized {
       // a start offset this instance never issued is a previous
       // process's checkpoint with its replay state (spill log) gone —
@@ -490,14 +475,14 @@ class Dump1090MicroBatchStream(
         endQuery()
       } else if (availableNowEnd.isEmpty) {
         // the first call returns at once, so batch 0 is never delayed
-        for (since <- lastReturnNs; rule <- limits.collectFirst { case m: ReadMinRows => m })
-          awaitAdmission(s, rule, since)
+        limit match {
+          case rule: ReadMinRows => lastReturnNs.foreach(awaitAdmission(s, rule, _))
+          case _ => // allAvailable (Trigger.Once) never waits
+        }
       }
       checkFatal()
       val avail = availableNowEnd.getOrElse(trimOffset + lines.length)
-      val end = limits.collectFirst { case m: ReadMaxRows => m.maxRows() }
-        .fold(avail)(n => math.min(avail, s + n))
-      val out = math.max(end, s)
+      val out = math.max(avail, s)
       servedHighWater = math.max(servedHighWater, out)
       lock.notifyAll() // a reader parked on the bound may frame again
       lastReturnNs = Some(System.nanoTime())

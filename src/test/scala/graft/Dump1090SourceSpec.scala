@@ -205,32 +205,6 @@ class Dump1090SourceSpec extends SparkSpec {
     } finally server.close()
   }
 
-  test("maxLinesPerTrigger bounds each micro-batch (admission control)") {
-    import org.apache.spark.sql.connector.read.streaming.{CompositeReadLimit, ReadLimit}
-    val payload = lines.mkString("", "\n", "\n").getBytes(StandardCharsets.UTF_8)
-    val server = serve(payload, chunk = 512)
-    try {
-      val stream = new graft.sources.Dump1090MicroBatchStream(
-        "localhost", server.getLocalPort, 100,
-        connectAttemptLimit = 0, connectAttemptDelayMs = 50,
-        maxLinesPerTrigger = Some(10L))
-      // the cap rides inside the composite admission limit (minRows + maxRows)
-      assert(stream.getDefaultReadLimit.asInstanceOf[CompositeReadLimit]
-        .getReadLimits.contains(ReadLimit.maxRows(10)))
-      def latest() = stream.latestOffset()
-        .asInstanceOf[graft.sources.LineOffset].offset
-      val deadline = System.currentTimeMillis() + 10000
-      while (latest() < lines.length && System.currentTimeMillis() < deadline)
-        Thread.sleep(50)
-      // a 50-line backlog drains in capped epochs, not one giant batch
-      assert(stream.latestOffset(graft.sources.LineOffset(0),
-        ReadLimit.maxRows(10)) == graft.sources.LineOffset(10))
-      assert(stream.latestOffset(graft.sources.LineOffset(10),
-        ReadLimit.maxRows(10)) == graft.sources.LineOffset(20))
-      stream.stop()
-    } finally server.close()
-  }
-
   test("offsets from a previous process fail fast instead of serving wrong data") {
     val dead = { val s = new ServerSocket(0); val p = s.getLocalPort; s.close(); p }
     val stream = new graft.sources.Dump1090MicroBatchStream(
@@ -555,8 +529,7 @@ class Dump1090SourceSpec extends SparkSpec {
       // Trigger.AvailableNow: the framed-now target, even under a 60 s rule
       feed.send(lines.slice(5, 8))
       stream.asInstanceOf[SupportsTriggerAvailableNow].prepareForTriggerAvailableNow()
-      val rule = ReadLimit.compositeLimit(Array(ReadLimit.minRows(20, 60000),
-        ReadLimit.maxRows(100)))
+      val rule = ReadLimit.minRows(20, 60000)
       val (o2, t2) = timed(stream.latestOffset(o1, rule))
       assert(t2 < 10000, s"AvailableNow waited $t2 ms")
       val (o3, t3) = timed(stream.latestOffset(o2, rule))

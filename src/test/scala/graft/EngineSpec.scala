@@ -609,6 +609,43 @@ class EngineSpec extends SparkSpec {
     assert(co.registerFixtureTagged(spark, sf)._2 == "stats")
   }
 
+  test("an in-place rewrite of a registered fixture table re-analyzes " +
+       "the NEW files: stats and table reads see the new row count") {
+    val co = graft.api.CatalogOps
+    import org.apache.commons.io.FileUtils
+    import java.io.File
+    val dir = java.nio.file.Files.createTempDirectory("catrewrite").toFile
+    FileUtils.copyDirectory(new File(sf), dir)
+    val d = dir.getPath
+    val t = co.fixtureTableName(d, "documents")
+    try {
+      co.registerFixture(spark, d) // cold: analyze + persist the sidecar
+      val before = spark.table(t).count()
+      // rewrite documents.parquet in place with fewer rows: new part
+      // files, the old file deleted
+      val side = s"$d/documents_new.parquet"
+      spark.read.parquet(s"$d/documents.parquet")
+        .filter(col("doc_id") % 2 === 0).write.parquet(side)
+      val after = spark.read.parquet(side).count()
+      assert(after > 0 && after < before, s"$after vs $before")
+      // the fixture table is one file; forceDelete takes a file or a dir
+      FileUtils.forceDelete(new File(s"$d/documents.parquet"))
+      FileUtils.moveDirectory(new File(side), new File(s"$d/documents.parquet"))
+      val (_, tag) = co.registerFixtureTagged(spark, d)
+      assert(tag == "analyze", tag)
+      assert(co.statsRowCount(spark, t).contains(after),
+        s"${co.statsRowCount(spark, t)} vs $after")
+      assert(spark.table(t).count() == after)
+    } finally {
+      co.releaseFixture(spark, d)
+      Tables.invalidate(spark, s"$d/documents.parquet")
+      FileUtils.deleteDirectory(dir)
+      val wh = spark.conf.get("spark.sql.warehouse.dir")
+        .stripPrefix("file:").stripSuffix("/")
+      FileUtils.deleteDirectory(new File(s"$wh/g_stats_${co.fixtureSlug(d)}"))
+    }
+  }
+
   test("q_dedup_bloom with catalog stats: ZERO pre-scan jobs at query " +
        "construction (sketch geometry reads the metastore scalar)") {
     val sc = spark.sparkContext

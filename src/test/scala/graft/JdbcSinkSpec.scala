@@ -352,7 +352,7 @@ class JdbcSinkSpec extends SparkSpec {
     val url = Dump1090StreamParser.jdbcUrl(":memory:")
     val appId = TransactionalJdbcSink.appIdFor(ckpt)
     val opts = Map("connectAttemptLimit" -> "0", "connectAttemptDelay" -> "0.1",
-                   "maxLinesPerTrigger" -> "10")
+                   "maxLinesPerPartition" -> "10")
     try {
       // run 1: "crash" — the sink function throws on whichever epoch
       // carries the LAST line (so every line is framed and spilled by
